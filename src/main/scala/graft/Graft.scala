@@ -950,13 +950,11 @@ object Graft {
 
   // ── persisted ANN index stores (the FAISS-analog serving tier) ──
   // Build once, query many; incremental add against frozen quantizers;
-  // remove_ids tombstones + purge. Every method dispatches on the
-  // store's marker, so one facade serves both tiers: IVF (raw vectors,
-  // exact cosines over probed cells) and IVF-PQ (m codes per vector,
-  // ~32× smaller, ADC scoring — the billion-vector recipe).
-
-  private def isPqStore(spark: SparkSession, store: String): Boolean =
-    graft.ops.IvfPqIndex.isPqStore(spark, store)
+  // remove_ids tombstones + purge. Every method resolves the store's
+  // codec through the cell-store registry (graft.ops.CellStore), so
+  // one facade serves both tiers: IVF (raw vectors, exact cosines over
+  // probed cells) and IVF-PQ (m codes per vector, ~32× smaller, ADC
+  // scoring — the billion-vector recipe).
 
   /** Build a persisted ANN index over `(idCol, vecCol)`:
     * `compressed = false` → [[graft.ops.IvfIndex]] (raw vectors);
@@ -979,18 +977,18 @@ object Graft {
     * probed cells' partitions are read (plan-asserted pruning). */
   def queryAnnIndex(spark: SparkSession, store: String, queries: DataFrame,
                     k: Int, nprobe: Int = 4): DataFrame =
-    if (isPqStore(spark, store))
-      graft.ops.IvfPqIndex.query(spark, store, queries, k, nprobe)
-    else graft.ops.IvfIndex.query(spark, store, queries, k, nprobe)
+    graft.ops.CellStore(spark, store) match {
+      case graft.ops.IvfPqIndex =>
+        graft.ops.IvfPqIndex.query(spark, store, queries, k, nprobe)
+      case _ => graft.ops.IvfIndex.query(spark, store, queries, k, nprobe)
+    }
 
   /** Incremental add against the store's FROZEN quantizers (FAISS
     * `add`), with the per-call cell compaction counter-force. The
     * streaming form is [[graft.streaming.StreamingIngest.annIngestSink]]. */
   def addToAnnIndex(spark: SparkSession, store: String, vectors: DataFrame,
                     maxFilesPerCell: Int = 8): Unit =
-    if (isPqStore(spark, store))
-      graft.ops.IvfPqIndex.add(spark, store, vectors, maxFilesPerCell)
-    else graft.ops.IvfIndex.add(spark, store, vectors, maxFilesPerCell)
+    graft.ops.CellStore(spark, store).add(spark, store, vectors, maxFilesPerCell)
 
   /** Two-stage serving: ADC candidates from a PQ code store + exact
     * cosine re-rank over `corpusRaw` (wherever the raw vectors live)
@@ -1000,27 +998,28 @@ object Graft {
   def queryAnnIndexRefined(spark: SparkSession, store: String,
                            corpusRaw: DataFrame, queries: DataFrame, k: Int,
                            kCandidates: Int = 20, nprobe: Int = 4): DataFrame =
-    if (isPqStore(spark, store))
-      graft.ops.IvfPqIndex.queryRefined(spark, store, corpusRaw, queries, k,
-        kCandidates, nprobe)
-    else graft.ops.IvfIndex.query(spark, store, queries, k, nprobe)
+    graft.ops.CellStore(spark, store) match {
+      case graft.ops.IvfPqIndex => graft.ops.IvfPqIndex.queryRefined(spark, store,
+        corpusRaw, queries, k, kCandidates, nprobe)
+      case _ => graft.ops.IvfIndex.query(spark, store, queries, k, nprobe)
+    }
 
   /** Delete by id (FAISS `remove_ids`): O(batch) tombstones, deleted
     * ids never surface from queries; [[purgeAnnDeletes]] reclaims.
-    * Same cells/ layout both tiers ([[graft.ops.IvfIndex.removeIds]]). */
+    * The shared cell-store protocol ([[graft.ops.CellStore.removeIds]]). */
   def removeFromAnnIndex(spark: SparkSession, store: String, ids: DataFrame): Unit =
-    graft.ops.IvfIndex.removeIds(spark, store, ids)
+    graft.ops.CellStore(spark, store).removeIds(spark, store, ids)
 
   /** Physically reclaim tombstoned vectors/codes (rewrites exactly the
     * touched cells, then clears the tombstones). */
   def purgeAnnDeletes(spark: SparkSession, store: String): Int =
-    graft.ops.IvfIndex.purgeDeletes(spark, store)
+    graft.ops.CellStore(spark, store).purgeDeletes(spark, store)
 
   /** Fold over-budget cell partitions (tombstoned rows drop during the
     * rewrite); steady-state I/O ∝ recently-grown cells. */
   def compactAnnIndex(spark: SparkSession, store: String,
                       maxFilesPerCell: Int = 8): Int =
-    graft.ops.IvfIndex.compact(spark, store, maxFilesPerCell)
+    graft.ops.CellStore(spark, store).compact(spark, store, maxFilesPerCell)
 
   /** FILTERED search (FAISS `IDSelector` / Solr `{!knn}` + fq): the
     * caller's metadata predicate, evaluated to an id frame, restricts
@@ -1028,9 +1027,11 @@ object Graft {
   def queryAnnIndexFiltered(spark: SparkSession, store: String,
                             queries: DataFrame, k: Int, allowed: DataFrame,
                             nprobe: Int = 4): DataFrame =
-    if (isPqStore(spark, store))
-      graft.ops.IvfPqIndex.queryFiltered(spark, store, queries, k, allowed, nprobe)
-    else graft.ops.IvfIndex.queryFiltered(spark, store, queries, k, allowed, nprobe)
+    graft.ops.CellStore(spark, store) match {
+      case graft.ops.IvfPqIndex =>
+        graft.ops.IvfPqIndex.queryFiltered(spark, store, queries, k, allowed, nprobe)
+      case _ => graft.ops.IvfIndex.queryFiltered(spark, store, queries, k, allowed, nprobe)
+    }
 
   /** Two-stage serving from the store alone — requires
     * `buildAnnIndex(compressed = true, refineStore = true)`'s raw-vector
@@ -1062,8 +1063,10 @@ object Graft {
     * the swap; tombstones fold in. PQ stores require the raw-vector
     * refine sidecar (codes are lossy). Returns the new generation. */
   def retrainAnnIndex(spark: SparkSession, store: String): Int =
-    if (isPqStore(spark, store)) graft.ops.IvfPqIndex.retrain(spark, store)
-    else graft.ops.IvfIndex.retrain(spark, store)
+    graft.ops.CellStore(spark, store) match {
+      case graft.ops.IvfPqIndex => graft.ops.IvfPqIndex.retrain(spark, store)
+      case _ => graft.ops.IvfIndex.retrain(spark, store)
+    }
 
   /** Drop superseded retrain generations (complete stores below the
     * newest), keeping `retain` for in-flight readers — disk stays
@@ -1071,7 +1074,7 @@ object Graft {
     * layout, so one call serves either store. */
   def reclaimAnnGenerations(spark: SparkSession, store: String,
                             retain: Int = 1): Int =
-    graft.ops.IvfIndex.reclaimGenerations(spark, store, retain)
+    graft.ops.CellStore(spark, store).reclaimGenerations(spark, store, retain)
 
   /** Sharded deterministic-build HNSW (Solr 9's `{!knn}` architecture:
     * one graph per shard, scatter-gather merge) — the recall-at-low-
@@ -1231,18 +1234,18 @@ object Graft {
   /** BUCKETED binary ANN store (FAISS IndexBinaryIVF): codes cluster
     * into coarse cells under a md5-seeded k-majority binary quantizer;
     * queries probe nprobe cells only — the 100 TB serving form of the
-    * binary tier (see [[graft.ops.BinaryQuant.buildIvfStore]]). */
+    * binary tier (see [[graft.ops.BinaryIvfIndex]]). */
   def buildBinaryIvfIndex(corpus: DataFrame, out: String, dim: Int,
                           nlist: Int = 8): Unit =
-    graft.ops.BinaryQuant.buildIvfStore(corpus, out, dim, nlist)
+    graft.ops.BinaryIvfIndex.build(corpus, out, dim, nlist)
 
   /** Serve from the bucketed binary store: partition-pruned probe
     * scan + candidate-bounded exact re-rank. */
   def queryBinaryIvfIndex(spark: SparkSession, store: String,
                           queries: DataFrame, corpus: DataFrame, k: Int,
                           rerank: Int, nprobe: Int = 4): DataFrame =
-    graft.ops.BinaryQuant.queryIvfStore(spark, store, queries, corpus, k,
-      rerank, nprobe)
+    graft.ops.BinaryIvfIndex.query(spark, store, queries, corpus, k, rerank,
+      nprobe)
 
   /** Filtered search on the bucketed binary store (IDSelector):
     * `allowed`'s first column restricts candidates after probe
@@ -1251,24 +1254,24 @@ object Graft {
                                   queries: DataFrame, corpus: DataFrame,
                                   k: Int, rerank: Int, allowed: DataFrame,
                                   nprobe: Int = 4): DataFrame =
-    graft.ops.BinaryQuant.queryIvfStoreFiltered(spark, store, queries,
-      corpus, k, rerank, allowed, nprobe)
+    graft.ops.BinaryIvfIndex.queryFiltered(spark, store, queries, corpus, k,
+      rerank, allowed, nprobe)
 
   /** Frozen-quantizer add on the bucketed binary store (FAISS
     * IndexBinaryIVF.add — appends to touched cells only). */
   def addToBinaryIvfIndex(spark: SparkSession, store: String,
                           vectors: DataFrame): Unit =
-    graft.ops.BinaryQuant.addToIvfStore(spark, store, vectors)
+    graft.ops.BinaryIvfIndex.add(spark, store, vectors)
 
   /** Tombstone deletes on the bucketed binary store (remove_ids). */
   def removeFromBinaryIvfIndex(spark: SparkSession, store: String,
                                ids: DataFrame): Unit =
-    graft.ops.BinaryQuant.removeIdsFromIvfStore(spark, store, ids)
+    graft.ops.BinaryIvfIndex.removeIds(spark, store, ids)
 
   /** Physically reclaim tombstoned binary codes; returns cells
     * purged. */
   def purgeBinaryIvfDeletes(spark: SparkSession, store: String): Int =
-    graft.ops.BinaryQuant.purgeIvfDeletes(spark, store)
+    graft.ops.BinaryIvfIndex.purgeDeletes(spark, store)
 
   /** Build the persisted INT8 (SQ8) ANN store — FAISS
     * IndexIVFScalarQuantizer: coarse k-means cells + frozen per-dim
@@ -1342,9 +1345,9 @@ object Graft {
 
   /** PIN an IVF / IVF-PQ store's current generation (file-set
     * snapshot + tombstones; purge/compact defer while pinned — see
-    * [[graft.ops.IvfIndex.pinGeneration]]). */
+    * [[graft.ops.CellStore.pinGeneration]]). */
   def pinIvfGeneration(spark: SparkSession, store: String): Int =
-    graft.ops.IvfIndex.pinGeneration(spark, store)
+    graft.ops.CellStore(spark, store).pinGeneration(spark, store)
 
   /** Query a pinned IVF snapshot (raw-vector cells). */
   def queryIvfPinned(spark: SparkSession, store: String, token: Int,
@@ -1361,7 +1364,7 @@ object Graft {
   /** Release an IVF / IVF-PQ pin. */
   def releaseIvfGeneration(spark: SparkSession, store: String,
                            token: Int): Unit =
-    graft.ops.IvfIndex.releaseGeneration(spark, store, token)
+    graft.ops.CellStore(spark, store).releaseGeneration(spark, store, token)
 
   // ----- round 17 ---------------------------------------------------
 
@@ -1429,7 +1432,7 @@ object Graft {
   /** PIN the bucketed binary store's current state. Release with
     * [[releaseIvfGeneration]]. */
   def pinBinaryIvfGeneration(spark: SparkSession, store: String): Int =
-    graft.ops.BinaryQuant.pinIvfGeneration(spark, store)
+    graft.ops.BinaryIvfIndex.pinGeneration(spark, store)
 
   /** Query a pinned binary-IVF snapshot (the exact re-rank reads the
     * caller's pin-time corpus frame — the code store holds no raw
@@ -1438,8 +1441,8 @@ object Graft {
                            token: Int, queries: DataFrame,
                            corpus: DataFrame, k: Int, rerank: Int,
                            nprobe: Int = 4): DataFrame =
-    graft.ops.BinaryQuant.queryIvfStorePinned(spark, store, token,
-      queries, corpus, k, rerank, nprobe)
+    graft.ops.BinaryIvfIndex.queryPinned(spark, store, token, queries,
+      corpus, k, rerank, nprobe)
 
   /** SQ8 quantization-drift probe — the retrain trigger on the int8
     * tier (see [[graft.ops.Sq8Index.assignmentDrift]]). */

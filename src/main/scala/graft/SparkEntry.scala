@@ -1726,11 +1726,11 @@ object SparkEntry {
     // replays in DuckDB.
     "q321_binary_ivf" -> ((s, d) => {
       val out = sharedStore(d, "bq_ivf") { o =>
-        graft.ops.BinaryQuant.buildIvfStore(Tables.embeddings(s, d), o,
+        graft.ops.BinaryIvfIndex.build(Tables.embeddings(s, d), o,
           dim = 64, nlist = 8)
       }
       val emb = Tables.embeddings(s, d)
-      graft.ops.BinaryQuant.queryIvfStore(s, out,
+      graft.ops.BinaryIvfIndex.query(s, out,
         emb.filter(col("vec_id") < 10), emb, k = 5, rerank = 32, nprobe = 4)
     }),
 
@@ -1743,13 +1743,13 @@ object SparkEntry {
     "q325_binary_ivf_add" -> ((s, d) => {
       val out = sharedStore(d, "bq_ivf_add") { o =>
         val emb = Tables.embeddings(s, d)
-        graft.ops.BinaryQuant.buildIvfStore(
+        graft.ops.BinaryIvfIndex.build(
           emb.filter(col("vec_id") % 2 === 0), o, dim = 64, nlist = 8)
-        graft.ops.BinaryQuant.addToIvfStore(s, o,
+        graft.ops.BinaryIvfIndex.add(s, o,
           emb.filter(col("vec_id") % 2 === 1))
       }
       val emb = Tables.embeddings(s, d)
-      graft.ops.BinaryQuant.queryIvfStore(s, out,
+      graft.ops.BinaryIvfIndex.query(s, out,
         emb.filter(col("vec_id") < 10), emb, k = 5, rerank = 32, nprobe = 4)
     }),
 
@@ -1759,12 +1759,12 @@ object SparkEntry {
     // exactly that position.
     "q326_binary_ivf_filtered" -> ((s, d) => {
       val out = sharedStore(d, "bq_ivf") { o =>
-        graft.ops.BinaryQuant.buildIvfStore(Tables.embeddings(s, d), o,
+        graft.ops.BinaryIvfIndex.build(Tables.embeddings(s, d), o,
           dim = 64, nlist = 8)
       }
       val emb = Tables.embeddings(s, d)
       val allowed = emb.filter(col("vec_id") % 3 === 0).select("vec_id")
-      graft.ops.BinaryQuant.queryIvfStoreFiltered(s, out,
+      graft.ops.BinaryIvfIndex.queryFiltered(s, out,
         emb.filter(col("vec_id") < 10), emb, k = 5, rerank = 32,
         allowed = allowed, nprobe = 4)
     }),

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /**
@@ -17,80 +18,55 @@ import org.apache.spark.sql.SparkSession
  * bit-for-bit the pin-time answers — Lucene's snapshot-based backup
  * shape (`SnapshotDeletionPolicy` + copy-the-commit-point).
  *
- * Scope: the cells/codes-layout tiers — IVF, IVF-PQ (+refine
- * sidecar), SQ8, binary IVF, MRL — whose pins are file-list
- * snapshots. (The HNSW tier's pin is a generation CEILING over
- * whole immutable generation dirs; its backup is a plain recursive
- * copy of dirs ≤ the ceiling — no manifest machinery needed — and
- * stays out of scope here.) The destination is a NEW store identity:
- * streamed-batch replay markers deliberately do not copy (a replayed
- * batch id belongs to the source's stream history, not the
+ * Scope: the [[CellStore]] tiers — IVF, IVF-PQ (+refine sidecar),
+ * SQ8, binary IVF, MRL — whose pins are file-list snapshots; the
+ * registry resolves the codec, and any other path (an HNSW store,
+ * whose pins share the `_pin_N`/`.pin_N` names but not the layout) is
+ * refused before it is touched. The destination is a NEW store
+ * identity: streamed-batch replay markers deliberately do not copy (a
+ * replayed batch id belongs to the source's stream history, not the
  * backup's).
  */
 object AnnBackup {
-
-  private val QuantizerDirs = Seq("centroids", "scalar", "codebooks")
-  private val Markers = Seq("_ivf_marker.json", "_ivfpq_marker.json",
-    "_sq8_marker.json", "_bqivf_marker.json", "_mrl_marker.json")
 
   /** Pin the store, copy the pin manifest to `dest`, release.
     * Returns the number of data files copied. `dest` must not
     * exist. */
   def backup(spark: SparkSession, store: String, dest: String): Int = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(conf)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(dest)),
-      s"backup destination $dest already exists")
-    // tier-dispatched pin (the marker probes — IVF/IVF-PQ share the
-    // cells layout and IvfIndex.pinGeneration)
-    val tok =
-      if (Sq8Index.isSq8Store(spark, store))
-        Sq8Index.pinGeneration(spark, store)
-      else if (MrlIndex.isMrlStore(spark, store))
-        MrlIndex.pinGeneration(spark, store)
-      else if (BinaryQuant.isBinaryIvfStore(spark, store))
-        BinaryQuant.pinIvfGeneration(spark, store)
-      else IvfIndex.pinGeneration(spark, store)
-    try copyPinned(spark, store, tok, dest)
-    finally IvfIndex.releaseGeneration(spark, store, tok)
+    val codec = CellStore(spark, store)
+    val fs = new Path(store).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(!fs.exists(new Path(dest)), s"backup destination $dest already exists")
+    val tok = codec.pinGeneration(spark, store)
+    try copyPinned(spark, codec, store, tok, dest)
+    finally codec.releaseGeneration(spark, store, tok)
   }
 
   /** The copy body: everything the pin addresses, nothing else. */
-  private def copyPinned(spark: SparkSession, store: String, tok: Int,
-                         dest: String): Int = {
+  private def copyPinned(spark: SparkSession, codec: CellStore, store: String,
+                         tok: Int, dest: String): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(conf)
-    val root = IvfIndex.pinnedRootOf(store, tok)
+    val fs = new Path(store).getFileSystem(conf)
+    val root = codec.pinnedRootOf(store, tok)
     def cp(src: String, dst: String): Unit = {
-      val s = new org.apache.hadoop.fs.Path(src)
-      val d = new org.apache.hadoop.fs.Path(dst)
+      val d = new Path(dst)
       fs.mkdirs(d.getParent)
-      require(org.apache.hadoop.fs.FileUtil.copy(fs, s, fs, d, false, conf),
+      require(org.apache.hadoop.fs.FileUtil.copy(fs, new Path(src), fs, d, false, conf),
         s"backup copy failed: $src")
     }
-    // quantizers (write-once per generation) + the tier marker —
-    // markers live at the generation root for the IVF/IVF-PQ family,
-    // at the store top for the flat-layout tiers; check both
-    (QuantizerDirs.map(q => s"$root/$q") ++
-      Markers.flatMap(m => Seq(s"$root/$m", s"$store/$m")).distinct)
-      .foreach { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        if (fs.exists(hp)) {
-          val dst = s"$dest/${hp.getName}"
-          if (!fs.exists(new org.apache.hadoop.fs.Path(dst))) cp(p, dst)
-        }
-      }
+    // quantizers (write-once per generation) + the marker, from the
+    // pinned generation's root to the backup's top
+    (codec.quantizerDirs :+ codec.markerFile)
+      .filter(n => fs.exists(new Path(s"$root/$n")))
+      .foreach(n => cp(s"$root/$n", s"$dest/$n"))
     // the pin's tombstone snapshot becomes the backup's live deletes
-    val pinDeletes = new org.apache.hadoop.fs.Path(s"$store/.pin_$tok/deletes")
-    if (fs.exists(pinDeletes)) cp(pinDeletes.toString, s"$dest/deletes")
+    val pinDir = s"$store/.pin_$tok"
+    if (fs.exists(new Path(s"$pinDir/deletes"))) cp(s"$pinDir/deletes", s"$dest/deletes")
     // the pinned data files, subdir by subdir (the manifest lists)
     var copied = 0
-    val pinDir = new org.apache.hadoop.fs.Path(s"$store/.pin_$tok")
-    fs.listStatus(pinDir).filter(_.isFile).foreach { st =>
+    fs.listStatus(new Path(pinDir)).filter(_.isFile).foreach { st =>
       val listName = st.getPath.getName
       if (listName == "files" || listName.startsWith("files_")) {
-        val sub = if (listName == "files") "cells"
-          else listName.stripPrefix("files_")
+        val sub = if (listName == "files") "cells" else listName.stripPrefix("files_")
         graft.util.FsIo.readSmallFile(conf, st.getPath.toString)
           .split("\n").filter(_.nonEmpty).foreach { rel =>
             cp(s"$root/$sub/$rel", s"$dest/$sub/$rel")

@@ -101,24 +101,14 @@ object BinaryQuant {
     corpus.select(col(idCol).cast("long").as("corpus_id"),
         packSigns(col(vecCol).cast("array<double>"), dim).as("code"))
       .write.mode("overwrite").parquet(s"$out/codes")
-    val mk = s"""{"dim":$dim,"idCol":"$idCol","vecCol":"$vecCol"}"""
-    val p = new org.apache.hadoop.fs.Path(markerPath(out))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(mk.getBytes("UTF-8")) finally os.close()
+    graft.util.FsIo.writeSmallFile(spark.sparkContext.hadoopConfiguration,
+      markerPath(out),
+      CellMarker.of("dim" -> dim, "idCol" -> idCol, "vecCol" -> vecCol).json)
   }
 
-  private def readMarkerText(spark: SparkSession, path: String): String =
-    graft.util.FsIo.readSmallFile(
-      spark.sparkContext.hadoopConfiguration, path)
-
-  private def markerNum(txt: String, k: String): Long =
-    s""""$k":(-?\\d+)""".r.findFirstMatchIn(txt).get.group(1).toLong
-  private def markerStr(txt: String, k: String): String =
-    (s""""$k":"([^"]*)"""").r.findFirstMatchIn(txt).get.group(1)
-
   /** The candidate-bounded exact-cosine re-rank shared by the flat
-    * and bucketed store read paths (and the SQ8 tier — [[Sq8Index]]):
+    * store and the codes-only cell stores ([[BinaryIvfIndex]],
+    * [[Sq8Index]]):
     * raw vectors for the collected (query, candidate) pairs alone,
     * fetched from the external corpus under a candidate-id pushdown —
     * an `In` literal up to `pushLimit` ids, a plan-side broadcast
@@ -127,7 +117,6 @@ object BinaryQuant {
                           corpus: DataFrame, q: DataFrame, k: Int,
                           idCol: String, vecCol: String,
                           pushLimit: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val candRows = cand.collect().map(r => (r.getLong(0), r.getLong(1)))
     val candIds = candRows.map(_._2).distinct
     val c = corpus.select(col(idCol).cast("long").as("corpus_id"),
@@ -147,10 +136,7 @@ object BinaryQuant {
       .withColumn("cosine",
         Similarity.dot(col("qvec"), col("cvec")) /
           (Similarity.norm(col("qvec")) * Similarity.norm(col("cvec"))))
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    rer.withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
+    CellStore.cut(rer, "cosine", desc = true, k)
       .select(col("query_id"), col("rank"), col("corpus_id"))
   }
 
@@ -166,9 +152,9 @@ object BinaryQuant {
                  queries: DataFrame, corpus: DataFrame, k: Int,
                  rerank: Int, pushLimit: Int = 4096): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val txt = readMarkerText(spark, markerPath(out))
-    val dim = markerNum(txt, "dim").toInt
-    val idCol = markerStr(txt, "idCol"); val vecCol = markerStr(txt, "vecCol")
+    val m = CellMarker.parse(graft.util.FsIo.readSmallFile(
+      spark.sparkContext.hadoopConfiguration, markerPath(out)))
+    val (dim, idCol, vecCol) = (m.dim, m.idCol, m.vecCol)
     val codes = spark.read.parquet(s"$out/codes")
     val q = queries.select(col(idCol).cast("long").as("query_id"),
         col(vecCol).cast("array<double>").as("qvec"))
@@ -183,398 +169,4 @@ object BinaryQuant {
       .select("query_id", "corpus_id")
     rerankExact(spark, cand, corpus, q, k, idCol, vecCol, pushLimit)
   }
-
-  // ----- bucketed binary IVF (FAISS IndexBinaryIVF) -----------------
-
-  private def ivfMarkerPath(out: String) = s"$out/_bqivf_marker.json"
-
-  /** Is `out` a bucketed binary store? (tier dispatch). */
-  private[graft] def isBinaryIvfStore(spark: SparkSession,
-                                      out: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(ivfMarkerPath(out))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** In-memory Hamming between two packed codes. */
-  private def hammingWords(a: Seq[Long], b: Seq[Long]): Int = {
-    var s = 0
-    var i = 0
-    while (i < a.length) {
-      s += java.lang.Long.bitCount(a(i) ^ b(i))
-      i += 1
-    }
-    s
-  }
-
-  /** md5("<seed>:<id>") hex — the engine's seeded-randomization
-    * primitive (O1/O2), the same keying the IVF k-means oracle
-    * replays with DuckDB's md5(). */
-  private def md5Key(seed: Long, id: Long): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(s"$seed:$id".getBytes("UTF-8"))
-      .map(b => f"$b%02x").mkString
-  }
-
-  /** Train the BINARY coarse quantizer (the bit-space analog of the
-    * family's md5-seeded ordered-sample Lloyd): seeds = the first
-    * `nlist` sample codes in (md5("<seed>:<id>"), id) order, one
-    * k-MAJORITY round — each sample code joins its (Hamming, i)-
-    * nearest seed, then every centroid bit becomes the majority vote
-    * of its cluster (ties to 1: `2·ones >= n`), empty clusters carry
-    * their seed. Returns the packed centroid codes, index = cell id.
-    * Pure integer throughout — the DuckDB oracle replays it exactly. */
-  private[ops] def trainBinaryCentroids(sample: Seq[(Long, Seq[Long])],
-                                        nlist: Int, seed: Long,
-                                        words: Int): Array[Array[Long]] = {
-    val seeds = sample
-      .sortBy { case (id, _) => (md5Key(seed, id), id.toString) }
-      .take(nlist).map(_._2.toArray).toArray
-    val eff = seeds.length
-    // assign each sample code to its (Hamming, i)-nearest seed
-    val assigned = Array.fill(eff)(
-      scala.collection.mutable.ArrayBuffer.empty[Array[Long]])
-    sample.foreach { case (_, code) =>
-      val c = code.toArray
-      var best = 0
-      var bestH = Int.MaxValue
-      var i = 0
-      while (i < eff) {
-        val h = hammingWords(c, seeds(i))
-        if (h < bestH) { bestH = h; best = i }
-        i += 1
-      }
-      assigned(best) += c
-    }
-    // k-majority vote per centroid bit; empty clusters carry the seed
-    Array.tabulate(eff) { i =>
-      val cluster = assigned(i)
-      if (cluster.isEmpty) seeds(i)
-      else Array.tabulate(words) { w =>
-        var word = 0L
-        var b = 0
-        while (b < 32) {
-          val mask = 1L << (31 - b)
-          var ones = 0
-          cluster.foreach(c => if ((c(w) & mask) != 0L) ones += 1)
-          val bit = if (2 * ones >= cluster.length) 1L else 0L
-          word = word * 2L + bit
-          b += 1
-        }
-        word
-      }
-    }
-  }
-
-  /** The (Hamming, i)-nearest centroid of a packed `code` column —
-    * the bit-space assignment kernel (ties to the lowest index via
-    * array_position's first match). */
-  private def nearestCell(code: Column,
-                          centroids: Array[Array[Long]]): Column = {
-    val hams = array(centroids.map(c =>
-      hamming(code, typedlit(c.toSeq))): _*)
-    (array_position(hams, array_min(hams)) - 1).cast("int")
-  }
-
-  /** Per-query probe list: the `nprobe` (Hamming, i)-nearest centroid
-    * indices of `qcode` — the IVF probe ranking in bit space. */
-  private def probeCells(qcode: Column, centroids: Array[Array[Long]],
-                         nprobe: Int): Column = {
-    val eff = centroids.length
-    val hams = array(centroids.map(c =>
-      hamming(qcode, typedlit(c.toSeq))): _*)
-    slice(transform(
-      array_sort(zip_with(hams, sequence(lit(0), lit(eff - 1)),
-        (d, i) => struct(d.as("d"), i.as("i")))),
-      x => x.getField("i")), 1, math.min(nprobe, eff))
-  }
-
-  /**
-   * BUCKETED binary ANN store — FAISS `IndexBinaryIVF`: the flat
-   * tier's ([[buildStore]]) Hamming stage scans every code per query
-   * batch, which is the right flat-tier semantics but the wrong
-   * serving shape at 10⁹+ vectors. Here the packed codes cluster into
-   * `nlist` coarse cells under a BINARY quantizer trained on the
-   * md5-seeded ordered sample (k-majority/bit-vote — see
-   * [[trainBinaryCentroids]]), the code store persists
-   * `partitionBy(cell)`, and a query probes its `nprobe` nearest
-   * cells ONLY: the Hamming scan term drops from |corpus| to the
-   * probed mass, partition-pruned at planning exactly like
-   * [[IvfIndex]] (plan-locked in BinaryQuantSpec). Re-rank stays the
-   * candidate-bounded exact-cosine fetch. Pure integer end-to-end
-   * until the final cosine, so the whole pipeline — training
-   * included — replays in DuckDB (q321).
-   */
-  def buildIvfStore(corpus: DataFrame, out: String, dim: Int,
-                    nlist: Int = 8, sampleSize: Int = 2048,
-                    seed: Long = 42L, idCol: String = "vec_id",
-                    vecCol: String = "embedding"): Unit = {
-    val spark = corpus.sparkSession
-    val words = (dim + 31) / 32
-    val codes = corpus.select(col(idCol).cast("long").as("corpus_id"),
-      packSigns(col(vecCol).cast("array<double>"), dim).as("code"))
-    // ordered sample (the trainCentroids discipline: reproducible
-    // across partitionings and retries; bounded driver memory)
-    val sample = codes.orderBy(col("corpus_id")).limit(sampleSize)
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
-    val centroids = trainBinaryCentroids(sample, nlist, seed, words)
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("i", "code").coalesce(1)
-      .write.mode("overwrite").parquet(s"$out/centroids")
-    codes.withColumn("cell", nearestCell(col("code"), centroids))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$out/codes")
-    val mk = s"""{"dim":$dim,"eff":${centroids.length},"seed":$seed,""" +
-      s""""idCol":"$idCol","vecCol":"$vecCol"}"""
-    val p = new org.apache.hadoop.fs.Path(ivfMarkerPath(out))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(mk.getBytes("UTF-8")) finally os.close()
-  }
-
-  /** Serve from the bucketed store: per query the `nprobe` nearest
-    * cells are probed, the probed set is collected (bounded by
-    * |Q|·nprobe) and pushed as a partition filter — non-probed
-    * inverted lists never open — then Hamming ranks INSIDE the probed
-    * mass and the exact-cosine re-rank fetches candidates only.
-    * Output (query_id, rank, corpus_id), the family shape. */
-  def queryIvfStore(spark: SparkSession, out: String, queries: DataFrame,
-                    corpus: DataFrame, k: Int, rerank: Int,
-                    nprobe: Int = 4, pushLimit: Int = 4096): DataFrame =
-    queryIvfStore(spark, out, queries, corpus, k, rerank, nprobe,
-      pushLimit, allowed = None)
-
-  /** As [[queryIvfStore]] with the family's FILTERED-SEARCH selector
-    * (FAISS `IDSelector`): `allowed`'s first column is the id set
-    * ranking restricts to — a semi-join applied AFTER probe pruning,
-    * so its left side is the probed mass only (Catalyst broadcasts
-    * the set when it fits). */
-  def queryIvfStoreFiltered(spark: SparkSession, out: String,
-                            queries: DataFrame, corpus: DataFrame, k: Int,
-                            rerank: Int, allowed: DataFrame,
-                            nprobe: Int = 4,
-                            pushLimit: Int = 4096): DataFrame =
-    queryIvfStore(spark, out, queries, corpus, k, rerank, nprobe,
-      pushLimit, Some(allowed))
-
-  private def queryIvfStore(spark: SparkSession, out: String,
-                            queries: DataFrame, corpus: DataFrame, k: Int,
-                            rerank: Int, nprobe: Int, pushLimit: Int,
-                            allowed: Option[DataFrame]): DataFrame = {
-    val txt = readMarkerText(spark, ivfMarkerPath(out))
-    val dim = markerNum(txt, "dim").toInt
-    val idCol = markerStr(txt, "idCol"); val vecCol = markerStr(txt, "vecCol")
-    // localized: probe collect free, both broadcast builds job-less (r18)
-    val q0 = Similarity.localized(
-      queries.select(col(idCol).cast("long").as("query_id"),
-          col(vecCol).cast("array<double>").as("qvec"))
-        .withColumn("qcode", packSigns(col("qvec"), dim)))
-    val cand = ivfCandidates(spark, out, q0, rerank, nprobe, allowed)
-    rerankExact(spark, cand, corpus, q0, k, idCol, vecCol, pushLimit)
-  }
-
-  /** The Hamming candidate stage of the bucketed store — the frame
-    * whose PLAN carries the probed-cell partition filter
-    * (plan-locked in BinaryQuantSpec; the re-rank above collects it,
-    * so the pruning proof lives on this handle). `q0` carries
-    * (query_id, qcode). Tombstones anti-join out, the allowed set
-    * semi-joins in — both AFTER probe pruning. */
-  private[ops] def ivfCandidates(spark: SparkSession, out: String,
-                                 q0: DataFrame, rerank: Int, nprobe: Int,
-                                 allowed: Option[DataFrame] = None): DataFrame =
-    ivfCandidatesFrom(spark, out, q0, rerank, nprobe, allowed,
-      probed => spark.read.parquet(s"$out/codes")
-        .filter(col("cell").isin(probed.map(Int.box).toIndexedSeq: _*)),
-      cf => ivfDeletes(spark, out) match {
-        case Some(d) =>
-          // count off the marker cache — no count() job on the hot path
-          AnnTombstones.check(spark, "binary-ivf", out,
-            AnnTombstones.countOf(spark, out)(d.count()))
-          cf.join(broadcast(d.select("corpus_id")),
-            Seq("corpus_id"), "left_anti")
-        case None => cf
-      })
-
-  /** The candidate body with the codes source and tombstone view
-    * pluggable — live reads above, the pinned file set + pin-time
-    * tombstone snapshot in [[queryIvfStorePinned]]. */
-  private def ivfCandidatesFrom(spark: SparkSession, out: String,
-                                q0: DataFrame, rerank: Int, nprobe: Int,
-                                allowed: Option[DataFrame],
-                                codesOf: Array[Int] => DataFrame,
-                                tombAnti: DataFrame => DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // driver-side parquet read (r18): nlist rows, zero Spark jobs —
-    // the serving paths are driver-job-count bound (guide §5)
-    val centroids = graft.util.SmallParquet
-      .rows(spark.sparkContext.hadoopConfiguration, s"$out/centroids")
-      .sortBy(_.int("i")).map(_.longArray("code")).toArray
-    // driver-side probes over the collected (broadcast-small) query
-    // batch (r18; see IvfIndex.queryInternal) — pure-integer Hamming,
-    // exactly [[hammingWords]], with the (distance, index) tie-break
-    // of the expression form
-    val qRows = q0.collect()
-    val qcodeIdx = q0.schema.fieldIndex("qcode")
-    val probesPer = qRows.map { r =>
-      val raw = if (r.isNullAt(qcodeIdx)) null else r.getSeq[Any](qcodeIdx)
-      if (raw == null || raw.exists(_ == null) ||
-          (centroids.nonEmpty && raw.length != centroids(0).length))
-        Array.empty[Int]
-      else {
-        val c = raw.map(_.asInstanceOf[Long]).toArray
-        Similarity.probeOrderLocal(
-          centroids.map(ct => hammingWords(c, ct).toDouble), nprobe)
-      }
-    }
-    val q = spark.createDataFrame(
-      java.util.Arrays.asList(qRows.zip(probesPer).flatMap { case (r, cs) =>
-        cs.map(cc => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ cc))
-      }: _*),
-      q0.schema.add("cell",
-        org.apache.spark.sql.types.IntegerType, nullable = false))
-    val probed = probesPer.flatten.distinct
-    val codes1 = tombAnti(codesOf(probed))
-    val codes = allowed match {
-      case Some(a) => codes1.join(
-        a.select(col(a.columns.head).cast("long").as("corpus_id")),
-        Seq("corpus_id"), "left_semi")
-      case None => codes1
-    }
-    val scored = codes
-      .join(broadcast(q.select("query_id", "qcode", "cell")), Seq("cell"))
-      .filter(col("query_id") =!= col("corpus_id"))
-      .withColumn("hamming", hamming(col("qcode"), col("code")))
-      // collapse duplicate corpus rows (a re-[[addToIvfStore]]ed id, or
-      // an id whose copies land in two probed cells) to the pair's best
-      // Hamming BEFORE the cut — a duplicate must never occupy a
-      // candidate slot a distinct neighbor should hold; map-side
-      // combinable, probed-mass-sized
-      .groupBy(col("query_id"), col("corpus_id"))
-      .agg(min(col("hamming")).as("hamming"))
-    val w1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming").asc, col("corpus_id").asc)
-    scored.withColumn("hrank", row_number().over(w1))
-      .filter(col("hrank") <= rerank)
-      .select("query_id", "corpus_id")
-  }
-
-  /** PIN the bucketed binary store's current state (round 17 —
-    * [[IvfIndex.pinGeneration]]'s file-list shape over `codes/`:
-    * the binary quantizer is write-once, adds append NEW files, so
-    * the recorded file set + the tombstone snapshot is the complete
-    * pin; [[purgeIvfDeletes]] DEFERS while the pin lives). Returns
-    * the snapshot token. Release with [[IvfIndex.releaseGeneration]]. */
-  def pinIvfGeneration(spark: SparkSession, out: String): Int = {
-    recoverIvfStore(spark, out)
-    IvfIndex.pinSubdirs(spark, out, Seq("codes"))
-  }
-
-  /** Query a PINNED snapshot of the bucketed binary store: exactly
-    * the file set and tombstone view of pin time — bit-for-bit
-    * pin-time answers whatever add/remove/purge landed since
-    * (spec-locked; an AnnLifecycleProps fuzz op). */
-  def queryIvfStorePinned(spark: SparkSession, out: String, token: Int,
-                          queries: DataFrame, corpus: DataFrame, k: Int,
-                          rerank: Int, nprobe: Int = 4,
-                          pushLimit: Int = 4096,
-                          allowed: Option[DataFrame] = None): DataFrame = {
-    IvfIndex.requirePin(spark, out, token)
-    val txt = readMarkerText(spark, ivfMarkerPath(out))
-    val dim = markerNum(txt, "dim").toInt
-    val idCol = markerStr(txt, "idCol"); val vecCol = markerStr(txt, "vecCol")
-    val q0 = Similarity.localized(
-      queries.select(col(idCol).cast("long").as("query_id"),
-          col(vecCol).cast("array<double>").as("qvec"))
-        .withColumn("qcode", packSigns(col("qvec"), dim)))
-    val cand = ivfCandidatesFrom(spark, out, q0, rerank, nprobe, allowed,
-      probed => IvfIndex.pinnedSubdirFrame(spark, out, token, "codes")
-        .filter(col("cell").isin(probed.map(Int.box).toIndexedSeq: _*)),
-      IvfIndex.pinnedTombAnti(spark, out, token))
-    rerankExact(spark, cand, corpus, q0, k, idCol, vecCol, pushLimit)
-  }
-
-  /** Incremental add against the FROZEN binary quantizer (FAISS
-    * `IndexBinaryIVF.add`): pack, assign to the trained centroids,
-    * append to the touched cell partitions only — existing cells'
-    * files never rewrite, old answers never change (the [[IvfIndex]]
-    * add contract in bit space). APPEND-ONLY FOR UNIQUE IDS, unlike
-    * [[HnswIndex.add]]'s upsert: a rewrite-the-old-copy protocol here
-    * would open a crash window where an id's only live copy sits
-    * between the drop and the append (the old code can live in a
-    * DIFFERENT cell than the re-quantized new one, so no single-cell
-    * swap covers both) — instead a re-added id's duplicate rows are
-    * collapsed at READ time ([[ivfCandidates]] keeps each (query,
-    * corpus) pair's best-Hamming copy before the candidate cut), so a
-    * duplicate can never occupy a top-k slot a DISTINCT neighbor
-    * should hold. To truly replace an id's vector: [[
-    * removeIdsFromIvfStore]] + [[purgeIvfDeletes]] + add, or rebuild
-    * ([[buildIvfStore]]) — the documented binary-tier lifecycle.
-    * Retrain-on-drift stays the raw tiers' machinery. */
-  def addToIvfStore(spark: SparkSession, out: String,
-                    vectors: DataFrame): Unit = {
-    recoverIvfStore(spark, out)
-    val txt = readMarkerText(spark, ivfMarkerPath(out))
-    val dim = markerNum(txt, "dim").toInt
-    val idCol = markerStr(txt, "idCol"); val vecCol = markerStr(txt, "vecCol")
-    // driver-side parquet read (r18): nlist rows, zero Spark jobs
-    val centroids = graft.util.SmallParquet
-      .rows(spark.sparkContext.hadoopConfiguration, s"$out/centroids")
-      .sortBy(_.int("i")).map(_.longArray("code")).toArray
-    vectors.select(col(idCol).cast("long").as("corpus_id"),
-        packSigns(col(vecCol).cast("array<double>"), dim).as("code"))
-      .withColumn("cell", nearestCell(col("code"), centroids))
-      .write.mode("append").partitionBy("cell").parquet(s"$out/codes")
-  }
-
-  private def ivfDeletesPath(out: String) = s"$out/deletes"
-
-  private def ivfDeletes(spark: SparkSession,
-                         out: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(ivfDeletesPath(out))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
-
-  /** Tombstone deletes on the bucketed store (FAISS `remove_ids`):
-    * O(batch) appends; queries anti-join the set; [[purgeIvfDeletes]]
-    * reclaims. `ids`' FIRST column is the id. The row count folds into
-    * the [[AnnTombstones]] marker cache at delete time so the query
-    * paths never run a count job. */
-  def removeIdsFromIvfStore(spark: SparkSession, out: String,
-                            ids: DataFrame): Unit = {
-    ids.select(col(ids.columns.head).cast("long").as("corpus_id"))
-      .filter(col("corpus_id").isNotNull).distinct()
-      .coalesce(1).write.mode("append").parquet(ivfDeletesPath(out))
-    AnnTombstones.recordRemoval(spark, out,
-      spark.read.parquet(ivfDeletesPath(out)).count())
-  }
-
-  /** Physically reclaim tombstoned codes: the [[IvfIndex.purgeSubdir]]
-    * machinery over `codes/` (one batched read-filter-write, per-cell
-    * aside-then-rename swaps), then clear the tombstones. Returns
-    * cells purged. */
-  def purgeIvfDeletes(spark: SparkSession, out: String): Int = {
-    recoverIvfStore(spark, out)
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a pin addresses the very files this rewrite would delete —
-    // DEFER (deletes stay logically applied via the anti-join)
-    if (IvfIndex.pins(fs, out).contains(IvfIndex.generation(fs, out)))
-      return 0
-    val dels = ivfDeletes(spark, out).getOrElse(return 0)
-    val purged = IvfIndex.purgeSubdir(spark, fs, out, "codes", dels,
-      targetFileBytes = 256L << 20)
-    fs.delete(new org.apache.hadoop.fs.Path(ivfDeletesPath(out)), true)
-    AnnTombstones.clearCount(spark, out)
-    purged
-  }
-
-  /** Complete (or discard) a swap a crashed [[purgeIvfDeletes]] left
-    * behind — the ONE shared implementation of the swap-recovery
-    * rules ([[IvfIndex.recoverSubdirSwap]]) applied to `codes/`;
-    * runs at every mutation entry. */
-  private[ops] def recoverIvfStore(spark: SparkSession, out: String): Unit =
-    IvfIndex.recoverSubdirSwap(
-      new org.apache.hadoop.fs.Path(out)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      out, "codes")
 }

@@ -808,7 +808,7 @@ object HnswIndex {
     * automatically past 64 live markers per stream. */
   def compactBatchMarkers(spark: SparkSession, out: String,
                           streamId: String = ""): Int = {
-    val key = IvfIndex.streamKey(streamId)
+    val key = CellStore.streamKey(streamId)
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     ensureSeqCounter(fs, out)
@@ -993,7 +993,7 @@ object HnswIndex {
                     batchId: Long, streamId: String = "",
                     foldThreshold: Long = 100000L): Boolean = {
     val mk = readMarker(spark, out)
-    val key = IvfIndex.streamKey(streamId)
+    val key = CellStore.streamKey(streamId)
     val marker = new org.apache.hadoop.fs.Path(
       s"$out/_hnsw_batch_$key$batchId")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -19,103 +19,37 @@ import org.apache.spark.sql.functions._
  *  - `_ivf_marker.json` — dim/nlist/seed/column config.
  *
  * A query batch probes its `nprobe` nearest cells and reads ONLY
- * those cells' directories — the probed cell set is collected from
- * the (broadcast-small by contract) query side and pushed as a
- * partition filter, so scan I/O is ∝ probed mass, not corpus size
- * (`IvfIndexSpec` asserts the partition pruning on the plan).
- * Incremental adds assign against the FROZEN centroids and append to
- * the touched cell partitions only — the standard IVF contract (the
- * coarse quantizer is fixed after training; FAISS's `add` does the
- * same), so existing cell contents and query answers for old vectors
- * never change.
+ * those cells' directories — the probed cell set comes from the
+ * driver-side probe of the (broadcast-small by contract) query batch
+ * and is pushed as a partition filter, so scan I/O is ∝ probed mass,
+ * not corpus size (`IvfIndexSpec` asserts the partition pruning on
+ * the plan). Incremental adds assign against the FROZEN centroids.
  *
- * Deletes ([[removeIds]] — FAISS `remove_ids` analog, via the segment
- * store's tombstone precedent rather than FAISS's eager rewrite): a
- * delete batch appends ids to `deletes/`; every query anti-joins the
- * tombstone set so deleted ids never surface, and reclaim is
- * deferred — [[compact]] drops tombstoned rows from any cell it
- * rewrites, and [[purgeDeletes]] rewrites exactly the touched cells
- * and then clears the tombstones. This keeps a continuously-deduping/
- * redacting corpus pipeline's ANN index consistent without a rebuild.
- * Contract note: a tombstoned id stays dead — including rows `add`ed
- * AFTER the delete — until [[purgeDeletes]] runs; to re-add an id,
- * purge first (FAISS's eager remove has no such window; ours trades
- * it for O(batch) deletes).
+ * This object is the raw-vector CODEC; the whole store lifecycle —
+ * adds, streamed batches, tombstone deletes and purge, compaction,
+ * retrain generations, pins — is the shared [[CellStore]].
  */
-object IvfIndex {
+object IvfIndex extends CellStore("_ivf_marker.json", "ivf",
+    subdirs = Seq("cells"), quantizerDirs = Seq("centroids")) {
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+  type Quantizer = Array[Array[Double]]
 
-  private def deletesPath(out: String) = s"$out/deletes"
+  protected def loadQuantizer(conf: org.apache.hadoop.conf.Configuration,
+                              root: String, m: CellMarker): Quantizer =
+    CellStore.centroidsAt(conf, root)
 
-  /** Current GENERATION of the store: max N over `_gen_N` marker files
-    * at the store root; 0 = the build-time layout (data dirs directly
-    * under `out`). The commit protocol is the segment store's
-    * `segments_N` precedent ([[graft.index.SegmentIndex]]): a
-    * [[retrain]] writes the complete new generation under `out/gN/`
-    * and the single `_gen_N` file creation IS the atomic swap —
-    * readers that resolved before it keep serving the old generation's
-    * dirs untouched; readers after it see only the new one. */
-  private[ops] def generation(fs: org.apache.hadoop.fs.FileSystem,
-                              out: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(out)
-    if (!fs.exists(p)) 0
-    else fs.listStatus(p).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("_gen_"))
-      .map(n => scala.util.Try(n.stripPrefix("_gen_").toInt).getOrElse(0))
-      .foldLeft(0)(math.max)
+  protected def probeCol = "qvec"
+
+  protected def probeCells(c: Quantizer, nprobe: Int) = CellStore.cosineProbe(c, nprobe)
+
+  protected def encode(vectors: DataFrame, m: CellMarker,
+                       centroids: Quantizer): Seq[(String, DataFrame)] = {
+    val (_, nearest) = Similarity.cellFns(centroids, m.dim)
+    Seq("cells" -> vectors.select(col(m.idCol).as("corpus_id"),
+        col(m.vecCol).cast("array<double>").as("cvec"))
+      .withColumn("cnorm", Similarity.norm(col("cvec")))
+      .withColumn("cell", nearest(col("cvec"))))
   }
-
-  /** Root of the CURRENT generation's data dirs (centroids/cells/
-    * vectors/codebooks and their swap tmp dirs). Batch markers and the
-    * tombstone set stay at the store root: a streamed batch committed
-    * before a retrain is already folded into the new generation, so
-    * its replay must STILL be a no-op. */
-  private[ops] def dataRoot(spark: SparkSession, out: String): String = {
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val g = generation(fs, out)
-    if (g == 0) out else s"$out/g$g"
-  }
-
-  /** Drop SUPERSEDED retrain generations (round 14, the disk-growth
-    * close): a generation here is a COMPLETE store, so every `gN`
-    * below the current one is fully shadowed the moment its successor
-    * commits — only an in-flight reader that resolved before the swap
-    * can still be scanning it. Keep the newest `retain` committed
-    * generations (that reader window), delete the rest — marker
-    * first, so a crash between the two deletes leaves an orphaned,
-    * never-again-resolved dir. The build-time layout (gen 0, data
-    * dirs at the store root) is never reclaimed — bounded residue of
-    * one generation, same contract as the HNSW tier. Serves both
-    * tiers ([[IvfPqIndex]] shares this store layout). Returns
-    * generations removed. */
-  def reclaimGenerations(spark: SparkSession, out: String,
-                         retain: Int = 1): Int = {
-    require(retain >= 1, "the current generation cannot be reclaimed")
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(out)
-    if (!fs.exists(p)) return 0
-    val gens = fs.listStatus(p).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("_gen_"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("_gen_").toInt).toOption)
-      .toSeq.sorted
-    // a PINNED generation serves a live snapshot token — spared until
-    // releaseGeneration (the SegmentIndex retention contract)
-    val pinned = pins(fs, out)
-    val removed = gens.dropRight(retain).filterNot(pinned)
-    removed.foreach { g =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$out/_gen_$g"), false)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$out/g$g"), true)
-    }
-    removed.size
-  }
-
-  private def markerPath(root: String) = s"$root/_ivf_marker.json"
-
-  final case class Marker(dim: Int, eff: Int, seed: Long,
-                          idCol: String, vecCol: String)
 
   /** Train on the corpus (ordered sample, md5-seeded Lloyd — identical
     * to the batch operator's training) and persist centroids + cell
@@ -126,384 +60,52 @@ object IvfIndex {
             idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
     writeGeneration(corpus, out, dim, nlist, sampleSize, seed, idCol, vecCol)
 
-  /** One complete generation's data dirs + marker under `root` — the
-    * build body, shared by [[build]] (root = store root, gen 0) and
-    * [[retrain]] (root = the next `gN/` dir, committed afterwards). */
+  /** One complete generation under `root` — [[build]] (the store
+    * root, gen 0) and [[retrain]] (the next `gN/`). */
   private def writeGeneration(corpus: DataFrame, root: String, dim: Int,
                               nlist: Int, sampleSize: Int, seed: Long,
                               idCol: String, vecCol: String): Unit = {
-    val spark = corpus.sparkSession
     val centroids = Similarity.trainCentroids(corpus, nlist, sampleSize, seed,
       idCol, vecCol)
-    val (_, nearest) = Similarity.cellFns(centroids, dim)
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("i", "c").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/centroids")
-    corpus.select(col(idCol).as("corpus_id"),
-        col(vecCol).cast("array<double>").as("cvec"))
-      .withColumn("cnorm", Similarity.norm(col("cvec")))
-      .withColumn("cell", nearest(col("cvec")))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$root/cells")
-    val m = s"""{"dim":$dim,"eff":${centroids.length},"seed":$seed,""" +
-      s""""idCol":"$idCol","vecCol":"$vecCol"}"""
-    val p = new org.apache.hadoop.fs.Path(markerPath(root))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(m.getBytes("UTF-8")) finally os.close()
+    CellStore.writeCentroids(corpus.sparkSession, root, centroids)
+    val m = CellMarker.of("dim" -> dim, "eff" -> centroids.length,
+      "seed" -> seed, "idCol" -> idCol, "vecCol" -> vecCol)
+    commitStore(root, m, encode(corpus, m, centroids))
   }
 
-  /** RETRAIN — the operator [[assignmentDrift]]'s signal calls for
-    * (the frozen-add contract is explicitly "retrain when drifted";
-    * FAISS leaves it to the user, a 100 TB pipeline needs it in the
-    * engine): re-run the SAME md5-seeded ordered-sample Lloyd protocol
-    * over the CURRENT live corpus (store + adds − deletes), re-assign
-    * every vector, and write the result as a NEW generation under
-    * `out/gN/`, committed by one `_gen_N` file creation — the
-    * `segments_N` atomic-swap precedent. Old-generation dirs are never
-    * touched: a query that resolved its paths before the commit keeps
-    * serving the old centroids/cells to completion. Tombstones fold in
-    * (the new generation is purged by construction) and the tombstone
-    * dir clears AFTER the commit; committed stream-batch markers stay,
-    * so a replayed old batch is still a no-op against the new
-    * generation. Retraining over the live corpus with the same
-    * protocol is bit-identical to `build` over that corpus — q309
-    * hash-locks retrain-then-query ≡ build-from-scratch-then-query on
-    * one oracle. Returns the new generation number. */
+  /** RETRAIN — the operator [[assignmentDrift]]'s signal calls for:
+    * re-run the SAME md5-seeded ordered-sample Lloyd protocol over the
+    * CURRENT live corpus (store + adds − deletes), re-assign every
+    * vector, and commit the result as a new generation (the shared
+    * retrain commit — old-generation readers keep serving to
+    * completion, tombstones fold in and clear). Bit-identical to
+    * `build` over that corpus — q309 hash-locks retrain-then-query ≡
+    * build-from-scratch-then-query. Returns the new generation. */
   def retrain(spark: SparkSession, out: String, nlist: Int = 0,
-              sampleSize: Int = 2048): Int = {
-    recoverStore(spark, out)
-    val m = readMarker(spark, out)
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val g = generation(fs, out)
-    val root = dataRoot(spark, out)
-    val corpus = exceptDeleted(spark, out, spark.read.parquet(s"$root/cells"))
-      .select(col("corpus_id").as(m.idCol), col("cvec").as(m.vecCol))
-    val newRoot = s"$out/g${g + 1}"
-    fs.delete(new org.apache.hadoop.fs.Path(newRoot), true) // crashed attempt
-    writeGeneration(corpus, newRoot, m.dim,
-      if (nlist > 0) nlist else m.eff, sampleSize, m.seed, m.idCol, m.vecCol)
-    fs.create(new org.apache.hadoop.fs.Path(s"$out/_gen_${g + 1}"), true).close()
-    fs.delete(new org.apache.hadoop.fs.Path(deletesPath(out)), true)
-    AnnTombstones.clearCount(spark, out)
-    g + 1
-  }
-
-  private[ops] def readMarker(spark: SparkSession, out: String): Marker = {
-    val txt = graft.util.FsIo.readSmallFile(
-      spark.sparkContext.hadoopConfiguration,
-      markerPath(dataRoot(spark, out)))
-    def num(k: String) = s""""$k":(-?\\d+)""".r.findFirstMatchIn(txt).get.group(1)
-    def str(k: String) = (s""""$k":"([^"]*)"""").r.findFirstMatchIn(txt).get.group(1)
-    Marker(num("dim").toInt, num("eff").toInt, num("seed").toLong,
-      str("idCol"), str("vecCol"))
-  }
-
-  private def loadCentroids(spark: SparkSession, out: String): Array[Array[Double]] =
-    // driver-side parquet read (r18): the centroid frame is nlist-
-    // sized; even a collect costs one full Spark job per serving call
-    // (r17 had already dropped the sort Exchange) — the serving paths
-    // are driver-job-count bound, so the load now runs off the
-    // scheduler entirely
-    graft.util.SmallParquet.rows(spark.sparkContext.hadoopConfiguration,
-        s"${dataRoot(spark, out)}/centroids")
-      .sortBy(_.int("i")).map(_.doubleArray("c")).toArray
+              sampleSize: Int = 2048): Int =
+    retrainFrom(spark, out, "cells") { (m, corpus, root) =>
+      writeGeneration(corpus, root, m.dim, if (nlist > 0) nlist else m.eff,
+        sampleSize, m.seed, m.idCol, m.vecCol)
+    }
 
   /**
    * Query the persisted index: identical semantics (and bit-identical
    * cosines) to [[Similarity.ivfTopK]] with the same build
    * parameters, but the corpus is never scanned — only the probed
-   * cells' partitions are read, and no training runs. Queries must be
-   * broadcast-small (the same contract as the batch operator); their
-   * probed cell set is collected to drive partition pruning.
+   * cells' partitions are read, and no training runs.
    */
   def query(spark: SparkSession, out: String, queries: DataFrame, k: Int,
             nprobe: Int = 4): DataFrame =
     query(spark, out, queries, k, nprobe, allowed = None)
 
   /** As [[query]], with an optional FILTERED-SEARCH id selector (the
-    * FAISS `IDSelector` / production metadata-filter shape): when
-    * `allowed` is given (a frame whose FIRST column is the corpus id —
-    * typically the caller's metadata predicate evaluated against their
-    * corpus table), ranking restricts to allowed ids. The restriction
-    * is a semi-join applied AFTER probe pruning, so its left side is
-    * the probed mass only, and Catalyst broadcasts the id set when it
-    * fits (no forced hint: a half-the-corpus filter must not ram
-    * through the driver). Top-k is over allowed survivors — a query
-    * whose probed cells hold fewer than k allowed vectors returns
-    * fewer rows, exactly Solr's `{!knn}` + fq composition. */
+    * FAISS `IDSelector` / production metadata-filter shape): ranking
+    * restricts to `allowed`'s ids (first column), semi-joined after
+    * probe pruning. Top-k is over allowed survivors — exactly Solr's
+    * `{!knn}` + fq composition. */
   def query(spark: SparkSession, out: String, queries: DataFrame, k: Int,
-            nprobe: Int, allowed: Option[DataFrame]): DataFrame = {
-    val m = readMarker(spark, out)
-    queryInternal(spark, m, loadCentroids(spark, out), queries,
-      probed => spark.read.parquet(s"${dataRoot(spark, out)}/cells")
-        .filter(col("cell").isin(probed.map(Int.box): _*)),
-      cells => exceptDeleted(spark, out, cells), k, nprobe, allowed)
-  }
-
-  /** Is `out` a raw-vector IVF store? (tier dispatch — the marker
-    * lives at the CURRENT generation's root). */
-  private[graft] def isIvfStore(spark: SparkSession, out: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(
-      markerPath(dataRoot(spark, out)))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Serve PARSED `{!knn}` request vectors (round 17 — the request
-    * surface's tier dispatch, [[HnswIndex.queryVectors]]'s shape):
-    * validates the request field and dims against the marker, builds
-    * the query frame, serves via [[query]]. Output (query_id, rank,
-    * corpus_id) — the family shape. */
-  private[graft] def queryVectors(spark: SparkSession, out: String,
-      vectors: Seq[(Long, Array[Double])], k: Int, nprobe: Int,
-      allowed: Option[DataFrame], field: Option[String]): DataFrame = {
-    val m = readMarker(spark, out)
-    field.foreach(f => require(f == m.vecCol,
-      s"request field '$f' does not match the store's vector column " +
-        s"'${m.vecCol}' ($out)"))
-    vectors.foreach { case (id, v) => require(v.length == m.dim,
-      s"query $id has dim ${v.length}, store expects ${m.dim}") }
-    import spark.implicits._
-    val qdf = vectors.map { case (id, v) => (id, v.toSeq) }
-      .toDF(m.idCol, m.vecCol)
-    query(spark, out, qdf, k, nprobe, allowed)
-      .select(col("query_id"), col("rank"), col("corpus_id"))
-  }
-
-  /** The probe→prune→score→cut body shared by the LIVE read path and
-    * the pinned one ([[queryPinned]]) — only WHERE marker, centroids,
-    * cells and tombstones come from differs. */
-  private def queryInternal(spark: SparkSession, m: Marker,
-      centroids: Array[Array[Double]], queries: DataFrame,
-      readCells: Seq[Int] => DataFrame,
-      exceptTomb: DataFrame => DataFrame, k: Int, nprobe: Int,
-      allowed: Option[DataFrame]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val q0 = queries.select(col(m.idCol).as("query_id"),
-        col(m.vecCol).cast("array<double>").as("qvec"))
-      .withColumn("qnorm", Similarity.norm(col("qvec")))
-    // ONE collect of the (broadcast-small by contract) query batch:
-    // probe cells are computed DRIVER-SIDE (bit-identical fold order,
-    // see Similarity.probeCellsLocal) and the query side becomes a
-    // LocalRelation — the old probed-cell collect job disappears and
-    // the scoring join's broadcast build no longer needs a scan job
-    // (r18, guide §5; the serving paths are driver-job-count bound)
-    val qRows = q0.collect()
-    val qvecIdx = q0.schema.fieldIndex("qvec")
-    val cnorms = Similarity.centroidNormsLocal(centroids)
-    val probesPer = qRows.map { r =>
-      Similarity.probeCellsLocal(
-        if (r.isNullAt(qvecIdx)) null else r.getSeq[Any](qvecIdx),
-        centroids, cnorms, nprobe)
-    }
-    val qSchema = q0.schema.add("cell",
-      org.apache.spark.sql.types.IntegerType, nullable = false)
-    val q = spark.createDataFrame(
-      java.util.Arrays.asList(qRows.zip(probesPer).flatMap { case (r, cs) =>
-        cs.map(c => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ c))
-      }: _*), qSchema)
-    // probed cells -> partition-pruning literals (bounded: |Q|·nprobe)
-    val probed = probesPer.flatten.distinct.toIndexedSeq
-    val cells = readCells(probed)
-    val searched = restrictToAllowed(exceptTomb(cells), allowed)
-    val scored = searched.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("corpus_id"))
-      .withColumn("cosine", Similarity.dot(col("qvec"), col("cvec")) /
-        (col("qnorm") * col("cnorm")))
-      .select(col("query_id"), col("corpus_id"), col("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
-  // ----- PINNED SNAPSHOTS (round 16 — the SegmentIndex pinGeneration
-  // ----- precedent: a reproducible eval over a mutating store) -------
-
-  private def pinMarkerPath(out: String, g: Int) = s"$out/_pin_$g"
-  private def pinDir(out: String, g: Int) = s"$out/.pin_$g"
-
-  private[ops] def pins(fs: org.apache.hadoop.fs.FileSystem,
-                        out: String): Set[Int] = {
-    val p = new org.apache.hadoop.fs.Path(out)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("_pin_"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("_pin_").toInt).toOption)
-      .toSet
-  }
-
-  /** List one generation subdir's cell files, relative to its root —
-    * the pin's immutable read set. */
-  private def cellFiles(fs: org.apache.hadoop.fs.FileSystem,
-                        root: String, subdir: String): Seq[String] = {
-    val cr = new org.apache.hadoop.fs.Path(s"$root/$subdir")
-    if (!fs.exists(cr)) Nil
-    else fs.listStatus(cr).iterator
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-      .flatMap { d =>
-        fs.listStatus(d.getPath).iterator
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(f => s"${d.getPath.getName}/${f.getPath.getName}")
-      }.toSeq.sorted
-  }
-
-  private[ops] def pinnedRootOf(out: String, token: Int): String =
-    if (token == 0) out else s"$out/g$token"
-
-  private[ops] def requirePin(spark: SparkSession, out: String,
-                              token: Int): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(pinMarkerPath(out, token))),
-      s"no pin $token on $out")
-  }
-
-  /** A pinned subdir's frame: exactly the FILE SET the pin recorded —
-    * later appends are unlisted, rewrites of listed files are
-    * deferred while the pin lives ([[purgeDeletes]]/[[compact]]).
-    * Partition pruning on `cell` still applies via the basePath. */
-  private[ops] def pinnedSubdirFrame(spark: SparkSession, out: String,
-                                     token: Int,
-                                     subdir: String): DataFrame = {
-    val root = pinnedRootOf(out, token)
-    val listName = if (subdir == "cells") "files" else s"files_$subdir"
-    val files = graft.util.FsIo.readSmallFile(
-        spark.sparkContext.hadoopConfiguration,
-        s"${pinDir(out, token)}/$listName")
-      .split("\n").filter(_.nonEmpty).map(f => s"$root/$subdir/$f").toSeq
-    if (files.isEmpty) spark.read.parquet(s"$root/$subdir").limit(0)
-    else spark.read.option("basePath", s"$root/$subdir").parquet(files: _*)
-  }
-
-  /** The pin's tombstone snapshot as an anti-join (identity when the
-    * pin saw no deletes). */
-  private[ops] def pinnedTombAnti(spark: SparkSession, out: String,
-                                  token: Int): DataFrame => DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"${pinDir(out, token)}/deletes")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) identity
-    else cells => cells.join(
-      broadcast(spark.read.parquet(p.toString).select("corpus_id")),
-      Seq("corpus_id"), "left_anti")
-  }
-
-  /** PIN the store's CURRENT state; returns the snapshot token (the
-    * generation number). What freezes, and how:
-    *  - the generation's `centroids/` and marker are write-once;
-    *  - `cells/` mutates IN PLACE under adds — so the pin records the
-    *    FILE LIST at pin time (Lucene's commit-point shape: a commit
-    *    is a file set), and [[queryPinned]] reads exactly those files
-    *    — later appends are new files the pin never lists;
-    *  - the tombstone set materializes into the pin's directory;
-    *  - physical REWRITES of pinned files ([[purgeDeletes]],
-    *    [[compact]]) DEFER while a pin addresses their generation
-    *    (they return 0 and log — deletes stay logically applied via
-    *    the tombstone anti-join, so nothing is wrong, just unreclaimed
-    *    — the Lucene deletion-policy trade); [[retrain]] is free (a
-    *    new generation) and [[reclaimGenerations]] spares pinned ones.
-    * Release with [[releaseGeneration]]. */
-  def pinGeneration(spark: SparkSession, out: String): Int = {
-    recoverStore(spark, out)
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = dataRoot(spark, out)
-    // the IVF-PQ refine sidecar mirrors the cell layout — snapshot its
-    // file set too so a pinned refine read has the same immutable base
-    val subdirs = Seq("cells") ++
-      (if (fs.exists(new org.apache.hadoop.fs.Path(s"$root/vectors")))
-        Seq("vectors") else Nil)
-    pinSubdirs(spark, out, subdirs)
-  }
-
-  /** The subdir-parameterized pin body [[pinGeneration]] wraps — also
-    * serves the `codes/`-layout tiers ([[Sq8Index.pinGeneration]],
-    * [[BinaryQuant.pinIvfGeneration]]): record each subdir's file
-    * list, materialize the tombstone snapshot, commit the pin marker.
-    * Callers run their own swap recovery first. */
-  private[ops] def pinSubdirs(spark: SparkSession, out: String,
-                              subdirs: Seq[String]): Int = {
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val g = generation(fs, out)
-    val root = dataRoot(spark, out)
-    fs.delete(new org.apache.hadoop.fs.Path(pinDir(out, g)), true)
-    deletes(spark, out).foreach(
-      _.write.mode("overwrite").parquet(s"${pinDir(out, g)}/deletes"))
-    subdirs.foreach { sub =>
-      val listName = if (sub == "cells") "files" else s"files_$sub"
-      graft.util.FsIo.writeSmallFile(spark.sparkContext.hadoopConfiguration,
-        s"${pinDir(out, g)}/$listName",
-        cellFiles(fs, root, sub).mkString("\n"))
-    }
-    fs.create(new org.apache.hadoop.fs.Path(pinMarkerPath(out, g)), true)
-      .close()
-    g
-  }
-
-  /** Release a pin: its generation re-enters reclaim eligibility and
-    * deferred rewrites may proceed. */
-  def releaseGeneration(spark: SparkSession, out: String,
-                        token: Int): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(pinMarkerPath(out, token)), false)
-    fs.delete(new org.apache.hadoop.fs.Path(pinDir(out, token)), true)
-  }
-
-  /** Query a PINNED snapshot: the pinned generation's quantizers, the
-    * pin's recorded file set (partition pruning still applies — the
-    * probed-cell filter prunes by directory under the basePath), the
-    * pin's tombstones — bit-for-bit the answers of pin time, whatever
-    * mutations landed since (spec-locked; an AnnLifecycleProps fuzz
-    * op). */
-  def queryPinned(spark: SparkSession, out: String, token: Int,
-                  queries: DataFrame, k: Int, nprobe: Int = 4,
-                  allowed: Option[DataFrame] = None): DataFrame = {
-    requirePin(spark, out, token)
-    val root = pinnedRootOf(out, token)
-    val txt = graft.util.FsIo.readSmallFile(
-      spark.sparkContext.hadoopConfiguration, markerPath(root))
-    def num(k0: String) = s""""$k0":(-?\\d+)""".r.findFirstMatchIn(txt).get.group(1)
-    def str(k0: String) = (s""""$k0":"([^"]*)"""").r.findFirstMatchIn(txt).get.group(1)
-    val m = Marker(num("dim").toInt, num("eff").toInt, num("seed").toLong,
-      str("idCol"), str("vecCol"))
-    val centroids = graft.util.SmallParquet
-      .rows(spark.sparkContext.hadoopConfiguration, s"$root/centroids")
-      .sortBy(_.int("i")).map(_.doubleArray("c")).toArray
-    queryInternal(spark, m, centroids, queries,
-      probed => pinnedSubdirFrame(spark, out, token, "cells")
-        .filter(col("cell").isin(probed.map(Int.box): _*)),
-      pinnedTombAnti(spark, out, token), k, nprobe, allowed)
-  }
-
-  /** Quantization-drift probe — the RETRAIN TRIGGER the frozen-add
-    * contract needs (FAISS freezes the coarse quantizer on `add` and
-    * leaves "when to retrain" to the user; without a measurement the
-    * degradation is silent): per cohort, the exact-integer sum of
-    * per-vector milli distances to the assigned (nearest) centroid —
-    * `round((1 - cos) * 1000)` — for the STORED corpus (the build-time
-    * baseline, tombstones excluded) and for a `recent` batch. A recent
-    * mean (sum/n) well above the store's says the centroids no longer
-    * describe incoming data and a rebuild is due; the milli-integer
-    * space keeps the statistic bit-stable across engines (oracled in
-    * q308). One pass over each cohort, centroids broadcast — corpus
-    * scale never shuffles. */
-  def assignmentDrift(spark: SparkSession, out: String,
-                      recent: DataFrame): DataFrame = {
-    val m = readMarker(spark, out)
-    val (dists, _) = Similarity.cellFns(loadCentroids(spark, out), m.dim)
-    def cohort(vecs: DataFrame, name: String): DataFrame =
-      vecs.select(round((lit(1.0) + array_min(dists(col("v")))) * 1000)
-          .cast("long").as("dm"))
-        .agg(count(lit(1)).as("n"), sum(col("dm")).as("sum_dist_milli"))
-        .select(lit(name).as("cohort"), col("n"), col("sum_dist_milli"))
-    val stored = exceptDeleted(spark, out,
-        spark.read.parquet(s"${dataRoot(spark, out)}/cells"))
-      .select(col("cvec").as("v"))
-    val rec = recent.select(col(m.vecCol).cast("array<double>").as("v"))
-    cohort(stored, "store").unionByName(cohort(rec, "recent"))
-  }
+            nprobe: Int, allowed: Option[DataFrame]): DataFrame =
+    queryAt(live(spark, out), queries, k, nprobe, allowed)
 
   /** Named form of the filtered search ([[query]]'s `allowed` arm). */
   def queryFiltered(spark: SparkSession, out: String, queries: DataFrame,
@@ -511,416 +113,38 @@ object IvfIndex {
                     nprobe: Int = 4): DataFrame =
     query(spark, out, queries, k, nprobe, Some(allowed))
 
-  /** The filtered-search semi-join shared by the IVF and IVF-PQ read
-    * paths: keep rows whose corpus_id is in `allowed`'s first column. */
-  private[ops] def restrictToAllowed(cells: DataFrame,
-                                     allowed: Option[DataFrame]): DataFrame =
-    allowed.map { a =>
-      cells.join(a.select(col(a.columns.head).as("corpus_id")),
-        Seq("corpus_id"), "left_semi")
-    }.getOrElse(cells)
+  /** Query a PINNED snapshot: the pinned generation's centroids, the
+    * pin's recorded file set and tombstones — bit-for-bit the answers
+    * of pin time, whatever mutations landed since. */
+  def queryPinned(spark: SparkSession, out: String, token: Int,
+                  queries: DataFrame, k: Int, nprobe: Int = 4,
+                  allowed: Option[DataFrame] = None): DataFrame =
+    queryAt(pinned(spark, out, token), queries, k, nprobe, allowed)
 
-  /** Incremental add: assign `vectors` against the FROZEN centroids
-    * and append to the touched cell partitions — existing cells'
-    * files never rewrite (dynamic partition append), the classical
-    * IVF add contract. Periodic retrain is a rebuild, by design.
-    * After the append, any cell whose small-file pile exceeds
-    * `maxFilesPerCell` is folded (see [[compact]]) — the same
-    * counter-force the segment store's tiered merge applies, so a
-    * continuous ingest converges to O(bytes/targetFileBytes) files
-    * per cell instead of O(adds). */
-  def add(spark: SparkSession, out: String, vectors: DataFrame,
-          maxFilesPerCell: Int = 8): Unit = {
-    recoverStore(spark, out) // never append into a half-swapped cell
-    val m = readMarker(spark, out)
-    val (_, nearest) = Similarity.cellFns(loadCentroids(spark, out), m.dim)
-    vectors.select(col(m.idCol).as("corpus_id"),
-        col(m.vecCol).cast("array<double>").as("cvec"))
-      .withColumn("cnorm", Similarity.norm(col("cvec")))
-      .withColumn("cell", nearest(col("cvec")))
-      .write.mode("append").partitionBy("cell")
-      .parquet(s"${dataRoot(spark, out)}/cells")
-    compact(spark, out, maxFilesPerCell)
+  private def queryAt(v: View, queries: DataFrame, k: Int, nprobe: Int,
+                      allowed: Option[DataFrame]): DataFrame = {
+    val m = v.marker
+    val p = probe(v, queries.select(col(m.idCol).as("query_id"),
+        col(m.vecCol).cast("array<double>").as("qvec"))
+      .withColumn("qnorm", Similarity.norm(col("qvec"))), nprobe)
+    val scored = scan(v, "cells", p, allowed, "qvec", "qnorm")
+      .withColumn("cosine", Similarity.dot(col("qvec"), col("cvec")) /
+        (col("qnorm") * col("cnorm")))
+      .select(col("query_id"), col("corpus_id"), col("cosine"))
+    CellStore.cut(scored, "cosine", desc = true, k)
   }
 
-  /** Stream-scoping key for batch markers and batch-keyed file names.
-    * Structured Streaming batch ids are CHECKPOINT-scoped while the
-    * markers are durable in the store: without a per-stream namespace,
-    * a relaunch with a fresh checkpoint (or a second stream into the
-    * same store) re-issues batch ids 0..N that collide with committed
-    * markers and fresh data is silently skipped as a "replay".
-    * Empty streamId keeps the legacy single-stream names. */
-  private[ops] def streamKey(streamId: String): String =
-    if (streamId.isEmpty) ""
-    else java.security.MessageDigest.getInstance("MD5")
-      .digest(streamId.getBytes("UTF-8")).take(4)
-      .map(b => f"$b%02x").mkString + "_"
+  protected def serve(spark: SparkSession, out: String, queries: => DataFrame,
+                      k: Int, nprobe: Int, rerank: Int,
+                      allowed: Option[DataFrame]): DataFrame =
+    query(spark, out, queries, k, nprobe, allowed)
+      .select(col("query_id"), col("rank"), col("corpus_id"))
 
-  /** Marker recording that streamed batch `batchId` of stream
-    * `streamId` fully applied — the replay guard [[addBatch]] checks.
-    * Durable in the store; namespaced per stream (see [[streamKey]]). */
-  private[graft] def batchMarker(out: String, batchId: Long,
-                                 streamId: String = "") =
-    new org.apache.hadoop.fs.Path(
-      s"$out/_ann_batch_${streamKey(streamId)}$batchId")
-
-  /** Exactly-once add for a streamed micro-batch: no-op if `batchId`'s
-    * marker exists; otherwise DELETE-OUTPUT-FIRST (any `b<id>-*` cell
-    * files from a crashed prior attempt go away — the reference's
-    * rerun-a-task semantics), encode+stage the batch under a private
-    * dir, move the staged files to batch-keyed names inside the cell
-    * partitions, write the marker, THEN compact (marker strictly
-    * before compaction: once a batch's files may fold into compacted
-    * files, its replay must already be a no-op). Returns true if the
-    * batch applied, false if it was a replay skip. */
-  def addBatch(spark: SparkSession, out: String, vectors: DataFrame,
-               batchId: Long, maxFilesPerCell: Int = 8,
-               streamId: String = ""): Boolean = {
-    val m = readMarker(spark, out)
-    val (_, nearest) = Similarity.cellFns(loadCentroids(spark, out), m.dim)
-    val encoded = vectors.select(col(m.idCol).as("corpus_id"),
-        col(m.vecCol).cast("array<double>").as("cvec"))
-      .withColumn("cnorm", Similarity.norm(col("cvec")))
-      .withColumn("cell", nearest(col("cvec")))
-    val applied = commitEncodedBatch(spark, out, Seq("cells" -> encoded),
-      batchId, streamId)
-    if (applied) compact(spark, out, maxFilesPerCell)
-    applied
-  }
-
-  /** The transactional append shared by the IVF and IVF-PQ streamed
-    * add paths: each (subdir, frame) pair carries a `cell` column plus
-    * that subdir's row shape (cells/ codes or raw rows; vectors/ for
-    * the refine sidecar) and ALL commit under ONE batch marker. See
-    * [[addBatch]] for the protocol. */
-  private[ops] def commitEncodedBatch(spark: SparkSession, out: String,
-                                      frames: Seq[(String, DataFrame)],
-                                      batchId: Long,
-                                      streamId: String = ""): Boolean = {
-    val marker = batchMarker(out, batchId, streamId)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) return false
-    recoverStore(spark, out) // never append into a half-swapped cell
-    val key = streamKey(streamId)
-    val base = dataRoot(spark, out)
-    frames.foreach { case (subdir, encoded) =>
-      val root = new org.apache.hadoop.fs.Path(s"$base/$subdir")
-      // delete-output-first: a crashed prior attempt of THIS batch may
-      // have moved some files in; its markerless leftovers are exactly
-      // the `b<key><id>-*` names (compaction can only have folded files
-      // of batches whose marker already exists; another stream's files
-      // carry a different key and are never touched)
-      if (fs.exists(root))
-        fs.listStatus(root)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-          .foreach { d =>
-            fs.listStatus(d.getPath)
-              .filter(f => f.isFile &&
-                f.getPath.getName.startsWith(s"b$key$batchId-"))
-              .foreach(f => fs.delete(f.getPath, false))
-          }
-      // stage the whole batch (idempotent overwrite), then move files
-      // to batch-keyed names — the marker commits the batch only after
-      // every subdir's every move landed
-      val stage = new org.apache.hadoop.fs.Path(
-        s"$base/.ann_stage_${subdir}_$key$batchId")
-      encoded.write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
-      fs.listStatus(stage)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-        .foreach { d =>
-          val dst = new org.apache.hadoop.fs.Path(root, d.getPath.getName)
-          if (!fs.exists(dst)) fs.mkdirs(dst)
-          fs.listStatus(d.getPath)
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-            .zipWithIndex.foreach { case (f, i) =>
-              fs.rename(f.getPath,
-                new org.apache.hadoop.fs.Path(dst, f"b$key$batchId-$i%05d.parquet"))
-            }
-        }
-      fs.delete(stage, true)
-    }
-    fs.create(marker, true).close()
-    true
-  }
-
-  /** The live tombstone set, if any delete batch has landed. */
-  private[ops] def deletes(spark: SparkSession, out: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(deletesPath(out))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
-
-  /** Anti-join the tombstone set out of a cells frame — the read-side
-    * half of [[removeIds]]. Broadcast: between purges the tombstone
-    * set is bounded by the delete batches since the last reclaim
-    * (the same small-side contract as the probe set). The count check
-    * is the [[AnnTombstones]] nudge, read off the marker cache
-    * [[removeIds]] maintains — zero extra Spark jobs on the serving
-    * hot path (a store whose deletes predate the cache pays the
-    * one-off `count()` fallback). */
-  private[ops] def exceptDeleted(spark: SparkSession, out: String,
-                                 cells: DataFrame): DataFrame =
-    deletes(spark, out)
-      .map { d =>
-        AnnTombstones.check(spark, "ivf", out,
-          AnnTombstones.countOf(spark, out)(d.count()))
-        cells.join(broadcast(d.select("corpus_id")),
-          Seq("corpus_id"), "left_anti")
-      }
-      .getOrElse(cells)
-
-  /** Delete vectors by id (FAISS `remove_ids` analog): appends a
-    * tombstone batch to `deletes/` — O(batch) I/O, no cell touched.
-    * Deleted ids never surface from [[query]] (anti-joined) from this
-    * moment; physical reclaim is [[purgeDeletes]] (targeted) or any
-    * [[compact]] rewrite that happens to fold a touched cell.
-    * `ids`' FIRST column is the id (whatever `idCol` the build used).
-    * The batch row count folds into the [[AnnTombstones]] marker cache
-    * (one O(batch) job HERE so the query paths never count). */
-  def removeIds(spark: SparkSession, out: String, ids: DataFrame): Unit = {
-    val batch = ids.select(col(ids.columns.head).as("corpus_id")).distinct()
-    batch.coalesce(1).write.mode("append").parquet(deletesPath(out))
-    AnnTombstones.recordRemoval(spark, out,
-      spark.read.parquet(deletesPath(out)).count())
-  }
-
-  /** Physically reclaim tombstoned rows: one broadcast semi-join scan
-    * locates the touched cells (the ids' vectors may no longer exist —
-    * an IVF-PQ store holds no raw vectors — so cell membership can
-    * only come from the stored rows), then the WHOLE touched set
-    * rewrites in ONE read-filter-write job — cell-partition-pruned
-    * read, broadcast anti-join, `partitionBy(cell)` write into a tmp
-    * dir, per-cell file swap — so a redaction batch touching hundreds
-    * of cells costs two Spark jobs, not hundreds of serialized tiny
-    * ones (job count is constant in touched-cell count, spec-asserted
-    * in IvfIndexSpec). I/O stays ∝ touched-cell bytes + one corpus
-    * scan, never a rebuild; the rewrite materializes fully under the
-    * tmp dir before any original file is removed. Output files aim at
-    * `targetFileBytes` via a per-cell salt (bounded driver-side CASE
-    * over the touched list). Single-writer discipline as [[compact]].
-    * Returns cells purged. */
-  def purgeDeletes(spark: SparkSession, out: String,
-                   targetFileBytes: Long = 256L << 20): Int = {
-    recoverStore(spark, out)
-    val dels = deletes(spark, out).getOrElse(return 0)
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a pin on the CURRENT generation addresses the very files this
-    // rewrite would delete — DEFER (the Lucene deletion-policy trade:
-    // deletes stay logically applied via the anti-join, reclaim waits
-    // for release)
-    if (pins(fs, out).contains(generation(fs, out))) {
-      log.info(s"purgeDeletes deferred: generation of $out is pinned")
-      return 0
-    }
-    val base = dataRoot(spark, out)
-    // the raw-vector refine sidecar (IvfPqIndex refineStore) mirrors
-    // the cell layout and holds the SAME deleted ids' raw vectors —
-    // a redaction purge must reclaim both, sidecar first (the
-    // tombstone set clears with the cells/ pass)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$base/vectors")))
-      purgeSubdir(spark, fs, base, "vectors", dels, targetFileBytes)
-    val purged = purgeSubdir(spark, fs, base, "cells", dels, targetFileBytes)
-    fs.delete(new org.apache.hadoop.fs.Path(deletesPath(out)), true)
-    AnnTombstones.clearCount(spark, out)
-    purged
-  }
-
-  /** One subdir's purge: locate touched cells (broadcast semi-join),
-    * rewrite the whole touched set in ONE read-filter-write job,
-    * then swap each touched cell by WHOLE-DIRECTORY rename — original
-    * aside to a trash dir first, rewritten dir in second — so a crash
-    * at any point leaves a state [[recoverStore]] completes: a cell
-    * whose live dir is missing has its only copy sitting in the tmp
-    * dir under a deterministic name, never deleted before it is
-    * renamed back in. Returns cells purged in this subdir. */
-  private[ops] def purgeSubdir(spark: SparkSession,
-                               fs: org.apache.hadoop.fs.FileSystem, base: String,
-                               subdir: String, dels: DataFrame,
-                               targetFileBytes: Long): Int = {
-    val root = new org.apache.hadoop.fs.Path(s"$base/$subdir")
-    if (!fs.exists(root)) return 0
-    val touched = spark.read.parquet(root.toString)
-      .join(broadcast(dels.select("corpus_id")), Seq("corpus_id"), "left_semi")
-      .select("cell").distinct().collect().map(_.getInt(0))
-    if (touched.isEmpty) return 0
-    // per-cell split counts from the fs listing (driver-side, bounded
-    // by the touched set): cells over targetFileBytes shard across
-    // salt buckets so one jumbo cell can't force a single giant file
-    val splits: Seq[(Int, Int)] = touched.toSeq.map { c =>
-      val d = new org.apache.hadoop.fs.Path(root, s"cell=$c")
-      val bytes =
-        if (fs.exists(d))
-          fs.listStatus(d).filter(f => f.isFile &&
-            f.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
-        else 0L
-      c -> math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    }
-    val salt = splits.foldLeft(lit(0)) { case (acc, (c, n)) =>
-      when(col("cell") === c, pmod(hash(col("corpus_id")), lit(n)))
-        .otherwise(acc)
-    }
-    val tmp = new org.apache.hadoop.fs.Path(s"$base/.purge_tmp_$subdir")
-    val trash = new org.apache.hadoop.fs.Path(s"$base/.purge_trash_$subdir")
-    fs.delete(tmp, true)
-    fs.delete(trash, true)
-    val scan = spark.read.parquet(root.toString)
-      .filter(col("cell").isin(touched.map(Int.box).toIndexedSeq: _*))
-    val live = scan.join(broadcast(dels.select("corpus_id")),
-      Seq("corpus_id"), "left_anti")
-    live.repartition(splits.map(_._2).sum, col("cell"), salt)
-      .write.mode("overwrite").partitionBy("cell").parquet(tmp.toString)
-    // swap only after the tmp write committed whole (_SUCCESS): the
-    // original dir goes ASIDE (trash) before the rewritten dir renames
-    // in, and trash is removed only after every cell landed — at no
-    // point is any cell's only live copy scheduled for deletion
-    fs.mkdirs(trash)
-    touched.foreach { c =>
-      val d = new org.apache.hadoop.fs.Path(root, s"cell=$c")
-      if (fs.exists(d))
-        fs.rename(d, new org.apache.hadoop.fs.Path(trash, s"cell=$c"))
-      val td = new org.apache.hadoop.fs.Path(tmp, s"cell=$c")
-      if (fs.exists(td)) fs.rename(td, d)
-    }
-    fs.delete(tmp, true)
-    fs.delete(trash, true)
-    touched.length
-  }
-
-  /** One subdir's purge-swap recovery, shared with the binary tier's
-    * `codes/` store ([[BinaryQuant.recoverIvfStore]]) — a
-    * crash-safety protocol must have exactly one implementation.
-    * Rules: a tmp dir that finished its write (`_SUCCESS`) may hold
-    * the ONLY copy of a cell whose live dir was already moved aside —
-    * those cells rename back in (the purged/compacted version, still
-    * consistent). A tmp cell whose live dir still exists is discarded:
-    * the live dir is the original (possibly with appends that landed
-    * after the crash), and the still-present tombstone set lets the
-    * next purge re-derive the rewrite. Trash dirs only ever hold
-    * superseded originals and are dropped. */
-  private[ops] def recoverSubdirSwap(fs: org.apache.hadoop.fs.FileSystem,
-                                     base: String, subdir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(s"$base/$subdir")
-    val tmp = new org.apache.hadoop.fs.Path(s"$base/.purge_tmp_$subdir")
-    if (fs.exists(tmp)) {
-      if (fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")))
-        fs.listStatus(tmp)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-          .foreach { d =>
-            val dst = new org.apache.hadoop.fs.Path(root, d.getPath.getName)
-            if (!fs.exists(dst)) fs.rename(d.getPath, dst)
-          }
-      fs.delete(tmp, true)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$base/.purge_trash_$subdir"), true)
-  }
-
-  /** Complete (or discard) any swap a crashed [[purgeDeletes]] /
-    * [[compact]] left behind — runs at every mutation entry point:
-    * [[recoverSubdirSwap]]'s rules over cells/ and vectors/, plus the
-    * compact-leftover handling below (compact tmp dirs are NOT
-    * cell-partitioned, so they need their own resolution). */
-  private[ops] def recoverStore(spark: SparkSession, out: String): Unit = {
-    val base = dataRoot(spark, out)
-    val outP = new org.apache.hadoop.fs.Path(base)
-    val fs = outP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(outP)) return
-    Seq("cells", "vectors").foreach(recoverSubdirSwap(fs, base, _))
-    // compact leftovers: .compact_tmp_<subdir>_cell=N at the data root
-    fs.listStatus(outP).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith(".compact_tmp_")) {
-        val rest = n.stripPrefix(".compact_tmp_")
-        val i = rest.indexOf("_cell=")
-        val dst = if (i > 0) Some(new org.apache.hadoop.fs.Path(
-          s"$base/${rest.substring(0, i)}/${rest.substring(i + 1)}")) else None
-        dst match {
-          case Some(d) if !fs.exists(d) &&
-              fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")) =>
-            fs.rename(s.getPath, d)
-          case _ => fs.delete(s.getPath, true)
-        }
-      } else if (n.startsWith(".compact_trash_")) {
-        fs.delete(s.getPath, true)
-      }
-    }
-  }
-
-  /** Rewrite one cell directory in place: read, optionally drop
-    * tombstoned rows, coalesce to ceil(bytes/targetFileBytes) files,
-    * then swap by WHOLE-DIRECTORY rename (original aside, rewrite in)
-    * so the original is never deleted before its replacement landed —
-    * a crash at any point is completed or discarded by
-    * [[recoverStore]]. */
-  private def rewriteCellDir(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-                             base: String, subdir: String,
-                             d: org.apache.hadoop.fs.Path,
-                             targetFileBytes: Long,
-                             dropDels: Option[DataFrame]): Unit = {
-    val dataFiles = fs.listStatus(d)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    if (dataFiles.isEmpty) return
-    val bytes = dataFiles.map(_.getLen).sum
-    val target = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$base/.compact_tmp_${subdir}_${d.getName}")
-    val trash = new org.apache.hadoop.fs.Path(
-      s"$base/.compact_trash_${subdir}_${d.getName}")
-    fs.delete(tmp, true)
-    fs.delete(trash, true)
-    val scan = spark.read.parquet(d.toString)
-    val live = dropDels
-      .map(ds => scan.join(broadcast(ds.select("corpus_id")),
-        Seq("corpus_id"), "left_anti"))
-      .getOrElse(scan)
-    live.coalesce(target).write.mode("overwrite").parquet(tmp.toString)
-    fs.rename(d, trash)
-    fs.rename(tmp, d)
-    fs.delete(trash, true)
-  }
-
-  /** Fold over-budget cell partitions: each cell whose parquet file
-    * count exceeds `maxFilesPerCell` is rewritten to
-    * ceil(bytes / targetFileBytes) files (≥1) — live contents
-    * unchanged (tombstoned rows drop during the rewrite — they were
-    * already invisible to queries), plans unaffected (the cell dir
-    * keeps its name; only the files inside collapse). Cells under
-    * budget are never touched, so steady-state compaction I/O is
-    * ∝ recently-grown cells, not index size. Same single-writer
-    * discipline as the segment store: do not compact a store while a
-    * query batch reads it. Returns the number of cells folded. */
-  def compact(spark: SparkSession, out: String, maxFilesPerCell: Int = 8,
-              targetFileBytes: Long = 256L << 20): Int = {
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverStore(spark, out)
-    // compaction rewrites files a pin on the current generation still
-    // reads — DEFER until release (compaction is an optimization;
-    // deferring it is semantically free)
-    if (pins(fs, out).contains(generation(fs, out))) {
-      log.info(s"compact deferred: generation of $out is pinned")
-      return 0
-    }
-    val dels = deletes(spark, out)
-    val base = dataRoot(spark, out)
-    var folded = 0
-    // the refine sidecar (vectors/) grows in lockstep with cells/
-    // under streamed adds — its file piles fold under the same budget
-    Seq("cells", "vectors").foreach { subdir =>
-      val root = new org.apache.hadoop.fs.Path(s"$base/$subdir")
-      if (fs.exists(root))
-        fs.listStatus(root)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-          .foreach { d =>
-            val dataFiles = fs.listStatus(d.getPath)
-              .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-            if (dataFiles.length > maxFilesPerCell) {
-              rewriteCellDir(spark, fs, base, subdir, d.getPath,
-                targetFileBytes, dels)
-              folded += 1
-            }
-          }
-    }
-    folded
+  /** Quantization drift of the raw store (oracled in q308). */
+  def assignmentDrift(spark: SparkSession, out: String,
+                      recent: DataFrame): DataFrame = {
+    val v = live(spark, out)
+    drift(spark, out, v.quantizer, v.marker.dim, col("cvec"), recent,
+      col(v.marker.vecCol).cast("array<double>"))
   }
 }

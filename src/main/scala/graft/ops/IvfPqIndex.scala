@@ -21,24 +21,44 @@ import org.apache.spark.sql.functions._
  *    probed cells only. Deletes/purges/compaction/streamed adds all
  *    cover it alongside the code cells.
  *
- * Query batches probe their nprobe nearest cells and read ONLY those
- * cells' partitions (collected probe set → partition-pruning IN
- * filter, the [[IvfIndex.query]] contract, plan-asserted in
- * IvfPqIndexSpec). Answers are bit-identical to the batch
+ * Query batches probe their nprobe nearest cells on the driver — on
+ * the same normalized query vector the batch operator's expression
+ * probe ranks — and read ONLY those cells' partitions (plan-asserted
+ * in IvfPqIndexSpec). Answers are bit-identical to the batch
  * `ivfPqTopK` with the same build parameters — q294 shares q293's
  * DuckDB oracle.
  *
- * Incremental adds encode against the FROZEN quantizers (coarse +
- * sub-codebooks — FAISS's `add` contract) and append to touched cell
- * partitions; [[IvfIndex.compact]]'s counter-force applies unchanged
- * since the cell layout is identical.
+ * This object is the product-code CODEC; the store lifecycle (frozen
+ * adds, streamed batches, tombstones, compaction, retrain
+ * generations, pins) is the shared [[CellStore]].
  */
-object IvfPqIndex {
+object IvfPqIndex extends CellStore("_ivfpq_marker.json", "ivfpq",
+    subdirs = Seq("cells", "vectors"), quantizerDirs = Seq("centroids", "codebooks")) {
 
-  private def markerPath(root: String) = s"$root/_ivfpq_marker.json"
+  /** (coarse centroids, flat [s][code][dim/m] sub-codebooks) */
+  type Quantizer = (Array[Array[Double]], IndexedSeq[Double])
 
-  final case class Marker(dim: Int, eff: Int, m: Int, ksub: Int, seed: Long,
-                          idCol: String, vecCol: String)
+  protected def loadQuantizer(conf: org.apache.hadoop.conf.Configuration,
+                              root: String, m: CellMarker): Quantizer =
+    (CellStore.centroidsAt(conf, root),
+      graft.util.SmallParquet.rows(conf, s"$root/codebooks")
+        .sortBy(r => (r.int("s"), r.int("code")))
+        .flatMap(_.doubleArray("c")).toIndexedSeq)
+
+  protected def probeCol = "nq"
+
+  protected def probeCells(q: Quantizer, nprobe: Int) = CellStore.cosineProbe(q._1, nprobe)
+
+  /** Codes into `cells/`, and the raw rows of the SAME encoded frame
+    * into the `vectors/` sidecar — so sidecar and code store can never
+    * disagree on assignment. */
+  protected def encode(vectors: DataFrame, mk: CellMarker,
+                       q: Quantizer): Seq[(String, DataFrame)] = {
+    val full = Similarity.encodeIvfPqFull(vectors, q._1, q._2, mk.dim,
+      mk.int("m"), mk.int("ksub"), mk.idCol, mk.vecCol)
+    Seq("cells" -> full.select(col("cell"), col("corpus_id"), col("codes")),
+      "vectors" -> full.select(col("cell"), col("corpus_id"), col("cvec"), col("cnorm")))
+  }
 
   def build(corpus: DataFrame, out: String, dim: Int,
             nlist: Int = 16, m: Int = 8, ksub: Int = 16,
@@ -61,134 +81,55 @@ object IvfPqIndex {
     import spark.implicits._
     val (centroids, codebooks) = Similarity.trainIvfPq(corpus, dim, nlist, m,
       ksub, coarseSample, pqSample, coarseIters, pqIters, seed, idCol, vecCol)
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("i", "c").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/centroids")
+    CellStore.writeCentroids(spark, root, centroids)
     // flat [s][code][dim/m] layout, one row per (subspace, code)
     val dsub = dim / m
     (0 until m).flatMap(s => (0 until ksub).map { c =>
       (s, c, codebooks.slice((s * ksub + c) * dsub, (s * ksub + c + 1) * dsub))
     }).toDF("s", "code", "c").coalesce(1)
       .write.mode("overwrite").parquet(s"$root/codebooks")
-    val full = Similarity.encodeIvfPqFull(corpus, centroids, codebooks,
-      dim, m, ksub, idCol, vecCol)
-    full.select(col("cell"), col("corpus_id"), col("codes"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$root/cells")
-    // refineStore (FAISS IndexRefineFlat): a raw-vector SIDECAR under
-    // vectors/, cell-partitioned in lockstep with the code cells, so
-    // two-stage serving fetches re-rank vectors from the probed cells
-    // only — no external corpus frame, no corpus-wide read. The cell
-    // value comes from the SAME encoded frame, so sidecar and code
-    // store can never disagree on assignment.
-    if (refineStore)
-      full.select(col("cell"), col("corpus_id"), col("cvec"), col("cnorm"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$root/vectors")
-    val mk = s"""{"dim":$dim,"eff":${centroids.length},"m":$m,"ksub":$ksub,""" +
-      s""""seed":$seed,"idCol":"$idCol","vecCol":"$vecCol"}"""
-    val p = new org.apache.hadoop.fs.Path(markerPath(root))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(mk.getBytes("UTF-8")) finally os.close()
+    val mk = CellMarker.of("dim" -> dim, "eff" -> centroids.length, "m" -> m,
+      "ksub" -> ksub, "seed" -> seed, "idCol" -> idCol, "vecCol" -> vecCol)
+    commitStore(root, mk, encode(corpus, mk, (centroids, codebooks))
+      .filter { case (sub, _) => refineStore || sub == "cells" })
   }
 
-  /** Retrain + RE-ENCODE into a new generation ([[IvfIndex.retrain]]'s
-    * contract at the PQ tier): requires the raw-vector refine sidecar
-    * (`build(refineStore = true)`) — the code store alone cannot
-    * retrain, codes are lossy. Re-runs the full quantizer training
-    * (coarse + sub-codebooks, same seeds/protocol) over the live
-    * sidecar corpus (store + adds − deletes), re-encodes every vector,
-    * writes codes + sidecar under `out/gN/`, and commits with one
-    * `_gen_N` creation; old-generation serving is untouched until the
-    * commit, tombstones fold in and clear after it. Bit-identical to
-    * `build(refineStore = true)` over the same live corpus. Returns
-    * the new generation number. */
+  /** Retrain + RE-ENCODE into a new generation (the shared retrain
+    * commit): requires the raw-vector refine sidecar — codes are lossy,
+    * the code store alone cannot retrain. Re-runs the full quantizer
+    * training over the live sidecar corpus (store + adds − deletes);
+    * bit-identical to `build(refineStore = true)` over that corpus.
+    * Returns the new generation number. */
   def retrain(spark: SparkSession, out: String, nlist: Int = 0,
               m: Int = 0, ksub: Int = 0): Int = {
-    IvfIndex.recoverStore(spark, out)
     require(hasRefineStore(spark, out),
       s"$out has no vectors/ refine sidecar — an IVF-PQ store can only " +
         "retrain from raw vectors (build(refineStore = true))")
-    val mk = readMarker(spark, out)
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val g = IvfIndex.generation(fs, out)
-    val root = IvfIndex.dataRoot(spark, out)
-    val corpus = IvfIndex.exceptDeleted(spark, out,
-        spark.read.parquet(s"$root/vectors"))
-      .select(col("corpus_id").as(mk.idCol), col("cvec").as(mk.vecCol))
-    val newRoot = s"$out/g${g + 1}"
-    fs.delete(new org.apache.hadoop.fs.Path(newRoot), true) // crashed attempt
-    writeGeneration(corpus, newRoot, mk.dim,
-      if (nlist > 0) nlist else mk.eff, if (m > 0) m else mk.m,
-      if (ksub > 0) ksub else mk.ksub, coarseSample = 2048, pqSample = 256,
-      coarseIters = 8, pqIters = 4, mk.seed, mk.idCol, mk.vecCol,
-      refineStore = true)
-    fs.create(new org.apache.hadoop.fs.Path(s"$out/_gen_${g + 1}"), true).close()
-    fs.delete(new org.apache.hadoop.fs.Path(s"$out/deletes"), true)
-    g + 1
+    retrainFrom(spark, out, "vectors") { (mk, corpus, root) =>
+      writeGeneration(corpus, root, mk.dim,
+        if (nlist > 0) nlist else mk.eff, if (m > 0) m else mk.int("m"),
+        if (ksub > 0) ksub else mk.int("ksub"), coarseSample = 2048,
+        pqSample = 256, coarseIters = 8, pqIters = 4, mk.seed, mk.idCol,
+        mk.vecCol, refineStore = true)
+    }
   }
 
-  /** Serve PARSED `{!knn}` request vectors via the self-contained
-    * two-stage path (round 17 — the request surface's tier dispatch;
-    * requires the refine sidecar). Output (query_id, rank,
-    * corpus_id). */
-  private[graft] def queryVectors(spark: SparkSession, out: String,
-      vectors: Seq[(Long, Array[Double])], k: Int, kCandidates: Int,
-      nprobe: Int, allowed: Option[DataFrame],
-      field: Option[String]): DataFrame = {
-    val mk = readMarker(spark, out)
-    field.foreach(f => require(f == mk.vecCol,
-      s"request field '$f' does not match the store's vector column " +
-        s"'${mk.vecCol}' ($out)"))
-    vectors.foreach { case (id, v) => require(v.length == mk.dim,
-      s"query $id has dim ${v.length}, store expects ${mk.dim}") }
-    import spark.implicits._
-    val qdf = vectors.map { case (id, v) => (id, v.toSeq) }
-      .toDF(mk.idCol, mk.vecCol)
-    queryRefinedStored(spark, out, qdf, k, kCandidates, nprobe, allowed)
-      .select(col("query_id"), col("rank"), col("corpus_id"))
-  }
-
-  private[graft] def hasRefineStore(spark: SparkSession, out: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(
-      s"${IvfIndex.dataRoot(spark, out)}/vectors")
+  private def hasRefineStore(spark: SparkSession, out: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(s"${dataRoot(spark, out)}/vectors")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Store-type probe for sinks that accept either index flavor: an
-    * IVF-PQ store carries `_ivfpq_marker.json` in its CURRENT
-    * generation's data root. */
-  private[graft] def isPqStore(spark: SparkSession, out: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(
-      markerPath(IvfIndex.dataRoot(spark, out)))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private def readMarker(spark: SparkSession, out: String): Marker = {
-    val txt = graft.util.FsIo.readSmallFile(
-      spark.sparkContext.hadoopConfiguration,
-      markerPath(IvfIndex.dataRoot(spark, out)))
-    def num(k: String) = s""""$k":(-?\\d+)""".r.findFirstMatchIn(txt).get.group(1)
-    def str(k: String) = (s""""$k":"([^"]*)"""").r.findFirstMatchIn(txt).get.group(1)
-    Marker(num("dim").toInt, num("eff").toInt, num("m").toInt,
-      num("ksub").toInt, num("seed").toLong, str("idCol"), str("vecCol"))
-  }
-
-  private def loadQuantizers(spark: SparkSession, out: String, mk: Marker)
-      : (Array[Array[Double]], IndexedSeq[Double]) = {
-    val root = IvfIndex.dataRoot(spark, out)
-    // driver-side parquet reads (r18): quantizer-sized frames — the
-    // r17 collect still cost one Spark JOB each per serving call; the
-    // serving paths are driver-job-count bound, so both loads now run
-    // off the scheduler entirely
-    val conf = spark.sparkContext.hadoopConfiguration
-    val centroids = graft.util.SmallParquet.rows(conf, s"$root/centroids")
-      .sortBy(_.int("i")).map(_.doubleArray("c")).toArray
-    val codebooks = graft.util.SmallParquet.rows(conf, s"$root/codebooks")
-      .sortBy(r => (r.int("s"), r.int("code")))
-      .flatMap(_.doubleArray("c"))
-      .toIndexedSeq
-    (centroids, codebooks)
+  /** `{!knn}` requests serve through the self-contained two-stage path,
+    * which needs the refine sidecar. */
+  protected def serve(spark: SparkSession, out: String, queries: => DataFrame,
+                      k: Int, nprobe: Int, rerank: Int,
+                      allowed: Option[DataFrame]): DataFrame = {
+    require(hasRefineStore(spark, out),
+      s"$out is an IVF-PQ store without a refine sidecar — a " +
+        "{!knn} request needs the self-contained two-stage path " +
+        "(build(refineStore = true)), or use queryRefined with a " +
+        "corpus frame")
+    queryRefinedStored(spark, out, queries, k, rerank, nprobe, allowed)
   }
 
   /** Query the persisted index: bit-identical to `ivfPqTopK` with the
@@ -196,122 +137,73 @@ object IvfPqIndex {
     * and no training runs. */
   def query(spark: SparkSession, out: String, queries: DataFrame, k: Int,
             nprobe: Int = 4): DataFrame =
-    candidateStage(spark, out, queries, k, nprobe, None)._1
+    candidateStage(live(spark, out), queries, k, nprobe, None)._1
 
   /** As [[query]] with a FILTERED-SEARCH id selector (FAISS
     * `IDSelector`): ADC ranking restricts to `allowed` ids (first
-    * column = corpus id) via a semi-join over the probed mass — see
-    * [[IvfIndex.restrictToAllowed]] for the scale shape. */
+    * column = corpus id) via a semi-join over the probed mass. */
   def queryFiltered(spark: SparkSession, out: String, queries: DataFrame,
                     k: Int, allowed: DataFrame,
                     nprobe: Int = 4): DataFrame =
-    candidateStage(spark, out, queries, k, nprobe, Some(allowed))._1
-
-  /** The ADC stage plus the probed cell set it read — the refine paths
-    * reuse the probe set to partition-prune their raw-vector fetch
-    * (candidates can only come from probed cells). */
-  private def candidateStage(spark: SparkSession, out: String,
-                             queries: DataFrame, k: Int, nprobe: Int,
-                             allowed: Option[DataFrame]): (DataFrame, Array[Int]) = {
-    val mk = readMarker(spark, out)
-    val (centroids, codebooks) = loadQuantizers(spark, out, mk)
-    val probes = Similarity.probeIvfPq(queries, centroids, codebooks, mk.dim,
-      mk.m, mk.ksub, nprobe, mk.idCol, mk.vecCol)
-    // probed cells -> partition-pruning literals (bounded: |Q|·nprobe)
-    val probed = probes.select(col("cell")).distinct().collect().map(_.getInt(0))
-    val cells = spark.read.parquet(s"${IvfIndex.dataRoot(spark, out)}/cells")
-      .filter(col("cell").isin(probed.map(Int.box).toIndexedSeq: _*))
-    val searched = IvfIndex.restrictToAllowed(
-      IvfIndex.exceptDeleted(spark, out, cells), allowed)
-    (Similarity.adcRank(searched, probes, k, mk.m, mk.ksub), probed)
-  }
-
-  /** PIN the current generation — [[IvfIndex.pinGeneration]] verbatim
-    * (same store layout, same commit protocol); the pin snapshots the
-    * code cells' file set, the refine sidecar's when present, and the
-    * tombstones. Release with [[IvfIndex.releaseGeneration]]. */
-  def pinGeneration(spark: SparkSession, out: String): Int =
-    IvfIndex.pinGeneration(spark, out)
+    candidateStage(live(spark, out), queries, k, nprobe, Some(allowed))._1
 
   /** Query a PINNED snapshot: ADC over the pin's recorded code-file
     * set under the pinned generation's quantizers, with the pin's
-    * tombstones — bit-for-bit the pin-time ADC answers, whatever
-    * adds/purges/retrains landed since (the reproducible-eval
-    * contract, [[IvfIndex.queryPinned]]'s shape on the PQ tier). The
-    * refine step composes on top when needed: these candidates +
-    * [[queryRefined]]'s external-corpus re-rank (external corpora are
-    * not store state, so the pin has nothing to freeze there). */
+    * tombstones — bit-for-bit the pin-time ADC answers. The refine
+    * step composes on top when needed: these candidates +
+    * [[queryRefined]]'s external-corpus re-rank. */
   def queryPinned(spark: SparkSession, out: String, token: Int,
                   queries: DataFrame, k: Int, nprobe: Int = 4,
-                  allowed: Option[DataFrame] = None): DataFrame = {
-    IvfIndex.requirePin(spark, out, token)
-    val root = IvfIndex.pinnedRootOf(out, token)
-    val txt = graft.util.FsIo.readSmallFile(
-      spark.sparkContext.hadoopConfiguration, markerPath(root))
-    def num(k0: String) = s""""$k0":(-?\\d+)""".r.findFirstMatchIn(txt).get.group(1)
-    def str(k0: String) = (s""""$k0":"([^"]*)"""").r.findFirstMatchIn(txt).get.group(1)
-    val mk = Marker(num("dim").toInt, num("eff").toInt, num("m").toInt,
-      num("ksub").toInt, num("seed").toLong, str("idCol"), str("vecCol"))
-    // driver-side parquet reads (r18): quantizer-sized frames, zero
-    // Spark jobs — see loadQuantizers
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val centroids = graft.util.SmallParquet.rows(hconf, s"$root/centroids")
-      .sortBy(_.int("i")).map(_.doubleArray("c")).toArray
-    val codebooks = graft.util.SmallParquet.rows(hconf, s"$root/codebooks")
-      .sortBy(r => (r.int("s"), r.int("code")))
-      .flatMap(_.doubleArray("c"))
-      .toIndexedSeq
-    val probes = Similarity.probeIvfPq(queries, centroids, codebooks, mk.dim,
-      mk.m, mk.ksub, nprobe, mk.idCol, mk.vecCol)
-    val probed = probes.select(col("cell")).distinct().collect().map(_.getInt(0))
-    val cells = IvfIndex.pinnedSubdirFrame(spark, out, token, "cells")
-      .filter(col("cell").isin(probed.map(Int.box).toIndexedSeq: _*))
-    val searched = IvfIndex.restrictToAllowed(
-      IvfIndex.pinnedTombAnti(spark, out, token)(cells), allowed)
-    Similarity.adcRank(searched, probes, k, mk.m, mk.ksub)
+                  allowed: Option[DataFrame] = None): DataFrame =
+    candidateStage(pinned(spark, out, token), queries, k, nprobe, allowed)._1
+
+  /** The ADC stage plus the probe it ran — the refine paths reuse the
+    * probed cells to partition-prune their raw-vector fetch
+    * (candidates can only come from probed cells) and the localized
+    * query rows for the exact re-rank. */
+  private def candidateStage(v: View, queries: DataFrame, k: Int, nprobe: Int,
+                             allowed: Option[DataFrame]): (DataFrame, Probe) = {
+    val mk = v.marker
+    val (centroids, codebooks) = v.quantizer
+    val p = probe(v, Similarity.pqQueries(queries, mk.idCol, mk.vecCol), nprobe)
+    val tables = Similarity.adcTables(p.byCell, centroids, codebooks, mk.dim,
+      mk.int("m"), mk.int("ksub"))
+    (Similarity.adcRank(v.cells("cells", p.cells, allowed), tables, k,
+      mk.int("m"), mk.int("ksub")), p)
+  }
+
+  /** One execution of the ADC candidate stage: the collected (query,
+    * candidate) pairs re-enter the plan as a LocalRelation and their
+    * distinct ids become the re-rank's pushed fetch predicate. */
+  private def collectedCandidates(v: View, queries: DataFrame, kCandidates: Int,
+                                  nprobe: Int, allowed: Option[DataFrame])
+      : (DataFrame, Seq[Any], Probe) = {
+    val (adc, p) = candidateStage(v, queries, kCandidates, nprobe, allowed)
+    val proj = adc.select(col("query_id"), col("corpus_id"))
+    val rows = proj.collect()
+    (v.spark.createDataFrame(java.util.Arrays.asList(rows: _*), proj.schema),
+      rows.map(_.get(1)).distinct.toSeq, p)
   }
 
   /** Two-stage serving over the persisted store (FAISS
     * `IndexRefineFlat` over an on-disk `IVFPQ` — the production
-    * pattern q295 runs in batch form): `kCandidates` cheap ADC
-    * candidates per query from the code store (probe-pruned,
-    * tombstone-filtered), then an EXACT cosine re-rank over only those
-    * rows. The candidate set is BOUNDED by construction
-    * (≤ |Q|·kCandidates — the same broadcast-small contract as the
-    * probe set), so it is collected once and its ids PUSH into the
-    * raw-vector scan as an `In` source filter: at corpus scale the
-    * re-rank fetch reads only the row groups / index postings holding
-    * candidate ids (DSv2 / parquet filter pushdown, plan-locked in
-    * IvfPqIndexSpec), never the corpus — and the code store still
-    * never holds vectors. `corpus` is wherever the raw vectors live
-    * (the corpus table, a graft-index store surfaced as a DataFrame, a
-    * column store — anything whose scan accepts an id `In` pushdown).
-    * Bit-identical to [[Similarity.ivfPqRefineTopK]] with the build's
-    * parameters. `allowed` composes filtered search into the two-stage
-    * path (FAISS IDSelector over IndexRefineFlat): the ADC candidate
-    * stage restricts to the id set, so the re-rank's pushed id fetch
-    * inherits the restriction for free. */
+    * pattern q295 runs in batch form): `kCandidates` ADC candidates
+    * per query from the code store, then an EXACT cosine re-rank over
+    * only those rows. The bounded candidate ids PUSH into the raw
+    * vector scan of `corpus` (wherever the raw vectors live) as an
+    * `In` source filter — up to `maxPushedIds`; past the cap the
+    * restriction stays in the plan as a broadcast semi-join (the In
+    * literal itself would become the bottleneck). Bit-identical to
+    * [[Similarity.ivfPqRefineTopK]] with the build's parameters;
+    * `allowed` restricts the ADC stage, so the fetch inherits it. */
   def queryRefined(spark: SparkSession, out: String, corpus: DataFrame,
                    queries: DataFrame, k: Int, kCandidates: Int = 20,
                    nprobe: Int = 4,
                    allowed: Option[DataFrame] = None,
                    maxPushedIds: Int = 4096): DataFrame = {
-    val mk = readMarker(spark, out)
-    val cand0 = candidateStage(spark, out, queries, kCandidates, nprobe, allowed)._1
-      .select(col("query_id"), col("corpus_id"))
-    // one execution of the ADC stage: the collected pairs re-enter the
-    // plan as a LocalRelation (broadcast-cheap) and the distinct ids
-    // become the pushed fetch predicate — UP TO maxPushedIds. A large
-    // offline batch (|Q|·kCandidates beyond the cap) would make the
-    // In literal itself the bottleneck (driver memory + Catalyst
-    // analysis cost grow with the id list), so past the cap the
-    // restriction stays IN THE PLAN: the re-rank's broadcast hash join
-    // against the candidate pairs bounds the joined mass — the scan is
-    // no longer id-pruned, the join still is.
-    val candRows = cand0.collect()
-    val cand = spark.createDataFrame(
-      java.util.Arrays.asList(candRows: _*), cand0.schema)
-    val candIds = candRows.map(_.get(1)).distinct.toSeq
+    val v = live(spark, out)
+    val mk = v.marker
+    val (cand, candIds, p) = collectedCandidates(v, queries, kCandidates, nprobe, allowed)
     val fetch =
       if (candIds.size <= maxPushedIds) corpus.filter(col(mk.idCol).isin(candIds: _*))
       else corpus.join(
@@ -321,26 +213,18 @@ object IvfPqIndex {
       .select(col(mk.idCol).as("corpus_id"),
         col(mk.vecCol).cast("array<double>").as("cvec"))
       .withColumn("cnorm", Similarity.norm(col("cvec")))
-    val q = queries.select(col(mk.idCol).as("query_id"),
-        col(mk.vecCol).cast("array<double>").as("qvec"))
-      .withColumn("qnorm", Similarity.norm(col("qvec")))
-    rerank(cand, c, q, k)
+    rerank(cand, c, p, k)
   }
 
   /** Two-stage serving entirely FROM THE STORE — requires
-    * `build(refineStore = true)`'s raw-vector sidecar. Candidates come
-    * from the code cells as in [[queryRefined]]; the exact re-rank
-    * then fetches raw vectors from `vectors/` with the PROBED CELLS
-    * partition-pruned and the candidate ids pushed — at any corpus
-    * size the fetch reads only probed-cell row groups holding
-    * candidates (candidates can only live in probed cells, and the
-    * sidecar shares the code store's cell assignment to the bit), with
-    * no external corpus frame to keep in sync. Tombstoned ids never
-    * reach the fetch (the ADC stage anti-joins them), and
-    * [[purgeDeletes]] physically reclaims sidecar rows alongside the
-    * codes — the redaction contract covers the raw vectors too.
-    * Answers are bit-identical to [[queryRefined]] over the original
-    * corpus frame (IvfPqIndexSpec). */
+    * `build(refineStore = true)`'s raw-vector sidecar. The exact
+    * re-rank fetches from `vectors/` with the PROBED CELLS
+    * partition-pruned (the sidecar shares the code store's cell
+    * assignment to the bit) and the candidate ids pushed while the
+    * literal stays Catalyst-cheap. Tombstoned ids never reach the
+    * fetch (the ADC stage anti-joins them) and purges reclaim sidecar
+    * rows alongside the codes. Answers are bit-identical to
+    * [[queryRefined]] over the original corpus frame. */
   def queryRefinedStored(spark: SparkSession, out: String, queries: DataFrame,
                          k: Int, kCandidates: Int = 20,
                          nprobe: Int = 4,
@@ -349,97 +233,25 @@ object IvfPqIndex {
     require(hasRefineStore(spark, out),
       s"$out has no vectors/ refine sidecar — build(refineStore = true), " +
         "or pass the corpus frame to queryRefined")
-    val mk = readMarker(spark, out)
-    val (cand0, probed) =
-      candidateStage(spark, out, queries, kCandidates, nprobe, allowed)
-    val candProj = cand0.select(col("query_id"), col("corpus_id"))
-    val candRows = candProj.collect()
-    val cand = spark.createDataFrame(
-      java.util.Arrays.asList(candRows: _*), candProj.schema)
-    val candIds = candRows.map(_.get(1)).distinct.toSeq
-    // probed-cell partition pruning ALWAYS applies; the candidate-id
-    // In pushes only while the literal stays Catalyst-cheap (see
-    // queryRefined) — past maxPushedIds the re-rank's broadcast join
-    // carries the id restriction inside the plan instead
-    val sidecar = spark.read.parquet(s"${IvfIndex.dataRoot(spark, out)}/vectors")
-      .filter(col("cell").isin(probed.map(Int.box).toIndexedSeq: _*))
+    val v = live(spark, out)
+    val (cand, candIds, p) = collectedCandidates(v, queries, kCandidates, nprobe, allowed)
+    val sidecar = v.frame("vectors", p.cells)
     val fetch =
-      if (candIds.size <= maxPushedIds)
-        sidecar.filter(col("corpus_id").isin(candIds: _*))
+      if (candIds.size <= maxPushedIds) sidecar.filter(col("corpus_id").isin(candIds: _*))
       else sidecar
-    val c = fetch.select(col("corpus_id"), col("cvec"), col("cnorm"))
-    val q = queries.select(col(mk.idCol).as("query_id"),
-        col(mk.vecCol).cast("array<double>").as("qvec"))
-      .withColumn("qnorm", Similarity.norm(col("qvec")))
-    rerank(cand, c, q, k)
+    rerank(cand, fetch.select(col("corpus_id"), col("cvec"), col("cnorm")), p, k)
   }
 
   /** Exact-cosine re-rank of a bounded candidate set: candidates and
-    * queries broadcast into the (already id-pruned) raw-vector frame,
-    * dense ranks per query. */
-  private def rerank(cand: DataFrame, c: DataFrame, q: DataFrame,
-                     k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    * the localized queries broadcast into the (already id-pruned)
+    * raw-vector frame, dense ranks per query. */
+  private def rerank(cand: DataFrame, c: DataFrame, p: Probe, k: Int): DataFrame = {
     val rescored = c.join(broadcast(cand), Seq("corpus_id"))
-      .join(broadcast(q), Seq("query_id"))
+      .join(broadcast(p.local.select(col("query_id"), col("qvec"), col("qnorm"))),
+        Seq("query_id"))
       .withColumn("cosine", Similarity.dot(col("qvec"), col("cvec")) /
         (col("qnorm") * col("cnorm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    rescored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    CellStore.cut(rescored, "cosine", desc = true, k)
       .select(col("query_id"), col("rank"), col("corpus_id"))
-  }
-
-  /** Delete by id ([[IvfIndex.removeIds]] — identical cells/ layout,
-    * identical tombstone contract: deleted ids never surface, reclaim
-    * via [[purgeDeletes]] or any compaction rewrite). */
-  def removeIds(spark: SparkSession, out: String, ids: DataFrame): Unit =
-    IvfIndex.removeIds(spark, out, ids)
-
-  /** Physically reclaim tombstoned codes ([[IvfIndex.purgeDeletes]]). */
-  def purgeDeletes(spark: SparkSession, out: String): Int =
-    IvfIndex.purgeDeletes(spark, out)
-
-  /** Exactly-once add for a streamed micro-batch ([[IvfIndex.addBatch]]
-    * with PQ encoding — marker-guarded, delete-output-first,
-    * batch-keyed file names; replays are no-ops). */
-  def addBatch(spark: SparkSession, out: String, vectors: DataFrame,
-               batchId: Long, maxFilesPerCell: Int = 8,
-               streamId: String = ""): Boolean = {
-    val mk = readMarker(spark, out)
-    val (centroids, codebooks) = loadQuantizers(spark, out, mk)
-    val full = Similarity.encodeIvfPqFull(vectors, centroids, codebooks,
-      mk.dim, mk.m, mk.ksub, mk.idCol, mk.vecCol)
-    val frames =
-      Seq("cells" -> full.select(col("cell"), col("corpus_id"), col("codes"))) ++
-        (if (hasRefineStore(spark, out))
-          Seq("vectors" -> full.select(col("cell"), col("corpus_id"),
-            col("cvec"), col("cnorm")))
-        else Nil)
-    val applied = IvfIndex.commitEncodedBatch(spark, out, frames, batchId, streamId)
-    if (applied) IvfIndex.compact(spark, out, maxFilesPerCell)
-    applied
-  }
-
-  /** Incremental add against the FROZEN quantizers: encode + append to
-    * the touched cell partitions (and the vectors/ refine sidecar when
-    * the store carries one — same frame, same cell assignment), then
-    * fold any over-budget cell ([[IvfIndex.compact]] — identical
-    * cells/ layout). */
-  def add(spark: SparkSession, out: String, vectors: DataFrame,
-          maxFilesPerCell: Int = 8): Unit = {
-    IvfIndex.recoverStore(spark, out) // never append into a half-swapped cell
-    val mk = readMarker(spark, out)
-    val (centroids, codebooks) = loadQuantizers(spark, out, mk)
-    val full = Similarity.encodeIvfPqFull(vectors, centroids, codebooks,
-      mk.dim, mk.m, mk.ksub, mk.idCol, mk.vecCol)
-    val root = IvfIndex.dataRoot(spark, out)
-    full.select(col("cell"), col("corpus_id"), col("codes"))
-      .write.mode("append").partitionBy("cell").parquet(s"$root/cells")
-    if (hasRefineStore(spark, out))
-      full.select(col("cell"), col("corpus_id"), col("cvec"), col("cnorm"))
-        .write.mode("append").partitionBy("cell").parquet(s"$root/vectors")
-    IvfIndex.compact(spark, out, maxFilesPerCell)
-    ()
   }
 }

@@ -181,7 +181,7 @@ object LateInteraction {
         col("qvec").cast("array<double>"))
       .withColumn("qnorm", Similarity.norm(col("qvec")))
     // driver-side probes over the collected (broadcast-small) query
-    // token batch (r18; see IvfIndex.queryInternal) — one collect,
+    // token batch (r18; see CellStore.probe) — one collect,
     // zero probe jobs, broadcast builds from a LocalRelation
     val qRows = qt0.collect()
     val qvecIdx = qt0.schema.fieldIndex("qvec")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
  * its own IVF layout, so stage 1 reads probed cells only AND touches
  * prefixDim/dim of each row's bytes — the two scale cuts compose.
  *
- * Layout (the [[IvfIndex]] store shape — its tombstone/purge/recover/
- * pin machinery applies verbatim because the subdirs share names):
+ * Layout (the shared [[CellStore]] shape — its tombstone/purge/
+ * recover/pin machinery covers both subdirs):
  *  - `centroids/` — coarse k-means trained ON THE PREFIX SPACE (the
  *    same md5-seeded ordered-sample Lloyd as every tier, over
  *    prefix-sliced sample vectors — the SQ8/binary families' "train
@@ -25,33 +25,54 @@ import org.apache.spark.sql.functions._
  *    mechanism), cell-assigned in lockstep with `cells/`.
  *
  * Query: probe the `nprobe` (neg-cosine)-nearest coarse cells in
- * prefix space — collected (|Q|·nprobe-bounded) and pushed as a
- * PARTITION FILTER (plan-locked in MrlIndexSpec) — rank the probed
- * mass by prefix cosine (zero-prefix rows sentinel to −2.0, below
- * any real cosine — NaN would sort first in Spark and diverge from
- * DuckDB), cut `rerank` candidates, then re-rank exactly from the
- * `vectors/` sidecar with the SAME probed-cell partition pruning
- * (candidates can only live in probed cells) plus a broadcast
- * candidate-id join. Scan term ∝ probed prefix bytes + candidate
- * full rows — never corpus-linear on either stage.
+ * prefix space — driver-side, pushed as a PARTITION FILTER
+ * (plan-locked in MrlIndexSpec) — rank the probed mass by prefix
+ * cosine (zero-prefix rows sentinel to −2.0, below any real cosine —
+ * NaN would sort first in Spark and diverge from DuckDB), cut
+ * `rerank` candidates, then re-rank exactly from the `vectors/`
+ * sidecar with the SAME probed-cell partition pruning (candidates can
+ * only live in probed cells) plus a broadcast candidate-id join. Scan
+ * term ∝ probed prefix bytes + candidate full rows — never
+ * corpus-linear on either stage.
  *
  * Lifecycle: [[add]] appends against the frozen prefix quantizer
  * (sidecar FIRST, then cells — an orphaned sidecar row is never a
  * candidate, while a cells row without its sidecar row would drop a
  * candidate at re-rank; append-only for unique ids, duplicate copies
  * collapse to their best at read like the binary/SQ8 tiers);
- * [[removeIds]]/[[purgeDeletes]] delegate to the [[IvfIndex]]
- * tombstone protocol, whose purge pass already reclaims `vectors/`
- * alongside `cells/`.
+ * [[removeIds]]/[[purgeDeletes]] are the shared tombstone protocol,
+ * whose purge pass reclaims `vectors/` alongside `cells/`.
  */
-object MrlIndex {
+object MrlIndex extends CellStore("_mrl_marker.json", "mrl",
+    subdirs = Seq("cells", "vectors"), quantizerDirs = Seq("centroids")) {
 
-  private def markerPath(out: String) = s"$out/_mrl_marker.json"
+  /** The prefix-space coarse centroids. */
+  type Quantizer = Array[Array[Double]]
 
-  /** Is `out` an MRL store? (tier dispatch). */
-  private[graft] def isMrlStore(spark: SparkSession, out: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(markerPath(out))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  protected def loadQuantizer(conf: org.apache.hadoop.conf.Configuration,
+                              root: String, m: CellMarker): Quantizer =
+    CellStore.centroidsAt(conf, root)
+
+  protected def probeCol = "qpre"
+
+  protected def probeCells(c: Quantizer, nprobe: Int) = CellStore.cosineProbe(c, nprobe)
+
+  override protected def corpusId(c: Column): Column = c.cast("long")
+
+  /** Prefix-space assignment; sidecar FIRST, then cells (the scaladoc's
+    * crash-ordering note). */
+  protected def encode(vectors: DataFrame, m: CellMarker,
+                       centroids: Quantizer): Seq[(String, DataFrame)] = {
+    val prefixDim = m.int("prefixDim")
+    val (_, nearest) = Similarity.cellFns(centroids, prefixDim)
+    val base = vectors.select(col(m.idCol).cast("long").as("corpus_id"),
+        col(m.vecCol).cast("array<double>").as("cvec"))
+      .withColumn("pvec", slice(col("cvec"), 1, prefixDim))
+      .withColumn("pnorm", Similarity.norm(col("pvec")))
+      .withColumn("cnorm", Similarity.norm(col("cvec")))
+      .withColumn("cell", nearest(col("pvec")))
+    Seq("vectors" -> base.select("corpus_id", "cvec", "cnorm", "cell"),
+      "cells" -> base.select("corpus_id", "pvec", "pnorm", "cell"))
   }
 
   /** Train the prefix-space coarse quantizer on the md5-ordered
@@ -61,50 +82,15 @@ object MrlIndex {
             idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     require(prefixDim >= 1 && prefixDim <= dim,
       s"prefixDim must be in [1, $dim], got $prefixDim")
-    val spark = corpus.sparkSession
     val prefixed = corpus.select(col(idCol),
       slice(col(vecCol).cast("array<double>"), 1, prefixDim).as("pvec"))
     val centroids = Similarity.trainCentroids(prefixed, nlist, sampleSize,
       seed, idCol, "pvec")
-    val (_, nearest) = Similarity.cellFns(centroids, prefixDim)
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("i", "c").coalesce(1)
-      .write.mode("overwrite").parquet(s"$out/centroids")
-    val base = corpus.select(col(idCol).cast("long").as("corpus_id"),
-        col(vecCol).cast("array<double>").as("cvec"))
-      .withColumn("pvec", slice(col("cvec"), 1, prefixDim))
-      .withColumn("pnorm", Similarity.norm(col("pvec")))
-      .withColumn("cnorm", Similarity.norm(col("cvec")))
-      .withColumn("cell", nearest(col("pvec")))
-    base.select("corpus_id", "cvec", "cnorm", "cell")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$out/vectors")
-    base.select("corpus_id", "pvec", "pnorm", "cell")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$out/cells")
-    val mk = s"""{"dim":$dim,"prefixDim":$prefixDim,""" +
-      s""""eff":${centroids.length},"seed":$seed,""" +
-      s""""idCol":"$idCol","vecCol":"$vecCol"}"""
-    graft.util.FsIo.writeSmallFile(
-      spark.sparkContext.hadoopConfiguration, markerPath(out), mk)
+    CellStore.writeCentroids(corpus.sparkSession, out, centroids)
+    val m = CellMarker.of("dim" -> dim, "prefixDim" -> prefixDim,
+      "eff" -> centroids.length, "seed" -> seed, "idCol" -> idCol, "vecCol" -> vecCol)
+    commitStore(out, m, encode(corpus, m, centroids))
   }
-
-  private def readMarker(spark: SparkSession, out: String)
-      : (Int, Int, Int, String, String) = {
-    val txt = graft.util.FsIo.readSmallFile(
-      spark.sparkContext.hadoopConfiguration, markerPath(out))
-    def num(k: String) = s""""$k":(-?\\d+)""".r.findFirstMatchIn(txt).get.group(1)
-    def str(k: String) = (s""""$k":"([^"]*)"""").r.findFirstMatchIn(txt).get.group(1)
-    (num("dim").toInt, num("prefixDim").toInt, num("eff").toInt,
-      str("idCol"), str("vecCol"))
-  }
-
-  private def loadCentroids(spark: SparkSession,
-                            out: String): Array[Array[Double]] =
-    // driver-side parquet read (r18): nlist-sized frame, zero Spark
-    // jobs — the serving paths are driver-job-count bound (guide §5)
-    graft.util.SmallParquet.rows(spark.sparkContext.hadoopConfiguration,
-        s"$out/centroids")
-      .sortBy(_.int("i")).map(_.doubleArray("c")).toArray
 
   /** Two-stage serving FROM THE STORE: probe-pruned prefix ranking,
     * exact full-dim re-rank from the sidecar. Output (query_id, rank,
@@ -113,23 +99,7 @@ object MrlIndex {
   def query(spark: SparkSession, out: String, queries: DataFrame,
             k: Int, rerank: Int, nprobe: Int = 4,
             allowed: Option[DataFrame] = None): DataFrame =
-    queryFrom(spark, out, queries, k, rerank, nprobe, allowed,
-      (sub, probed) => spark.read.parquet(s"$out/$sub")
-        .filter(col("cell").isin(probed: _*)),
-      cf => IvfIndex.exceptDeleted(spark, out, cf))
-
-  /** PIN the store's current state — [[IvfIndex.pinSubdirs]] over
-    * BOTH subdirs (prefix cells + refine sidecar; the quantizer is
-    * write-once, adds append new files); [[purgeDeletes]] already
-    * defers while pinned (the shared IvfIndex pass). Release with
-    * [[IvfIndex.releaseGeneration]]. */
-  def pinGeneration(spark: SparkSession, out: String): Int = {
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IvfIndex.recoverSubdirSwap(fs, out, "cells")
-    IvfIndex.recoverSubdirSwap(fs, out, "vectors")
-    IvfIndex.pinSubdirs(spark, out, Seq("cells", "vectors"))
-  }
+    queryAt(live(spark, out), queries, k, rerank, nprobe, allowed)
 
   /** Query a PINNED snapshot: both stages read exactly the pin-time
     * file sets, tombstones are the pin's snapshot — bit-for-bit
@@ -138,205 +108,52 @@ object MrlIndex {
   def queryPinned(spark: SparkSession, out: String, token: Int,
                   queries: DataFrame, k: Int, rerank: Int,
                   nprobe: Int = 4,
-                  allowed: Option[DataFrame] = None): DataFrame = {
-    IvfIndex.requirePin(spark, out, token)
-    queryFrom(spark, out, queries, k, rerank, nprobe, allowed,
-      (sub, probed) => IvfIndex.pinnedSubdirFrame(spark, out, token, sub)
-        .filter(col("cell").isin(probed: _*)),
-      IvfIndex.pinnedTombAnti(spark, out, token))
-  }
+                  allowed: Option[DataFrame] = None): DataFrame =
+    queryAt(pinned(spark, out, token), queries, k, rerank, nprobe, allowed)
 
-  /** The two-stage body with the subdir source and tombstone view
-    * pluggable — live reads above, pinned file sets in
-    * [[queryPinned]]. */
-  private def queryFrom(spark: SparkSession, out: String,
-      queries: DataFrame, k: Int, rerank: Int, nprobe: Int,
-      allowed: Option[DataFrame],
-      subdirOf: (String, IndexedSeq[Integer]) => DataFrame,
-      tombAnti: DataFrame => DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (_, prefixDim, eff, idCol, vecCol) = readMarker(spark, out)
-    val centroids = loadCentroids(spark, out)
-    val q0full = queries.select(col(idCol).cast("long").as("query_id"),
-        col(vecCol).cast("array<double>").as("qvec"))
-      .withColumn("qpre", slice(col("qvec"), 1, prefixDim))
+  private def queryAt(v: View, queries: DataFrame, k: Int, rerank: Int,
+                      nprobe: Int, allowed: Option[DataFrame]): DataFrame = {
+    val m = v.marker
+    val p = probe(v, queries.select(col(m.idCol).cast("long").as("query_id"),
+        col(m.vecCol).cast("array<double>").as("qvec"))
+      .withColumn("qpre", slice(col("qvec"), 1, m.int("prefixDim")))
       .withColumn("qpnorm", Similarity.norm(col("qpre")))
-      .withColumn("qnorm", Similarity.norm(col("qvec")))
-    // driver-side probes over the collected (broadcast-small) query
-    // batch — one collect instead of a probe job, and every broadcast
-    // of the query side downstream builds from a LocalRelation (r18;
-    // see IvfIndex.queryInternal)
-    val qRows = q0full.collect()
-    val qpreIdx = q0full.schema.fieldIndex("qpre")
-    val cnorms = Similarity.centroidNormsLocal(centroids)
-    val probesPer = qRows.map { r =>
-      Similarity.probeCellsLocal(
-        if (r.isNullAt(qpreIdx)) null else r.getSeq[Any](qpreIdx),
-        centroids, cnorms, nprobe)
-    }
-    val q0 = spark.createDataFrame(
-      java.util.Arrays.asList(qRows: _*), q0full.schema)
-    val q = spark.createDataFrame(
-      java.util.Arrays.asList(qRows.zip(probesPer).flatMap { case (r, cs) =>
-        cs.map(c => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ c))
-      }: _*),
-      q0full.schema.add("cell",
-        org.apache.spark.sql.types.IntegerType, nullable = false))
-    val probed = probesPer.flatten.distinct
-    val probedBox = probed.map(Int.box).toIndexedSeq
-    val cand = prefixCandidates(spark, q, rerank, allowed,
-      tombAnti(subdirOf("cells", probedBox)))
+      .withColumn("qnorm", Similarity.norm(col("qvec"))), nprobe)
+    // stage 1: prefix cosine over the probed cells (zero-prefix rows
+    // sentinel to −2.0, below any real cosine)
+    val cand = CellStore.cut(scan(v, "cells", p, allowed, "qpre", "qpnorm")
+        .withColumn("pcos",
+          when(col("qpnorm") === 0d || col("pnorm") === 0d, lit(-2.0))
+            .otherwise(Similarity.dot(col("qpre"), col("pvec")) /
+              (col("qpnorm") * col("pnorm")))),
+      "pcos", desc = true, rerank, collapse = true)
+      .select("query_id", "corpus_id")
     // stage 2: exact full-dim re-rank from the sidecar — the probed
     // cells prune the partition read (candidates only live there),
     // the broadcast candidate join restricts rows inside them
-    val side = subdirOf("vectors", probedBox)
-      .select("corpus_id", "cvec", "cnorm")
-    val rer = side.join(broadcast(cand), Seq("corpus_id"))
-      .join(broadcast(q0.select("query_id", "qvec", "qnorm")),
-        Seq("query_id"))
+    val rer = v.frame("vectors", p.cells).select("corpus_id", "cvec", "cnorm")
+      .join(broadcast(cand), Seq("corpus_id"))
+      .join(broadcast(p.local.select("query_id", "qvec", "qnorm")), Seq("query_id"))
       .withColumn("cosine", Similarity.dot(col("qvec"), col("cvec")) /
         (col("qnorm") * col("cnorm")))
-      // duplicate copies of a re-added id collapse to their best —
-      // the family's read-side discipline
-      .groupBy(col("query_id"), col("corpus_id"))
-      .agg(max(col("cosine")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    rer.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    CellStore.cut(rer, "cosine", desc = true, k, collapse = true)
       .select(col("query_id"), col("rank"), col("corpus_id"))
   }
 
-  /** The prefix-cosine candidate stage — the frame whose PLAN carries
-    * the probed-cell partition filter (plan-locked in MrlIndexSpec).
-    * `cells1` is the already-probed, tombstone-filtered prefix frame. */
-  private[ops] def prefixCandidates(spark: SparkSession,
-      q: DataFrame, rerank: Int,
-      allowed: Option[DataFrame], cells1: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cells = allowed match {
-      case Some(a) => cells1.join(
-        a.select(col(a.columns.head).cast("long").as("corpus_id")),
-        Seq("corpus_id"), "left_semi")
-      case None => cells1
-    }
-    val scored = cells
-      .join(broadcast(q.select("query_id", "qpre", "qpnorm", "cell")),
-        Seq("cell"))
-      .filter(col("query_id") =!= col("corpus_id"))
-      .withColumn("pcos",
-        when(col("qpnorm") === 0d || col("pnorm") === 0d, lit(-2.0))
-          .otherwise(Similarity.dot(col("qpre"), col("pvec")) /
-            (col("qpnorm") * col("pnorm"))))
-      .groupBy(col("query_id"), col("corpus_id"))
-      .agg(max(col("pcos")).as("pcos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("pcos").desc, col("corpus_id").asc)
-    scored.withColumn("r", row_number().over(w))
-      .filter(col("r") <= rerank)
-      .select("query_id", "corpus_id")
-  }
-
-  /** Frozen-quantizer add: assign in PREFIX space against the trained
-    * centroids, append sidecar first, then cells (see the scaladoc's
-    * crash-ordering note). Append-only for unique ids. */
-  def add(spark: SparkSession, out: String, vectors: DataFrame): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IvfIndex.recoverSubdirSwap(fs, out, "cells")
-    IvfIndex.recoverSubdirSwap(fs, out, "vectors")
-    val (_, prefixDim, _, idCol, vecCol) = readMarker(spark, out)
-    val (_, nearest) = Similarity.cellFns(loadCentroids(spark, out), prefixDim)
-    val base = vectors.select(col(idCol).cast("long").as("corpus_id"),
-        col(vecCol).cast("array<double>").as("cvec"))
-      .withColumn("pvec", slice(col("cvec"), 1, prefixDim))
-      .withColumn("pnorm", Similarity.norm(col("pvec")))
-      .withColumn("cnorm", Similarity.norm(col("cvec")))
-      .withColumn("cell", nearest(col("pvec")))
-    base.select("corpus_id", "cvec", "cnorm", "cell")
-      .write.mode("append").partitionBy("cell").parquet(s"$out/vectors")
-    base.select("corpus_id", "pvec", "pnorm", "cell")
-      .write.mode("append").partitionBy("cell").parquet(s"$out/cells")
-  }
-
-  /** Serve PARSED `{!knn}` request vectors (round 17 — the request
-    * surface's tier dispatch, [[graft.ops.HnswIndex.queryVectors]]'s
-    * shape): validates the request field and dims against the
-    * marker, builds the query frame, serves via [[query]]. Output
-    * (query_id, rank, corpus_id). */
-  private[graft] def queryVectors(spark: SparkSession, out: String,
-      vectors: Seq[(Long, Array[Double])], k: Int, rerank: Int,
-      nprobe: Int, allowed: Option[DataFrame],
-      field: Option[String]): DataFrame = {
-    val (dim, _, _, idCol, vecCol) = readMarker(spark, out)
-    field.foreach(f => require(f == vecCol,
-      s"request field '$f' does not match the store's vector column " +
-        s"'$vecCol' ($out)"))
-    vectors.foreach { case (id, v) => require(v.length == dim,
-      s"query $id has dim ${v.length}, store expects $dim") }
-    import spark.implicits._
-    val qdf = vectors.map { case (id, v) => (id, v.toSeq) }
-      .toDF(idCol, vecCol)
-    query(spark, out, qdf, k, rerank, nprobe, allowed)
-  }
-
-  /** Exactly-once add for a streamed micro-batch — the family's
-    * [[IvfIndex.commitEncodedBatch]] protocol over BOTH subdirs in
-    * one marker-committed batch (stream-scoped durable markers,
-    * delete-output-first replay); the ingest sink's marker dispatch
-    * routes here ([[graft.streaming.StreamingIngest.annIngestBatch]]).
-    * Returns true if the batch applied, false on a replay skip. */
-  def addBatch(spark: SparkSession, out: String, vectors: DataFrame,
-               batchId: Long, streamId: String = ""): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IvfIndex.recoverSubdirSwap(fs, out, "cells")
-    IvfIndex.recoverSubdirSwap(fs, out, "vectors")
-    val (_, prefixDim, _, idCol, vecCol) = readMarker(spark, out)
-    val (_, nearest) = Similarity.cellFns(loadCentroids(spark, out), prefixDim)
-    val base = vectors.select(col(idCol).cast("long").as("corpus_id"),
-        col(vecCol).cast("array<double>").as("cvec"))
-      .withColumn("pvec", slice(col("cvec"), 1, prefixDim))
-      .withColumn("pnorm", Similarity.norm(col("pvec")))
-      .withColumn("cnorm", Similarity.norm(col("cvec")))
-      .withColumn("cell", nearest(col("pvec")))
-    IvfIndex.commitEncodedBatch(spark, out, Seq(
-      "vectors" -> base.select(col("cell"), col("corpus_id"),
-        col("cvec"), col("cnorm")),
-      "cells" -> base.select(col("cell"), col("corpus_id"),
-        col("pvec"), col("pnorm"))), batchId, streamId)
-  }
+  protected def serve(spark: SparkSession, out: String, queries: => DataFrame,
+                      k: Int, nprobe: Int, rerank: Int,
+                      allowed: Option[DataFrame]): DataFrame =
+    query(spark, out, queries, k, rerank, nprobe, allowed)
 
   /** Quantization-drift probe in PREFIX space — the retrain trigger
-    * for the frozen prefix quantizer ([[IvfIndex.assignmentDrift]]'s
-    * statistic, read off this store's layout: the stored cohort is
-    * the persisted prefix slices, tombstones excluded; the recent
-    * cohort's vectors slice down to the prefix first). Exact
-    * integer-milli sums, one pass per cohort. */
+    * for the frozen prefix quantizer: the stored cohort is the
+    * persisted prefix slices, the recent cohort's vectors slice down
+    * to the prefix first. */
   def assignmentDrift(spark: SparkSession, out: String,
                       recent: DataFrame): DataFrame = {
-    val (_, prefixDim, _, _, vecCol) = readMarker(spark, out)
-    val (dists, _) = Similarity.cellFns(loadCentroids(spark, out), prefixDim)
-    def cohort(vecs: DataFrame, name: String): DataFrame =
-      vecs.select(round((lit(1.0) + array_min(dists(col("v")))) * 1000)
-          .cast("long").as("dm"))
-        .agg(count(lit(1)).as("n"), sum(col("dm")).as("sum_dist_milli"))
-        .select(lit(name).as("cohort"), col("n"), col("sum_dist_milli"))
-    val stored = IvfIndex.exceptDeleted(spark, out,
-        spark.read.parquet(s"$out/cells"))
-      .select(col("pvec").as("v"))
-    val rec = recent.select(
-      slice(col(vecCol).cast("array<double>"), 1, prefixDim).as("v"))
-    cohort(stored, "store").unionByName(cohort(rec, "recent"))
+    val v = live(spark, out)
+    val prefixDim = v.marker.int("prefixDim")
+    drift(spark, out, v.quantizer, prefixDim, col("pvec"), recent,
+      slice(col(v.marker.vecCol).cast("array<double>"), 1, prefixDim))
   }
-
-  /** Tombstone deletes — [[IvfIndex.removeIds]] verbatim (identical
-    * layout; the anti-join runs in [[query]]'s candidate stage). */
-  def removeIds(spark: SparkSession, out: String, ids: DataFrame): Unit =
-    IvfIndex.removeIds(spark, out, ids)
-
-  /** Physically reclaim tombstoned rows from BOTH subdirs
-    * ([[IvfIndex.purgeDeletes]] — its pass already rewrites
-    * `vectors/` alongside `cells/`). */
-  def purgeDeletes(spark: SparkSession, out: String): Int =
-    IvfIndex.purgeDeletes(spark, out)
 }

@@ -504,14 +504,6 @@ object Similarity {
     sorted.take(math.min(nprobe, d.length))
   }
 
-  /** Materialize a broadcast-small frame as a LocalRelation: same
-    * rows, same schema, but downstream broadcasts build without a scan
-    * job and driver-side collects are free. ONLY for query batches
-    * (broadcast-small by contract). */
-  private[ops] def localized(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(df.collect(): _*), df.schema)
-
   /** Centroid norms exactly as [[graft.functions.CentroidNegCosines]]
     * precomputes them (left-to-right sum of squares, then sqrt). */
   private[ops] def centroidNormsLocal(centroids: Array[Array[Double]]): Array[Double] =
@@ -882,18 +874,32 @@ object Similarity {
                               codebooks: IndexedSeq[Double], dim: Int, m: Int,
                               ksub: Int, nprobe: Int,
                               idCol: String, vecCol: String): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val eff = centroids.length
     val (dists, _) = cellFns(centroids, dim)
-    val cellsDf = centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "ccent")
+    adcTables(pqQueries(queries, idCol, vecCol).withColumn("cell",
+        explode(probeCells(dists(col("nq")), centroids.length, nprobe))),
+      centroids, codebooks, dim, m, ksub)
+  }
+
+  /** The IVF-PQ query frame: (query_id, qvec, qnorm) plus `nq`, the
+    * normalized vector both the coarse probe and the residual tables
+    * read. */
+  private[ops] def pqQueries(queries: DataFrame, idCol: String,
+                             vecCol: String): DataFrame =
     queries.select(col(idCol).as("query_id"),
         col(vecCol).cast("array<double>").as("qvec"))
       .withColumn("qnorm", norm(col("qvec")))
       .withColumn("nq", transform(col("qvec"), x => x / col("qnorm")))
-      .withColumn("cell", explode(probeCells(dists(col("nq")), eff, nprobe)))
-      .join(broadcast(cellsDf), Seq("cell"))
+
+  /** Per probed (query, cell) row of a [[pqQueries]] frame with a
+    * `cell` column: the residual ADC lookup table. */
+  private[ops] def adcTables(probed: DataFrame, centroids: Array[Array[Double]],
+                             codebooks: IndexedSeq[Double], dim: Int, m: Int,
+                             ksub: Int): DataFrame = {
+    val spark = probed.sparkSession
+    import spark.implicits._
+    val cellsDf = centroids.zipWithIndex
+      .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "ccent")
+    probed.join(broadcast(cellsDf), Seq("cell"))
       .withColumn("qtable", graft.functions.PqKernels.pq_adc_table(
         zip_with(col("nq"), col("ccent"), (a, b) => a - b), codebooks, m, ksub, dim))
       .select(col("cell"), col("query_id"), col("qtable"))

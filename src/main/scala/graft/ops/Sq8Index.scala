@@ -37,23 +37,31 @@ import org.apache.spark.sql.functions._
  * ulp-drift), cut `rerank` candidates, and re-rank exactly over raw
  * vectors fetched candidate-bounded ([[BinaryQuant.rerankExact]]).
  *
- * Lifecycle: [[add]] appends against the frozen quantizers (the FAISS
- * `add` contract — append-only for unique ids, duplicates collapse at
- * read time like the binary tier); [[removeIds]]/[[purgeDeletes]] are
- * the family tombstone protocol; rebuild via [[build]] on drift
- * ([[assignmentDrift]] measures — the SQ8-aware probe; the IvfIndex
- * one reads `_ivf_marker.json` and cannot serve this store).
+ * Lifecycle: the shared [[CellStore]] over `codes/` — [[add]] appends
+ * against the frozen quantizers (the FAISS `add` contract —
+ * append-only for unique ids, duplicates collapse at read time like
+ * the binary tier), tombstone deletes, purge, pins; rebuild via
+ * [[build]] on drift ([[assignmentDrift]] measures, in this store's
+ * dequantized space).
  */
-object Sq8Index {
+object Sq8Index extends CellStore("_sq8_marker.json", "sq8",
+    subdirs = Seq("codes"), quantizerDirs = Seq("centroids", "scalar")) {
 
-  private def markerPath(out: String) = s"$out/_sq8_marker.json"
-  private def deletesPath(out: String) = s"$out/deletes"
+  /** (coarse centroids, per-dim vmin, per-dim vdiff) */
+  type Quantizer = (Array[Array[Double]], Array[Double], Array[Double])
 
-  /** Is `out` an SQ8 store? (tier dispatch). */
-  private[graft] def isSq8Store(spark: SparkSession, out: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(markerPath(out))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  protected def loadQuantizer(conf: org.apache.hadoop.conf.Configuration,
+                              root: String, m: CellMarker): Quantizer = {
+    val sc = graft.util.SmallParquet.rows(conf, s"$root/scalar").sortBy(_.int("j"))
+    (CellStore.centroidsAt(conf, root), sc.map(_.double("vmin")).toArray,
+      sc.map(_.double("vdiff")).toArray)
   }
+
+  protected def probeCol = "qvec"
+
+  protected def probeCells(q: Quantizer, nprobe: Int) = CellStore.cosineProbe(q._1, nprobe)
+
+  override protected def corpusId(c: Column): Column = c.cast("long")
 
   /** code_j = clamp(round((v_j − vmin_j)/vdiff_j · 255), 0, 255) —
     * pure column arithmetic (whole-stage codegen; the float ops are
@@ -85,6 +93,18 @@ object Sq8Index {
   private def unit(vec: Column, n: Column): Column =
     transform(vec, x => when(n === 0d, 0d).otherwise(x / n))
 
+  protected def encode(vectors: DataFrame, m: CellMarker,
+                       q: Quantizer): Seq[(String, DataFrame)] = {
+    val (centroids, vmin, vdiff) = q
+    val (_, nearest) = Similarity.cellFns(centroids, m.dim)
+    Seq("codes" -> vectors.select(col(m.idCol).cast("long").as("corpus_id"),
+        col(m.vecCol).cast("array<double>").as("cvec"))
+      .withColumn("cn", Similarity.norm(col("cvec")))
+      .withColumn("qc", quantize(unit(col("cvec"), col("cn")), vmin, vdiff))
+      .withColumn("cell", nearest(col("cvec")))
+      .select("corpus_id", "qc", "cell"))
+  }
+
   /** Train both quantizers on the md5-ordered sample and persist the
     * cell-partitioned code store. */
   def build(corpus: DataFrame, out: String, dim: Int,
@@ -93,7 +113,6 @@ object Sq8Index {
     val spark = corpus.sparkSession
     val centroids = Similarity.trainCentroids(corpus, nlist, sampleSize,
       seed, idCol, vecCol)
-    val (_, nearest) = Similarity.cellFns(centroids, dim)
     // per-dim min/max over the SAME ordered sample the coarse trainer
     // used (FAISS trains both quantizers on one train() call's data),
     // NORMALIZED — the scalar quantizer codes unit vectors
@@ -112,51 +131,16 @@ object Sq8Index {
     val vdiff = Array.tabulate(dim)(j =>
       sample.iterator.map(_(j)).max - vmin(j))
     import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("i", "c").coalesce(1)
-      .write.mode("overwrite").parquet(s"$out/centroids")
+    CellStore.writeCentroids(spark, out, centroids)
     (0 until dim).map(j => (j, vmin(j), vdiff(j)))
       .toDF("j", "vmin", "vdiff").coalesce(1)
       .write.mode("overwrite").parquet(s"$out/scalar")
-    corpus.select(col(idCol).cast("long").as("corpus_id"),
-        col(vecCol).cast("array<double>").as("cvec"))
-      .withColumn("cn", Similarity.norm(col("cvec")))
-      .withColumn("qc", quantize(unit(col("cvec"), col("cn")), vmin, vdiff))
-      .withColumn("cell", nearest(col("cvec")))
-      .select("corpus_id", "qc", "cell")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$out/codes")
-    val mk = s"""{"dim":$dim,"eff":${centroids.length},"seed":$seed,""" +
-      s""""idCol":"$idCol","vecCol":"$vecCol"}"""
-    graft.util.FsIo.writeSmallFile(
-      spark.sparkContext.hadoopConfiguration, markerPath(out), mk)
+    val m = CellMarker.of("dim" -> dim, "eff" -> centroids.length,
+      "seed" -> seed, "idCol" -> idCol, "vecCol" -> vecCol)
+    commitStore(out, m, encode(corpus, m, (centroids, vmin, vdiff)))
   }
 
-  private def readMarker(spark: SparkSession, out: String)
-      : (Int, Int, String, String) = {
-    val txt = graft.util.FsIo.readSmallFile(
-      spark.sparkContext.hadoopConfiguration, markerPath(out))
-    def num(k: String) = s""""$k":(-?\\d+)""".r.findFirstMatchIn(txt).get.group(1)
-    def str(k: String) = (s""""$k":"([^"]*)"""").r.findFirstMatchIn(txt).get.group(1)
-    (num("dim").toInt, num("eff").toInt, str("idCol"), str("vecCol"))
-  }
-
-  private def loadQuantizers(spark: SparkSession, out: String)
-      : (Array[Array[Double]], Array[Double], Array[Double]) = {
-    // driver-side parquet reads (r18): both frames are quantizer-sized
-    // (nlist rows / dim rows) — the r17 collects still cost one Spark
-    // JOB each per serving call; the serving paths are driver-job-count
-    // bound (guide §5), so the loads now run off the scheduler entirely
-    val conf = spark.sparkContext.hadoopConfiguration
-    val centroids = graft.util.SmallParquet.rows(conf, s"$out/centroids")
-      .sortBy(_.int("i")).map(_.doubleArray("c")).toArray
-    val sc = graft.util.SmallParquet.rows(conf, s"$out/scalar")
-      .sortBy(_.int("j"))
-    (centroids,
-      sc.map(_.double("vmin")).toArray,
-      sc.map(_.double("vdiff")).toArray)
-  }
-
-  /** Serve from the store: probe-pruned partition read, integer-dot
+  /** Serve from the store: probe-pruned partition read, integer-L2
     * candidate cut, exact-cosine re-rank over the external `corpus`
     * frame (candidate-bounded fetch). Output (query_id, rank,
     * corpus_id) — the family shape. `allowed` (first column = id) is
@@ -164,123 +148,8 @@ object Sq8Index {
   def query(spark: SparkSession, out: String, queries: DataFrame,
             corpus: DataFrame, k: Int, rerank: Int, nprobe: Int = 4,
             pushLimit: Int = 4096,
-            allowed: Option[DataFrame] = None): DataFrame = {
-    // marker + quantizers load ONCE per call and thread through the
-    // candidate stage (r17 optimization: the old shape re-read both
-    // tiny frames inside sq8CandidatesFrom — two extra driver jobs on
-    // every serving call)
-    val mk@(dim, eff, idCol, vecCol) = readMarker(spark, out)
-    val qz@(centroids, vmin, vdiff) = loadQuantizers(spark, out)
-    // localized: the candidate stage's probe collect and BOTH
-    // broadcast builds (candidate join, exact re-rank) read a
-    // LocalRelation — no per-call query-side scan jobs (r18)
-    val q0 = Similarity.localized(
-      queries.select(col(idCol).cast("long").as("query_id"),
-          col(vecCol).cast("array<double>").as("qvec"))
-        .withColumn("qn", Similarity.norm(col("qvec")))
-        .withColumn("qqc", quantize(unit(col("qvec"), col("qn")), vmin, vdiff))
-        .drop("qn"))
-    val cand = sq8CandidatesFrom(spark, out, q0, rerank, nprobe, allowed,
-      probed => spark.read.parquet(s"$out/codes")
-        .filter(col("cell").isin(probed.map(Int.box).toIndexedSeq: _*)),
-      cf => deletes(spark, out) match {
-        case Some(d) =>
-          AnnTombstones.check(spark, "sq8", out,
-            AnnTombstones.countOf(spark, out)(d.count()))
-          cf.join(broadcast(d.select("corpus_id")),
-            Seq("corpus_id"), "left_anti")
-        case None => cf
-      }, loaded = Some((mk, qz)))
-    BinaryQuant.rerankExact(spark, cand, corpus, q0, k, idCol, vecCol,
-      pushLimit)
-  }
-
-  /** The integer-dot candidate stage — the frame whose PLAN carries
-    * the probed-cell partition filter (plan-locked in Sq8IndexSpec).
-    * `q0` carries (query_id, qvec, qqc). */
-  private[ops] def sq8Candidates(spark: SparkSession, out: String,
-      q0: DataFrame, rerank: Int, nprobe: Int,
-      allowed: Option[DataFrame] = None): DataFrame =
-    sq8CandidatesFrom(spark, out, q0, rerank, nprobe, allowed,
-      probed => spark.read.parquet(s"$out/codes")
-        .filter(col("cell").isin(probed.map(Int.box).toIndexedSeq: _*)),
-      cf => deletes(spark, out) match {
-        case Some(d) =>
-          AnnTombstones.check(spark, "sq8", out,
-            AnnTombstones.countOf(spark, out)(d.count()))
-          cf.join(broadcast(d.select("corpus_id")),
-            Seq("corpus_id"), "left_anti")
-        case None => cf
-      })
-
-  /** The candidate body with the codes source and tombstone view
-    * pluggable — live reads above, the pinned file set + pin-time
-    * tombstone snapshot in [[queryPinned]]. */
-  private def sq8CandidatesFrom(spark: SparkSession, out: String,
-      q0: DataFrame, rerank: Int, nprobe: Int,
-      allowed: Option[DataFrame],
-      codesOf: Array[Int] => DataFrame,
-      tombAnti: DataFrame => DataFrame,
-      loaded: Option[((Int, Int, String, String),
-        (Array[Array[Double]], Array[Double], Array[Double]))] = None)
-      : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (dim, eff, _, _) = loaded.map(_._1)
-      .getOrElse(readMarker(spark, out))
-    val (centroids, _, _) = loaded.map(_._2)
-      .getOrElse(loadQuantizers(spark, out))
-    // driver-side probes over the collected (broadcast-small) query
-    // batch (r18; see IvfIndex.queryInternal) — the collect is free
-    // when the caller already localized q0
-    val qRows = q0.collect()
-    val qvecIdx = q0.schema.fieldIndex("qvec")
-    val cnorms = Similarity.centroidNormsLocal(centroids)
-    val probesPer = qRows.map { r =>
-      Similarity.probeCellsLocal(
-        if (r.isNullAt(qvecIdx)) null else r.getSeq[Any](qvecIdx),
-        centroids, cnorms, nprobe)
-    }
-    val q = spark.createDataFrame(
-      java.util.Arrays.asList(qRows.zip(probesPer).flatMap { case (r, cs) =>
-        cs.map(c => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ c))
-      }: _*),
-      q0.schema.add("cell",
-        org.apache.spark.sql.types.IntegerType, nullable = false))
-    val probed = probesPer.flatten.distinct
-    val codes1 = tombAnti(codesOf(probed))
-    val codes = allowed match {
-      case Some(a) => codes1.join(
-        a.select(col(a.columns.head).cast("long").as("corpus_id")),
-        Seq("corpus_id"), "left_semi")
-      case None => codes1
-    }
-    val scored = codes
-      .join(broadcast(q.select("query_id", "qqc", "cell")), Seq("cell"))
-      .filter(col("query_id") =!= col("corpus_id"))
-      .withColumn("d2", intL2(col("qqc"), col("qc")))
-      // duplicate copies of a re-added id collapse to their best
-      // (nearest) copy — the binary tier's read-side discipline
-      .groupBy(col("query_id"), col("corpus_id"))
-      .agg(min(col("d2")).as("d2"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("d2").asc, col("corpus_id").asc)
-    scored.withColumn("r", row_number().over(w))
-      .filter(col("r") <= rerank)
-      .select("query_id", "corpus_id")
-  }
-
-  /** PIN the store's current state (round 17 — [[IvfIndex
-    * .pinGeneration]]'s file-list shape over `codes/`: this tier's
-    * quantizers are write-once and adds append NEW files, so the
-    * recorded file set + the materialized tombstone snapshot is the
-    * complete pin; [[purgeDeletes]] DEFERS while the pin lives).
-    * Returns the snapshot token. Release with
-    * [[IvfIndex.releaseGeneration]]. */
-  def pinGeneration(spark: SparkSession, out: String): Int = {
-    IvfIndex.recoverSubdirSwap(new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration), out, "codes")
-    IvfIndex.pinSubdirs(spark, out, Seq("codes"))
-  }
+            allowed: Option[DataFrame] = None): DataFrame =
+    queryAt(live(spark, out), queries, corpus, k, rerank, nprobe, pushLimit, allowed)
 
   /** Query a PINNED snapshot: exactly the file set and tombstone view
     * of pin time — bit-for-bit pin-time answers whatever add/remove/
@@ -288,142 +157,62 @@ object Sq8Index {
   def queryPinned(spark: SparkSession, out: String, token: Int,
                   queries: DataFrame, corpus: DataFrame, k: Int,
                   rerank: Int, nprobe: Int = 4, pushLimit: Int = 4096,
-                  allowed: Option[DataFrame] = None): DataFrame = {
-    IvfIndex.requirePin(spark, out, token)
-    val mk@(_, _, idCol, vecCol) = readMarker(spark, out)
-    val qz@(_, vmin, vdiff) = loadQuantizers(spark, out)
-    val q0 = Similarity.localized(
-      queries.select(col(idCol).cast("long").as("query_id"),
-          col(vecCol).cast("array<double>").as("qvec"))
-        .withColumn("qn", Similarity.norm(col("qvec")))
-        .withColumn("qqc", quantize(unit(col("qvec"), col("qn")), vmin, vdiff))
-        .drop("qn"))
-    val cand = sq8CandidatesFrom(spark, out, q0, rerank, nprobe, allowed,
-      probed => IvfIndex.pinnedSubdirFrame(spark, out, token, "codes")
-        .filter(col("cell").isin(probed.map(Int.box).toIndexedSeq: _*)),
-      IvfIndex.pinnedTombAnti(spark, out, token), loaded = Some((mk, qz)))
-    BinaryQuant.rerankExact(spark, cand, corpus, q0, k, idCol, vecCol,
-      pushLimit)
+                  allowed: Option[DataFrame] = None): DataFrame =
+    queryAt(pinned(spark, out, token), queries, corpus, k, rerank, nprobe,
+      pushLimit, allowed)
+
+  private def queryAt(v: View, queries: DataFrame, corpus: DataFrame, k: Int,
+                      rerank: Int, nprobe: Int, pushLimit: Int,
+                      allowed: Option[DataFrame]): DataFrame = {
+    val m = v.marker
+    val (_, vmin, vdiff) = v.quantizer
+    val p = probe(v, queries.select(col(m.idCol).cast("long").as("query_id"),
+        col(m.vecCol).cast("array<double>").as("qvec"))
+      .withColumn("qn", Similarity.norm(col("qvec")))
+      .withColumn("qqc", quantize(unit(col("qvec"), col("qn")), vmin, vdiff))
+      .drop("qn"), nprobe)
+    BinaryQuant.rerankExact(v.spark, candidatesOf(v, p, rerank, allowed), corpus,
+      p.local, k, m.idCol, m.vecCol, pushLimit)
   }
 
-  /** Frozen-quantizer add (FAISS `IndexIVFScalarQuantizer::add`):
-    * quantize under the TRAINED (offset, scale) and coarse centroids,
-    * append to the touched cell partitions only. Append-only for
-    * unique ids — the binary tier's contract and read-side duplicate
-    * collapse; retrain = [[build]]. */
-  def add(spark: SparkSession, out: String, vectors: DataFrame): Unit = {
-    IvfIndex.recoverSubdirSwap(new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration), out, "codes")
-    val (dim, _, idCol, vecCol) = readMarker(spark, out)
-    val (centroids, vmin, vdiff) = loadQuantizers(spark, out)
-    val (_, nearest) = Similarity.cellFns(centroids, dim)
-    vectors.select(col(idCol).cast("long").as("corpus_id"),
-        col(vecCol).cast("array<double>").as("cvec"))
-      .withColumn("cn", Similarity.norm(col("cvec")))
-      .withColumn("qc", quantize(unit(col("cvec"), col("cn")), vmin, vdiff))
-      .withColumn("cell", nearest(col("cvec")))
-      .select("corpus_id", "qc", "cell")
-      .write.mode("append").partitionBy("cell").parquet(s"$out/codes")
+  /** The integer-L2 candidate stage — the frame whose PLAN carries
+    * the probed-cell partition filter (plan-locked in Sq8IndexSpec).
+    * `q0` carries (query_id, qvec, qqc). */
+  private[ops] def candidates(spark: SparkSession, out: String,
+      q0: DataFrame, rerank: Int, nprobe: Int,
+      allowed: Option[DataFrame] = None): DataFrame = {
+    val v = live(spark, out)
+    candidatesOf(v, probe(v, q0, nprobe), rerank, allowed)
   }
 
-  /** Exactly-once add for a streamed micro-batch — the
-    * [[IvfIndex.addBatch]] protocol (stream-scoped durable markers,
-    * delete-output-first replay, stage-then-move into batch-keyed
-    * cell files) with SQ8 encoding; the [[graft.streaming
-    * .StreamingIngest.annIngestBatch]] dispatcher routes here on the
-    * SQ8 marker. Returns true if the batch applied, false on a
-    * replay skip. Like [[add]]: append-only for unique ids. */
-  def addBatch(spark: SparkSession, out: String, vectors: DataFrame,
-               batchId: Long, streamId: String = ""): Boolean = {
-    // never append into a half-swapped codes dir (crashed purge)
-    IvfIndex.recoverSubdirSwap(new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration), out, "codes")
-    val (dim, _, idCol, vecCol) = readMarker(spark, out)
-    val (centroids, vmin, vdiff) = loadQuantizers(spark, out)
-    val (_, nearest) = Similarity.cellFns(centroids, dim)
-    val encoded = vectors.select(col(idCol).cast("long").as("corpus_id"),
-        col(vecCol).cast("array<double>").as("cvec"))
-      .withColumn("cn", Similarity.norm(col("cvec")))
-      .withColumn("qc", quantize(unit(col("cvec"), col("cn")), vmin, vdiff))
-      .withColumn("cell", nearest(col("cvec")))
-      .select("corpus_id", "qc", "cell")
-    IvfIndex.commitEncodedBatch(spark, out, Seq("codes" -> encoded),
-      batchId, streamId)
-  }
+  private def candidatesOf(v: View, p: Probe, rerank: Int,
+                           allowed: Option[DataFrame]): DataFrame =
+    CellStore.cut(scan(v, "codes", p, allowed, "qqc")
+        .withColumn("d2", intL2(col("qqc"), col("qc"))),
+      "d2", desc = false, rerank, collapse = true)
+      .select("query_id", "corpus_id")
 
-  /** Quantization-drift probe for the SQ8 tier — the retrain trigger
-    * [[IvfIndex.assignmentDrift]] provides for the raw tier, re-read
-    * off THIS store's layout (the `_sq8_marker.json` dispatch; calling
-    * the IVF probe on an SQ8 path throws on the marker regex): the
-    * stored cohort DEQUANTIZES the codes (dec_j = vmin_j +
+  protected def serve(spark: SparkSession, out: String, queries: => DataFrame,
+                      k: Int, nprobe: Int, rerank: Int,
+                      allowed: Option[DataFrame]): DataFrame = codesOnly(out)
+
+  /** Quantization-drift probe for the SQ8 tier, read off the store AS
+    * SERVED: the stored cohort DEQUANTIZES the codes (dec_j = vmin_j +
     * qc_j/255·vdiff_j — the unit-vector reconstruction; cosine is
-    * scale-invariant, so the decoded vectors assign exactly like the
-    * normalized originals up to quantization error, which is the
-    * point — the statistic measures the store AS SERVED), the recent
-    * cohort uses its raw vectors. Same exact integer-milli statistic
-    * as the raw tier (`round((1 − cos_nearest)·1000)` summed), so it
-    * hash-oracles (q336). Tombstones excluded; duplicate copies of a
-    * re-added id each count (they are all live code rows the probe
-    * would serve candidates from). One pass per cohort, centroids
-    * broadcast — corpus scale never shuffles. */
+    * scale-invariant), the recent cohort uses its raw vectors. Same
+    * exact integer-milli statistic as the raw tier, so it hash-oracles
+    * (q336). Duplicate copies of a re-added id each count. */
   def assignmentDrift(spark: SparkSession, out: String,
                       recent: DataFrame): DataFrame = {
-    val (dim, _, _, vecCol) = readMarker(spark, out)
-    val (centroids, vmin, vdiff) = loadQuantizers(spark, out)
-    val (dists, _) = Similarity.cellFns(centroids, dim)
-    def cohort(vecs: DataFrame, name: String): DataFrame =
-      vecs.select(round((lit(1.0) + array_min(dists(col("v")))) * 1000)
-          .cast("long").as("dm"))
-        .agg(count(lit(1)).as("n"), sum(col("dm")).as("sum_dist_milli"))
-        .select(lit(name).as("cohort"), col("n"), col("sum_dist_milli"))
+    val v = live(spark, out)
+    val (centroids, vmin, vdiff) = v.quantizer
     val vminC = typedlit(vmin.toSeq)
     val vdiffC = typedlit(vdiff.toSeq)
-    val codes0 = spark.read.parquet(s"$out/codes")
-    val live = deletes(spark, out) match {
-      case Some(dels) => codes0.join(broadcast(dels.select("corpus_id")),
-        Seq("corpus_id"), "left_anti")
-      case None => codes0
-    }
-    val stored = live.select(transform(col("qc"), (c, j) => {
+    val decoded = transform(col("qc"), (c, j) => {
       val jj = (j + lit(1)).cast("int")
-      element_at(vminC, jj) +
-        c.cast("double") / 255d * element_at(vdiffC, jj)
-    }).as("v"))
-    val rec = recent.select(col(vecCol).cast("array<double>").as("v"))
-    cohort(stored, "store").unionByName(cohort(rec, "recent"))
-  }
-
-  private def deletes(spark: SparkSession, out: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(deletesPath(out))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
-
-  /** Tombstone deletes (the family protocol; count marker-cached). */
-  def removeIds(spark: SparkSession, out: String, ids: DataFrame): Unit = {
-    ids.select(col(ids.columns.head).cast("long").as("corpus_id"))
-      .filter(col("corpus_id").isNotNull).distinct()
-      .coalesce(1).write.mode("append").parquet(deletesPath(out))
-    AnnTombstones.recordRemoval(spark, out,
-      spark.read.parquet(deletesPath(out)).count())
-  }
-
-  /** Physically reclaim tombstoned codes (the crash-safe
-    * [[IvfIndex.purgeSubdir]] swap over `codes/`). Returns cells
-    * purged. */
-  def purgeDeletes(spark: SparkSession, out: String): Int = {
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IvfIndex.recoverSubdirSwap(fs, out, "codes")
-    // a pin addresses the very files this rewrite would delete —
-    // DEFER (deletes stay logically applied via the anti-join)
-    if (IvfIndex.pins(fs, out).contains(IvfIndex.generation(fs, out)))
-      return 0
-    val dels = deletes(spark, out).getOrElse(return 0)
-    val purged = IvfIndex.purgeSubdir(spark, fs, out, "codes", dels,
-      targetFileBytes = 256L << 20)
-    fs.delete(new org.apache.hadoop.fs.Path(deletesPath(out)), true)
-    AnnTombstones.clearCount(spark, out)
-    purged
+      element_at(vminC, jj) + c.cast("double") / 255d * element_at(vdiffC, jj)
+    })
+    drift(spark, out, centroids, v.marker.dim, decoded, recent,
+      col(v.marker.vecCol).cast("array<double>"))
   }
 }

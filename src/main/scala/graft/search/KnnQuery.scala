@@ -134,39 +134,19 @@ object KnnQuery {
     val vecs = parsed.map { case (id, r) => (id, r.vector.toArray) }
     val fld = Some(fields.head)
     // TIER DISPATCH by store marker (round 17 — one request string,
-    // any SELF-CONTAINED persisted tier): HNSW (graph walk), MRL
-    // (prefix probe + sidecar re-rank), IVF-PQ with refine sidecar
-    // (ADC + sidecar re-rank), raw IVF (probe + exact). The SQ8 and
-    // binary tiers hold codes only — their exact re-rank needs the
-    // caller's corpus frame (Graft.querySq8Index /
-    // queryBinaryIvfIndex), so a {!knn} request cannot serve them and
-    // says so.
+    // any SELF-CONTAINED persisted tier): HNSW (graph walk), else the
+    // cell-store registry — MRL (prefix probe + sidecar re-rank),
+    // IVF-PQ with refine sidecar (ADC + sidecar re-rank), raw IVF
+    // (probe + exact). The SQ8 and binary tiers hold codes only —
+    // their exact re-rank needs the caller's corpus frame
+    // (Graft.querySq8Index / queryBinaryIvfIndex), so their codecs
+    // refuse a {!knn} request and say so; an unknown path is refused.
     if (graft.ops.HnswIndex.isHnswStore(spark, store))
       graft.ops.HnswIndex.queryVectors(spark, store, vecs,
         k = topKs.head, efSearch = efSearch, allowed = allowed,
         field = fld)
-    else if (graft.ops.MrlIndex.isMrlStore(spark, store))
-      graft.ops.MrlIndex.queryVectors(spark, store, vecs,
-        k = topKs.head, rerank = rerank, nprobe = nprobe,
-        allowed = allowed, field = fld)
-    else if (graft.ops.IvfPqIndex.isPqStore(spark, store)) {
-      require(graft.ops.IvfPqIndex.hasRefineStore(spark, store),
-        s"$store is an IVF-PQ store without a refine sidecar — a " +
-          "{!knn} request needs the self-contained two-stage path " +
-          "(build(refineStore = true)), or use queryRefined with a " +
-          "corpus frame")
-      graft.ops.IvfPqIndex.queryVectors(spark, store, vecs,
-        k = topKs.head, kCandidates = rerank, nprobe = nprobe,
-        allowed = allowed, field = fld)
-    } else if (graft.ops.IvfIndex.isIvfStore(spark, store))
-      graft.ops.IvfIndex.queryVectors(spark, store, vecs,
-        k = topKs.head, nprobe = nprobe, allowed = allowed, field = fld)
-    else if (graft.ops.Sq8Index.isSq8Store(spark, store) ||
-        graft.ops.BinaryQuant.isBinaryIvfStore(spark, store))
-      throw new IllegalArgumentException(
-        s"$store holds quantized codes only — its exact re-rank needs " +
-          "the caller's corpus frame; use Graft.querySq8Index / " +
-          "queryBinaryIvfIndex instead of a {!knn} request")
-    else sys.error(s"$store carries no known ANN-store marker")
+    else graft.ops.CellStore(spark, store).queryVectors(spark, store, vecs,
+      k = topKs.head, nprobe = nprobe, rerank = rerank, allowed = allowed,
+      field = fld)
   }
 }

@@ -97,7 +97,7 @@ object StreamingIngest {
    * fresh — [[graft.ops.IvfIndex.removeIds]] follows the deletes.
    *
    * Exactly-once under replay: each micro-batch applies through
-   * [[graft.ops.IvfIndex.addBatch]] — an `_ann_batch_<stream>_<id>`
+   * [[graft.ops.CellStore.addBatch]] — an `_ann_batch_<stream>_<id>`
    * marker skips a batch that already fully applied, and a batch that
    * crashed mid-append reruns delete-output-first against its own
    * batch-keyed cell files, so a Structured-Streaming retry never
@@ -126,12 +126,13 @@ object StreamingIngest {
 
   /** ONE micro-batch of the ANN ingest sink — the tier DISPATCH
     * itself, factored out so the lifecycle fuzz can drive the public
-    * seam (marker routing) directly: the IVF-PQ store shares the
-    * cells/ layout but encodes to codes; an HNSW store takes the
-    * batch into its DELTA tier (Lucene NRT — appending to the graph
-    * itself would be insertion-order-dependent), folding past
-    * `hnswFoldThreshold` rows. Returns true if the batch applied,
-    * false on a replay skip. */
+    * seam (marker routing) directly: an HNSW store takes the batch
+    * into its DELTA tier (Lucene NRT — appending to the graph itself
+    * would be insertion-order-dependent), folding past
+    * `hnswFoldThreshold` rows; every cell store (IVF, IVF-PQ, SQ8,
+    * MRL, binary IVF) takes the shared exactly-once batch of its
+    * registry codec; any other path is refused by name. Returns true
+    * if the batch applied, false on a replay skip. */
   def annIngestBatch(spark: org.apache.spark.sql.SparkSession,
                      store: String, batch: DataFrame, batchId: Long,
                      streamId: String, maxFilesPerCell: Int = 8,
@@ -139,16 +140,8 @@ object StreamingIngest {
     if (graft.ops.HnswIndex.isHnswStore(spark, store))
       graft.ops.HnswIndex.addBatchDelta(spark, store, batch, batchId,
         streamId, hnswFoldThreshold)
-    else if (graft.ops.Sq8Index.isSq8Store(spark, store))
-      graft.ops.Sq8Index.addBatch(spark, store, batch, batchId, streamId)
-    else if (graft.ops.MrlIndex.isMrlStore(spark, store))
-      graft.ops.MrlIndex.addBatch(spark, store, batch, batchId, streamId)
-    else if (graft.ops.IvfPqIndex.isPqStore(spark, store))
-      graft.ops.IvfPqIndex.addBatch(spark, store, batch, batchId,
-        maxFilesPerCell, streamId)
-    else
-      graft.ops.IvfIndex.addBatch(spark, store, batch, batchId,
-        maxFilesPerCell, streamId)
+    else graft.ops.CellStore(spark, store).addBatch(spark, store, batch,
+      batchId, maxFilesPerCell, streamId)
 
   /**
    * Streaming exact dedup with BOUNDED state:

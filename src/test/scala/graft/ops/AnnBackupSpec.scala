@@ -80,14 +80,31 @@ class AnnBackupSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("annbak_bq_").toString
     val src = s"$root/src"; val bak = s"$root/bak"
     val evens = emb.filter(col("vec_id") % 2 === 0)
-    BinaryQuant.buildIvfStore(evens, src, dim = 64, nlist = 4)
+    BinaryIvfIndex.build(evens, src, dim = 64, nlist = 4)
     val queries = emb.filter(col("vec_id") < 6)
-    def q(o: String) = rows(BinaryQuant.queryIvfStore(spark, o, queries,
+    def q(o: String) = rows(BinaryIvfIndex.query(spark, o, queries,
       evens, k = 5, rerank = 32, nprobe = 4))
     val atBackup = q(src)
     assert(AnnBackup.backup(spark, src, bak) > 0)
-    BinaryQuant.addToIvfStore(spark, src,
+    BinaryIvfIndex.add(spark, src,
       emb.filter(col("vec_id") % 2 === 1))
     assert(q(bak) === atBackup, "binary backup diverged")
+  }
+
+  test("an HNSW store is refused before it is touched: its live pin " +
+      "keeps serving pin-time answers and no backup appears") {
+    val root = java.nio.file.Files.createTempDirectory("annbak_hnsw_").toString
+    val src = s"$root/src"; val bak = s"$root/bak"
+    HnswIndex.build(emb.filter(col("vec_id") < 200), src, dim = 64, shards = 2)
+    val queries = emb.filter(col("vec_id") < 6)
+    val tok = HnswIndex.pinSnapshot(spark, src)
+    val atPin = rows(HnswIndex.queryPinned(spark, src, tok, queries, k = 5))
+    intercept[IllegalArgumentException] {
+      graft.Graft.backupAnnStore(spark, src, bak)
+    }
+    assert(rows(HnswIndex.queryPinned(spark, src, tok, queries, k = 5)) === atPin,
+      "the refused backup disturbed the live HNSW pin")
+    assert(!new java.io.File(bak).exists(), "a refused backup left a destination")
+    HnswIndex.releaseSnapshot(spark, src, tok)
   }
 }

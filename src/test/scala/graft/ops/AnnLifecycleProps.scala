@@ -11,10 +11,11 @@ import org.scalacheck.Prop.forAll
  * mutation protocols the example-based specs lock pointwise: random
  * interleavings of add / streamed-batch / remove / purge / fold /
  * retrain / reclaim / PIN / CRASH-RECOVER against the persisted tiers
- * ([[HnswIndex]], [[IvfIndex]], and [[BinaryQuant]]'s bucketed
- * store), each sequence ending in an
- * EXACT query compared against brute force over an independently
- * maintained model of the live set.
+ * ([[HnswIndex]] and all five [[CellStore]] codecs — [[IvfIndex]],
+ * [[BinaryIvfIndex]], and through one shared arm [[IvfPqIndex]] with
+ * its refine sidecar, [[Sq8Index]] and [[MrlIndex]]), each sequence
+ * ending in an EXACT query compared against brute force over an
+ * independently maintained model of the live set.
  *
  * ROUND 16 — the compares go through the PUBLIC REQUEST SURFACES, not
  * the ops internals: the HNSW arm's streamed batches dispatch through
@@ -55,7 +56,7 @@ import org.scalacheck.Prop.forAll
  */
 object AnnLifecycleProps extends Properties("ann-lifecycle") {
 
-  // 20 sequences per tier x 3 tiers = 60 total, each 3-5 ops + exact
+  // 20 sequences per tier x 6 tiers = 120 total, each 3-5 ops + exact
   // compare. r18: was 55/tier — the suite's single largest block (8.4
   // of the full run's ~22 minutes on the r18 box) and the reason the
   // r17 driver's test gate hit its window (VERIFY_r17 tests_ok:false
@@ -236,7 +237,7 @@ object AnnLifecycleProps extends Properties("ann-lifecycle") {
   private def bqAdd(out: String, m: Model, seed: Int, v: Int): Unit = {
     val ids = addIds(seed, v).filterNot(m.tombs.contains)
     if (ids.nonEmpty) {
-      BinaryQuant.addToIvfStore(spark, out,
+      BinaryIvfIndex.add(spark, out,
         df(ids.map(id => (id, vecOf(id, v + 1)))))
       ids.foreach(id => m.rows(id) = vecOf(id, v + 1))
     }
@@ -252,7 +253,7 @@ object AnnLifecycleProps extends Properties("ann-lifecycle") {
     var pinTok: Option[Int] = None
     var pinnedVis: Map[Long, Seq[Double]] = Map.empty
     var ok = true
-    BinaryQuant.buildIvfStore(df(m.rows.toSeq), out, dim = Dim, nlist = 4)
+    BinaryIvfIndex.build(df(m.rows.toSeq), out, dim = Dim, nlist = 4)
     ops.zipWithIndex.foreach { case (op, v) =>
       op match {
         // binary IVF has ONE add path: Add and Stream both append
@@ -260,11 +261,11 @@ object AnnLifecycleProps extends Properties("ann-lifecycle") {
         case Stream(seed) => bqAdd(out, m, seed, v)
         case Remove(seed) =>
           val ids = removeIds(seed)
-          BinaryQuant.removeIdsFromIvfStore(spark, out,
+          BinaryIvfIndex.removeIds(spark, out,
             df(ids.map(id => (id, Seq.empty[Double]))).select("vec_id"))
           m.tombs ++= ids
         case Purge | Rebuild =>
-          BinaryQuant.purgeIvfDeletes(spark, out)
+          BinaryIvfIndex.purgeDeletes(spark, out)
           // a pin on the current generation DEFERS the physical purge
           // — observable: the tombstone dir survives
           if (!hadoopFs(out).exists(
@@ -272,7 +273,7 @@ object AnnLifecycleProps extends Properties("ann-lifecycle") {
             m.purge()
         case PinNow =>
           if (pinTok.isEmpty) {
-            pinTok = Some(BinaryQuant.pinIvfGeneration(spark, out))
+            pinTok = Some(BinaryIvfIndex.pinGeneration(spark, out))
             pinnedVis = m.visible
           }
         case CrashRecover =>
@@ -297,7 +298,7 @@ object AnnLifecycleProps extends Properties("ann-lifecycle") {
               fs.delete(new org.apache.hadoop.fs.Path(
                 s"$out/codes/cell=$cell"), true)
             }
-            BinaryQuant.purgeIvfDeletes(spark, out)
+            BinaryIvfIndex.purgeDeletes(spark, out)
             if (!fs.exists(new org.apache.hadoop.fs.Path(s"$out/deletes")))
               m.purge()
           }
@@ -318,7 +319,7 @@ object AnnLifecycleProps extends Properties("ann-lifecycle") {
       // the binary store holds CODES only — the pinned read takes the
       // pin-time corpus frame for its exact re-rank (the caller-kept
       // snapshot; the store-side pin freezes codes + tombstones)
-      val pinGot = BinaryQuant.queryIvfStorePinned(spark, out, t,
+      val pinGot = BinaryIvfIndex.queryPinned(spark, out, t,
           queries, df(pinnedVis.toSeq), k = 5, rerank = 64, nprobe = 8)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
         .sorted.toSeq
@@ -443,4 +444,162 @@ object AnnLifecycleProps extends Properties("ann-lifecycle") {
     }
     ok
   }
+
+  private def triples(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, Long)] =
+    df.select("query_id", "rank", "corpus_id")
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+      .sorted.toSeq
+
+  /** One codec under the shared cell-store arm. `reAdds`: adds may
+    * re-add a stored id (the codes tiers re-rank against the caller's
+    * corpus frame, so the model's latest vector is the truth);
+    * otherwise adds are appends of unstored ids only. `rebuild`
+    * returns true when it folds the tombstones in (a retrain).
+    * `pinTruth` is captured at pin time, `pinned` read at the end. */
+  private final case class CellTier(
+      codec: CellStore, reAdds: Boolean,
+      build: (org.apache.spark.sql.DataFrame, String) => Unit,
+      rebuild: String => Boolean,
+      query: (String, Map[Long, Seq[Double]]) => Seq[(Long, Int, Long)],
+      pinTruth: (String, Map[Long, Seq[Double]]) => Seq[(Long, Int, Long)],
+      pinned: (String, Int, Map[Long, Seq[Double]]) => Seq[(Long, Int, Long)])
+
+  /** The shared arm: every op goes through the lifecycle the codec
+    * inherits; streams dispatch through the public ingest seam. */
+  private def cellLifecycle(t: CellTier)(ops: List[Op]): Boolean = {
+    val name = t.codec.getClass.getSimpleName.stripSuffix("$")
+    val out = java.nio.file.Files.createTempDirectory(s"fuzz_$name").toString
+    val m = new Model
+    t.build(df(m.rows.toSeq), out)
+    var batch = 0L
+    var pinTok: Option[Int] = None
+    var pinnedVis: Map[Long, Seq[Double]] = Map.empty
+    var pinWant: Seq[(Long, Int, Long)] = Nil
+    var ok = true
+    def purged(): Unit =
+      if (!hadoopFs(out).exists(new org.apache.hadoop.fs.Path(s"$out/deletes")))
+        m.purge()
+    def addable(seed: Int, v: Int): Seq[Long] = addIds(seed, v)
+      .filterNot(m.tombs.contains).filter(id => t.reAdds || !m.rows.contains(id))
+    ops.zipWithIndex.foreach { case (op, v) =>
+      op match {
+        case Add(seed) =>
+          val ids = addable(seed, v)
+          if (ids.nonEmpty) {
+            t.codec.add(spark, out, df(ids.map(id => (id, vecOf(id, v + 1)))))
+            ids.foreach(id => m.rows(id) = vecOf(id, v + 1))
+          }
+        case Stream(seed) =>
+          val ids = addable(seed, v)
+          if (ids.nonEmpty) {
+            assert(graft.streaming.StreamingIngest.annIngestBatch(spark, out,
+              df(ids.map(id => (id, vecOf(id, v + 1)))), batch, streamId = "fuzz"))
+            assert(!graft.streaming.StreamingIngest.annIngestBatch(spark, out,
+              df(ids.map(id => (id, vecOf(id, 99)))), batch, streamId = "fuzz"))
+            batch += 1
+            ids.foreach(id => m.rows(id) = vecOf(id, v + 1))
+          }
+        case Remove(seed) =>
+          val ids = removeIds(seed)
+          t.codec.removeIds(spark, out,
+            df(ids.map(id => (id, Seq.empty[Double]))).select("vec_id"))
+          m.tombs ++= ids
+        case Purge =>
+          t.codec.purgeDeletes(spark, out)
+          purged() // a pin on the current generation defers the purge
+        case Rebuild =>
+          if (t.rebuild(out)) m.purge()
+        case PinNow =>
+          if (pinTok.isEmpty) {
+            pinTok = Some(t.codec.pinGeneration(spark, out))
+            pinnedVis = m.visible
+            pinWant = t.pinTruth(out, m.visible)
+          }
+        case CrashRecover =>
+          // the mid-purge-swap crash on the primary subdir, then the
+          // real purge (skipped while pinned, as in the arms above)
+          val fs = hadoopFs(out)
+          val stored = m.tombs.filter(m.rows.contains)
+          if (stored.nonEmpty && pinTok.isEmpty) {
+            val base = t.codec.dataRoot(spark, out)
+            val sub = t.codec.subdirs.head
+            val all = spark.read.parquet(s"$base/$sub")
+            val victims = df(stored.toSeq.map(id => (id, Seq.empty[Double])))
+              .select(col("vec_id").as("corpus_id"))
+            val touched = all.join(victims, Seq("corpus_id"), "left_semi")
+              .select("cell").orderBy("cell").limit(1).collect()
+            if (touched.nonEmpty) {
+              val cell = touched.head.getInt(0)
+              all.filter(col("cell") === cell)
+                .join(victims, Seq("corpus_id"), "left_anti")
+                .write.mode("overwrite").partitionBy("cell")
+                .parquet(s"$base/.purge_tmp_$sub")
+              fs.delete(new org.apache.hadoop.fs.Path(s"$base/$sub/cell=$cell"), true)
+            }
+            t.codec.purgeDeletes(spark, out)
+            purged()
+          }
+      }
+    }
+    val got = t.query(out, m.rows.toMap)
+    val want = bruteTruth(m.visible)
+    if (got != want) {
+      println(s"$name fuzz diverged on ops=$ops\n got=$got\nwant=$want")
+      ok = false
+    }
+    pinTok.foreach { tok =>
+      val pinGot = t.pinned(out, tok, pinnedVis)
+      if (pinGot != pinWant) {
+        println(s"$name PIN diverged on ops=$ops\n got=$pinGot\nwant=$pinWant")
+        ok = false
+      }
+      t.codec.releaseGeneration(spark, out, tok)
+    }
+    ok
+  }
+
+  property("ivf-pq (refine sidecar): random lifecycle interleavings " +
+      "(facade-dispatched streams, retrain, pin/unpin) stay exact vs " +
+      "brute force through the two-stage store path; the pinned ADC " +
+      "answer is the pin-time one") = forAll(seqGen)(cellLifecycle(CellTier(
+    IvfPqIndex, reAdds = false,
+    build = (c, o) => IvfPqIndex.build(c, o, dim = Dim, nlist = 4, m = 2,
+      ksub = 4, refineStore = true),
+    rebuild = o => {
+      IvfPqIndex.retrain(spark, o)
+      IvfPqIndex.reclaimGenerations(spark, o, retain = 1)
+      true // retrain folds tombstones in and clears them
+    },
+    query = (o, _) => triples(IvfPqIndex.queryRefinedStored(spark, o, queries,
+      k = 5, kCandidates = 64, nprobe = 8)),
+    pinTruth = (o, _) => triples(IvfPqIndex.query(spark, o, queries, k = 5,
+      nprobe = 8)),
+    pinned = (o, tok, _) => triples(IvfPqIndex.queryPinned(spark, o, tok,
+      queries, k = 5, nprobe = 8)))))
+
+  property("sq8: random add/remove/purge/compact/crash interleavings " +
+      "(re-adds included, facade-dispatched streams, pin/unpin) stay " +
+      "exact vs brute force (full probe + corpus-wide rerank)") =
+    forAll(seqGen)(cellLifecycle(CellTier(
+      Sq8Index, reAdds = true,
+      build = (c, o) => Sq8Index.build(c, o, dim = Dim, nlist = 4),
+      rebuild = o => { Sq8Index.compact(spark, o, maxFilesPerCell = 1); false },
+      query = (o, rows) => triples(Sq8Index.query(spark, o, queries,
+        df(rows.toSeq), k = 5, rerank = 64, nprobe = 8)),
+      pinTruth = (_, vis) => bruteTruth(vis),
+      pinned = (o, tok, vis) => triples(Sq8Index.queryPinned(spark, o, tok,
+        queries, df(vis.toSeq), k = 5, rerank = 64, nprobe = 8)))))
+
+  property("mrl: random add/remove/purge/compact/crash interleavings " +
+      "(facade-dispatched streams, pin/unpin) stay exact vs brute force " +
+      "(full probe + corpus-wide prefix cut, sidecar re-rank)") =
+    forAll(seqGen)(cellLifecycle(CellTier(
+      MrlIndex, reAdds = false,
+      build = (c, o) => MrlIndex.build(c, o, dim = Dim, prefixDim = 4, nlist = 4),
+      rebuild = o => { MrlIndex.compact(spark, o, maxFilesPerCell = 1); false },
+      query = (o, _) => triples(MrlIndex.query(spark, o, queries, k = 5,
+        rerank = 64, nprobe = 8)),
+      pinTruth = (_, vis) => bruteTruth(vis),
+      pinned = (o, tok, _) => triples(MrlIndex.queryPinned(spark, o, tok,
+        queries, k = 5, rerank = 64, nprobe = 8)))))
 }

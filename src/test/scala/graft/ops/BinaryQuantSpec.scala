@@ -108,14 +108,14 @@ class BinaryQuantSpec extends AnyFunSuite {
   test("bucketed IVF store: probe scan reads ONLY the probed cell " +
       "partitions (partition filter on the plan)") {
     val store = java.nio.file.Files.createTempDirectory("bqivf_").toString
-    BinaryQuant.buildIvfStore(emb, store, dim = 64, nlist = 8)
+    BinaryIvfIndex.build(emb, store, dim = 64, nlist = 8)
     // the candidate stage is the frame that reads the store (the
     // re-rank collects it eagerly, so the pruning proof lives here)
     val q0 = emb.filter(col("vec_id") === 3)
       .select(col("vec_id").cast("long").as("query_id"),
         col("embedding").cast("array<double>").as("qvec"))
       .withColumn("qcode", BinaryQuant.packSigns(col("qvec"), 64))
-    val df = BinaryQuant.ivfCandidates(spark, store, q0,
+    val df = BinaryIvfIndex.candidates(spark, store, q0,
       rerank = 16, nprobe = 2)
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.FileSourceScanExec
@@ -140,19 +140,19 @@ class BinaryQuantSpec extends AnyFunSuite {
       "tier's answer (probing every cell makes the candidate pool " +
       "identical), and the build is deterministic") {
     val store = java.nio.file.Files.createTempDirectory("bqivf_full_").toString
-    BinaryQuant.buildIvfStore(emb, store, dim = 64, nlist = 8)
+    BinaryIvfIndex.build(emb, store, dim = 64, nlist = 8)
     val queries = emb.filter(col("vec_id") < 10)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .sorted.toSeq
-    val bucketed = rows(BinaryQuant.queryIvfStore(spark, store, queries,
+    val bucketed = rows(BinaryIvfIndex.query(spark, store, queries,
       emb, k = 5, rerank = 32, nprobe = 8))
     val flat = rows(BinaryQuant.binaryTopK(emb, queries, k = 5,
       rerank = 32, dim = 64))
     assert(bucketed === flat, "full-probe bucketed diverged from flat")
     // deterministic build: same corpus -> identical centroids + cells
     val again = java.nio.file.Files.createTempDirectory("bqivf_again_").toString
-    BinaryQuant.buildIvfStore(emb.repartition(7), again, dim = 64, nlist = 8)
+    BinaryIvfIndex.build(emb.repartition(7), again, dim = 64, nlist = 8)
     def cents(o: String) = spark.read.parquet(s"$o/centroids")
       .collect().map(r => (r.getInt(0), r.getSeq[Long](1).mkString(",")))
       .sorted.toSeq
@@ -169,25 +169,25 @@ class BinaryQuantSpec extends AnyFunSuite {
     val store = java.nio.file.Files.createTempDirectory("bqivf_life_").toString
     val evens = emb.filter(col("vec_id") % 2 === 0)
     val odds = emb.filter(col("vec_id") % 2 === 1)
-    BinaryQuant.buildIvfStore(evens, store, dim = 64, nlist = 8)
+    BinaryIvfIndex.build(evens, store, dim = 64, nlist = 8)
     val queries = emb.filter(col("vec_id") < 6)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .sorted.toSeq
-    val before = rows(BinaryQuant.queryIvfStore(spark, store, queries,
+    val before = rows(BinaryIvfIndex.query(spark, store, queries,
       evens, k = 5, rerank = 16, nprobe = 8))
-    BinaryQuant.addToIvfStore(spark, store, odds)
+    BinaryIvfIndex.add(spark, store, odds)
     // full-probe answers over the union still contain no surprises:
     // evens-only ranks are reproduced when odds are filtered out
-    val filteredBack = rows(BinaryQuant.queryIvfStoreFiltered(spark, store,
+    val filteredBack = rows(BinaryIvfIndex.queryFiltered(spark, store,
       queries, emb, k = 5, rerank = 16,
       allowed = evens.select("vec_id"), nprobe = 8))
     assert(filteredBack === before,
       "frozen add changed the original cohort's answers")
     // tombstones hide instantly
     val victims = emb.filter(col("vec_id") % 7 === 1).select("vec_id")
-    BinaryQuant.removeIdsFromIvfStore(spark, store, victims)
-    val afterDel = rows(BinaryQuant.queryIvfStore(spark, store, queries,
+    BinaryIvfIndex.removeIds(spark, store, victims)
+    val afterDel = rows(BinaryIvfIndex.query(spark, store, queries,
       emb, k = 5, rerank = 16, nprobe = 8))
     assert(afterDel.forall(_._3 % 7 != 1), "a tombstoned code surfaced")
     // fabricate the mid-purge-swap crash, then purge: recovery first
@@ -203,12 +203,12 @@ class BinaryQuantSpec extends AnyFunSuite {
       .parquet(s"$store/.purge_tmp_codes")
     fs.delete(new org.apache.hadoop.fs.Path(
       s"$store/codes/cell=$crashCell"), true)
-    assert(BinaryQuant.purgeIvfDeletes(spark, store) > 0)
+    assert(BinaryIvfIndex.purgeDeletes(spark, store) > 0)
     val after = spark.read.parquet(s"$store/codes")
     assert(after.join(vic, Seq("corpus_id"), "left_semi").count() === 0)
     assert(after.count() ===
       emb.count() - emb.filter(col("vec_id") % 7 === 1).count())
-    assert(rows(BinaryQuant.queryIvfStore(spark, store, queries, emb,
+    assert(rows(BinaryIvfIndex.query(spark, store, queries, emb,
       k = 5, rerank = 16, nprobe = 8)) === afterDel,
     "purge changed the served answers")
   }
@@ -218,19 +218,19 @@ class BinaryQuantSpec extends AnyFunSuite {
       "copy, so a duplicate never displaces a distinct neighbor") {
     val store = java.nio.file.Files.createTempDirectory("bqivf_dup_").toString
     val base = emb.filter(col("vec_id") < 40)
-    BinaryQuant.buildIvfStore(base, store, dim = 64, nlist = 4)
+    BinaryIvfIndex.build(base, store, dim = 64, nlist = 4)
     // re-add ids 10..14 with NEGATED vectors — the add contract is
     // append-only, so both copies now sit in the code store (possibly
     // in different cells)
     val readded = base.filter(col("vec_id") >= 10 && col("vec_id") < 15)
       .select(col("vec_id"), transform(col("embedding")
         .cast("array<double>"), x => x * lit(-1.0)).as("embedding"))
-    BinaryQuant.addToIvfStore(spark, store, readded)
+    BinaryIvfIndex.add(spark, store, readded)
     val dupIds = spark.read.parquet(s"$store/codes")
       .groupBy("corpus_id").count().filter(col("count") > 1).count()
     assert(dupIds === 5L, "append-only add did not append")
     val queries = emb.filter(col("vec_id") < 3)
-    val got = BinaryQuant.queryIvfStore(spark, store, queries, base,
+    val got = BinaryIvfIndex.query(spark, store, queries, base,
         k = 5, rerank = 40, nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getLong(2)))
     // no (query, corpus) pair twice, and every query still fills k
@@ -248,30 +248,30 @@ class BinaryQuantSpec extends AnyFunSuite {
     val store = java.nio.file.Files.createTempDirectory("bqivf_pin_").toString
     val evens = emb.filter(col("vec_id") % 2 === 0)
     val odds = emb.filter(col("vec_id") % 2 === 1)
-    BinaryQuant.buildIvfStore(evens, store, dim = 64, nlist = 4)
-    BinaryQuant.removeIdsFromIvfStore(spark, store,
+    BinaryIvfIndex.build(evens, store, dim = 64, nlist = 4)
+    BinaryIvfIndex.removeIds(spark, store,
       emb.filter(col("vec_id") % 5 === 2).select("vec_id"))
-    val tok = BinaryQuant.pinIvfGeneration(spark, store)
+    val tok = BinaryIvfIndex.pinGeneration(spark, store)
     assert(tok === 0)
     val queries = emb.filter(col("vec_id") < 6)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .sorted.toSeq
-    val atPin = rows(BinaryQuant.queryIvfStore(spark, store, queries,
+    val atPin = rows(BinaryIvfIndex.query(spark, store, queries,
       emb, k = 5, rerank = 32, nprobe = 4))
-    BinaryQuant.addToIvfStore(spark, store, odds)
-    BinaryQuant.removeIdsFromIvfStore(spark, store,
+    BinaryIvfIndex.add(spark, store, odds)
+    BinaryIvfIndex.removeIds(spark, store,
       emb.filter(col("vec_id") % 3 === 0).select("vec_id"))
-    assert(BinaryQuant.purgeIvfDeletes(spark, store) === 0,
+    assert(BinaryIvfIndex.purgeDeletes(spark, store) === 0,
       "purge must defer while its generation is pinned")
-    assert(rows(BinaryQuant.queryIvfStorePinned(spark, store, tok,
+    assert(rows(BinaryIvfIndex.queryPinned(spark, store, tok,
         queries, emb, k = 5, rerank = 32, nprobe = 4)) === atPin,
       "pinned query diverged from pin-time answers")
     IvfIndex.releaseGeneration(spark, store, tok)
-    assert(BinaryQuant.purgeIvfDeletes(spark, store) > 0,
+    assert(BinaryIvfIndex.purgeDeletes(spark, store) > 0,
       "release must re-enable the purge")
     intercept[IllegalArgumentException] {
-      BinaryQuant.queryIvfStorePinned(spark, store, tok, queries, emb,
+      BinaryIvfIndex.queryPinned(spark, store, tok, queries, emb,
         k = 5, rerank = 32, nprobe = 4)
     }
   }

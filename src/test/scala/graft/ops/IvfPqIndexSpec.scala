@@ -384,4 +384,17 @@ class IvfPqIndexSpec extends AnyFunSuite {
     assert(IvfIndex.reclaimGenerations(spark, out, retain = 1) >= 1)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$out/g1")))
   }
+
+  test("IVF-PQ retrain clears the tombstone-count cache with the " +
+      "tombstones it folds in") {
+    import spark.implicits._
+    val out = java.nio.file.Files.createTempDirectory("ivfpq_tombcount_").toString
+    IvfPqIndex.build(emb.filter(col("vec_id") < 200), out, dim = 64,
+      refineStore = true)
+    IvfPqIndex.removeIds(spark, out, Seq(3L, 7L).toDF("vec_id"))
+    assert(AnnTombstones.cachedCount(spark, out) === Some(2L))
+    assert(IvfPqIndex.retrain(spark, out) === 1)
+    assert(AnnTombstones.cachedCount(spark, out) === None,
+      "retrain left a stale _tombcount behind")
+  }
 }

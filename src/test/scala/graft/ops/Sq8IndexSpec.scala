@@ -26,7 +26,7 @@ class Sq8IndexSpec extends AnyFunSuite {
         col("embedding").cast("array<double>").as("qvec"))
       // any int codes do for a PLAN-shape assertion
       .withColumn("qqc", transform(sequence(lit(0), lit(63)), _ => lit(0)))
-    val df = Sq8Index.sq8Candidates(spark, store, q0, rerank = 16, nprobe = 2)
+    val df = Sq8Index.candidates(spark, store, q0, rerank = 16, nprobe = 2)
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec

@@ -212,4 +212,23 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(after.groupBy("corpus_id").count()
       .filter(col("count") > 1).count() === 0)
   }
+
+  test("ANN ingest routes a binary-IVF store through the shared " +
+      "exactly-once batch (a replay is a no-op) and refuses an unknown " +
+      "path by name") {
+    import graft.ops.BinaryIvfIndex
+    val emb = Tables.embeddings(spark, TestSpark.sf)
+    val o = java.nio.file.Files.createTempDirectory("ann_bqivf_").toString
+    BinaryIvfIndex.build(emb.filter(col("vec_id") < 150), o, dim = 64, nlist = 4)
+    val adds = emb.filter(col("vec_id") >= 150 && col("vec_id") < 190)
+    assert(StreamingIngest.annIngestBatch(spark, o, adds, 0L, "bq") === true)
+    assert(spark.read.parquet(s"$o/codes").count() === 190)
+    assert(StreamingIngest.annIngestBatch(spark, o, adds, 0L, "bq") === false)
+    assert(spark.read.parquet(s"$o/codes").count() === 190,
+      "a replayed batch re-applied")
+    val bare = java.nio.file.Files.createTempDirectory("ann_nomarker_").toString
+    val e = intercept[IllegalArgumentException](
+      StreamingIngest.annIngestBatch(spark, bare, adds, 0L, "bq"))
+    assert(e.getMessage.contains(bare))
+  }
 }
