@@ -4,19 +4,24 @@ import org.apache.spark.sql.SparkSessionExtensions
 
 /**
  * Session extensions — registered via
- * `.config("spark.sql.extensions", "graft.GraftExtensions")` (all of
- * [[GraftSession]], [[Bench]], [[Verify]] and the test session do).
+ * `.config("spark.sql.extensions", "graft.GraftExtensions")` by
+ * [[GraftSession]], which every graft session is built through.
  *
- * Currently one rule: [[graft.index.TermFilterPushdown]], which routes
+ * Rules: [[graft.index.TermFilterPushdown]], which routes
  * `array_contains(multivaluedField, lit)` filters over graft-index
- * relations into posting-list lookups. Every rule here is a pure
- * optimization — plans produced without the extension return the same
- * rows (the rules only re-route work into the index), so a foreign
- * session reading the same stores stays correct.
+ * relations into posting-list lookups, and [[graft.ops.LocalBroadcast]],
+ * which broadcasts driver-held rows without a job. Both are pure
+ * optimizations — plans produced without them return the same rows.
+ *
+ * One planner strategy, [[graft.ops.PerQueryTopKStrategy]], plans the
+ * per-query top-n node the cell-store ANN queries end in; a session
+ * without this extension cannot run those queries.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => graft.index.TermFilterPushdown)
+    ext.injectPlannerStrategy(_ => graft.ops.PerQueryTopKStrategy)
+    ext.injectQueryStagePrepRule(_ => graft.ops.LocalBroadcast)
     // graft_term_match(text, term) — analyzed-term membership under
     // the index-time analyzer, SQL-callable (the DataFrame form is
     // graft.functions.TermMatch.graft_term_match, registry-free)

@@ -4,7 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /**
  * Tuned session factory: the knobs every graft deployment needs, in
- * one place. Local runs size shuffle partitions to cores; cluster
+ * one place — every graft main and the test session build through
+ * [[builder]], so they share one configuration, [[GraftExtensions]]
+ * included (the cell-store ANN queries cannot be planned without
+ * it). Local runs size shuffle partitions to cores; cluster
  * deployments should size them to data volume (aim ~128-256MB per
  * shuffle partition) — AQE coalesces the excess either way.
  */

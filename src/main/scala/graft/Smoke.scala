@@ -1,17 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke driver: runs the flagship `SparkEntry.entry` the way the
   * round driver does (rows>0 check) and prints the shard counts. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     df.show(20, false)

@@ -39,6 +39,32 @@ object PqKernels {
   def pq_adc_table(vec: Column, codebooks: Seq[Double], m: Int, ksub: Int,
                    dim: Int): Column =
     GraftColumns.of(PqAdcTable(GraftColumns.expr(vec), codebooks, m, ksub, dim))
+
+  /** The `pq_adc_table` kernel on a plain vector of length `dim` — the
+    * driver-side form, the same fold as the expression's. */
+  def adcTable(v: Array[Double], cb: Array[Double], m: Int, ksub: Int,
+               dim: Int): Array[Double] = {
+    val dsub = dim / m
+    val out = new Array[Double](m * ksub)
+    var s = 0
+    while (s < m) {
+      var c = 0
+      while (c < ksub) {
+        var d = 0.0
+        val off = (s * ksub + c) * dsub
+        var k = 0
+        while (k < dsub) {
+          val x = v(s * dsub + k) - cb(off + k)
+          d += x * x
+          k += 1
+        }
+        out(s * ksub + c) = d
+        c += 1
+      }
+      s += 1
+    }
+    out
+  }
 }
 
 case class PqCodes(child: Expression, codebooks: Seq[Double],
@@ -146,25 +172,7 @@ case class PqAdcTable(child: Expression, codebooks: Seq[Double],
     if (arr.numElements() != dim) return null
     var j = 0
     while (j < dim) { if (arr.isNullAt(j)) return null; j += 1 }
-    val out = new Array[Double](m * ksub)
-    var s = 0
-    while (s < m) {
-      var c = 0
-      while (c < ksub) {
-        var d = 0.0
-        val off = (s * ksub + c) * dsub
-        var k = 0
-        while (k < dsub) {
-          val x = arr.getDouble(s * dsub + k) - cb(off + k)
-          d += x * x
-          k += 1
-        }
-        out(s * ksub + c) = d
-        c += 1
-      }
-      s += 1
-    }
-    new GenericArrayData(out)
+    new GenericArrayData(PqKernels.adcTable(arr.toDoubleArray(), cb, m, ksub, dim))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {

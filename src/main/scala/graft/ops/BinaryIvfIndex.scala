@@ -218,9 +218,9 @@ object BinaryIvfIndex extends CellStore("_bqivf_marker.json", "binary-ivf",
     * Hamming BEFORE the cut — map-side combinable, probed-mass-sized. */
   private def candidatesOf(v: View, p: Probe, rerank: Int,
                            allowed: Option[DataFrame]): DataFrame =
-    CellStore.cut(scan(v, "codes", p, allowed, "qcode")
+    PerQueryTopK(scan(v, "codes", p, allowed, "qcode")
         .withColumn("hamming", BinaryQuant.hamming(col("qcode"), col("code"))),
-      "hamming", desc = false, rerank, collapse = true)
+      "hamming", desc = false, rerank, collapse = true, batch = Some(p.size))
       .select("query_id", "corpus_id")
 
   protected def serve(spark: SparkSession, out: String, queries: => DataFrame,

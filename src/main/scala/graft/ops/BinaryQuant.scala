@@ -133,10 +133,11 @@ object BinaryQuant {
     val candDf = candRows.toSeq.toDF("query_id", "corpus_id")
     val rer = candDf.join(fetched, Seq("corpus_id"))
       .join(broadcast(q.select("query_id", "qvec")), Seq("query_id"))
-      .withColumn("cosine",
-        Similarity.dot(col("qvec"), col("cvec")) /
-          (Similarity.norm(col("qvec")) * Similarity.norm(col("cvec"))))
-    CellStore.cut(rer, "cosine", desc = true, k)
+      .select(col("query_id"), col("corpus_id"),
+        (Similarity.dot(col("qvec"), col("cvec")) /
+          (Similarity.norm(col("qvec")) * Similarity.norm(col("cvec")))).as("cosine"))
+    PerQueryTopK(rer, "cosine", desc = true, k,
+        batch = Some(candRows.map(_._1).distinct.length))
       .select(col("query_id"), col("rank"), col("corpus_id"))
   }
 

@@ -3,9 +3,8 @@ package graft.ops
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** A cell-store marker: the flat JSON object of integers and strings
   * every codec writes at its generation root (`dim`, `eff`, `seed`,
@@ -183,7 +182,7 @@ abstract class CellStore(val markerFile: String, tier: String,
 
     /** One data subdir, partition-pruned to the probed cells. */
     def frame(sub: String, probed: Seq[Int]): DataFrame =
-      pin.fold(spark.read.parquet(s"$root/$sub"))(pinnedSubdirFrame(spark, out, _, sub))
+      pin.fold(readCells(spark, s"$root/$sub"))(pinnedSubdirFrame(spark, out, _, sub))
         .filter(col("cell").isin(probed.map(Int.box): _*))
 
     /** [[frame]] with the tombstones anti-joined out and the
@@ -209,28 +208,28 @@ abstract class CellStore(val markerFile: String, tier: String,
   }
 
   /** A probed query batch: the batch as a LocalRelation, the same rows
-    * exploded per probed cell (a `cell` column appended), and the
-    * distinct probed cells — the partition-pruning literals. */
+    * exploded per probed cell (a `cell` column appended) — kept as
+    * `rows` too — the distinct probed cells (the partition-pruning
+    * literals) and the batch size, which sizes the top-n merge. */
   private[ops] final class Probe(val local: DataFrame, val byCell: DataFrame,
-                                 val cells: IndexedSeq[Int])
+                                 val rows: Seq[Row], val cells: IndexedSeq[Int],
+                                 val size: Int)
 
   /** THE driver-side probe: one bounded collect of the (broadcast-small
     * by contract) query batch, probe cells ranked on the driver, and
     * the query side rebuilt as LocalRelations — no probe job, and
-    * every downstream broadcast of the query side builds scan-free. A
-    * null probe value probes nothing. */
+    * every downstream broadcast of the query side ships the driver's
+    * rows without a job ([[LocalBroadcast]]). A null probe value
+    * probes nothing. */
   private[ops] def probe(v: View, q0: DataFrame, nprobe: Int): Probe = {
     val rows = collectBatch(q0).toSeq
     val i = q0.schema.fieldIndex(probeCol)
     val cellsOf = probeCells(v.quantizer, nprobe)
     val per = rows.map(r => if (r.isNullAt(i)) Array.empty[Int] else cellsOf(r.getSeq[Any](i)))
-    def local(rs: Seq[Row], schema: org.apache.spark.sql.types.StructType) =
-      q0.sparkSession.createDataFrame(java.util.Arrays.asList(rs: _*), schema)
-    new Probe(local(rows, q0.schema),
-      local(rows.zip(per).flatMap { case (r, cs) =>
-        cs.map(c => Row.fromSeq(r.toSeq :+ c))
-      }, q0.schema.add("cell", IntegerType, nullable = false)),
-      per.flatten.distinct.toIndexedSeq)
+    val byCell = rows.zip(per).flatMap { case (r, cs) => cs.map(c => Row.fromSeq(r.toSeq :+ c)) }
+    new Probe(localFrame(q0.sparkSession, rows, q0.schema),
+      localFrame(q0.sparkSession, byCell, q0.schema.add("cell", IntegerType, nullable = false)),
+      byCell, per.flatten.distinct.toIndexedSeq, rows.size)
   }
 
   /** The probed scan every candidate score starts from: the subdir's
@@ -586,7 +585,8 @@ abstract class CellStore(val markerFile: String, tier: String,
         s"${pinDir(out, token)}/${listName(subdir)}")
       .split("\n").filter(_.nonEmpty).map(f => s"$root/$subdir/$f").toSeq
     if (files.isEmpty) spark.read.parquet(s"$root/$subdir").limit(0)
-    else spark.read.option("basePath", s"$root/$subdir").parquet(files: _*)
+    else spark.read.schema(cellSchema(spark, files.head))
+      .option("basePath", s"$root/$subdir").parquet(files: _*)
   }
 
   /** The pin's tombstone snapshot as an anti-join (identity when the
@@ -657,26 +657,33 @@ object CellStore {
   /** Output file size purge and compaction rewrites aim at. */
   private val TargetFileBytes = 256L << 20
 
+  /** Driver-held rows as a LocalRelation. */
+  private[ops] def localFrame(spark: SparkSession, rows: Seq[Row],
+                              schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** A cell-partitioned subdir under the schema its files carry: the
+    * row schema Spark wrote into one data file's footer, plus
+    * `cell: int` — the schema inference would find, without the
+    * inference job. A subdir with no data file is read as before. */
+  private def readCells(spark: SparkSession, dir: String): DataFrame = {
+    val fs = fsOf(spark, dir)
+    cellDirs(fs, new Path(dir)).iterator.flatMap(parquetFiles(fs, _)).nextOption() match {
+      case Some(f) => spark.read.schema(cellSchema(spark, f.getPath.toString)).parquet(dir)
+      case None => spark.read.parquet(dir)
+    }
+  }
+
+  private def cellSchema(spark: SparkSession, file: String): StructType =
+    org.apache.spark.sql.GraftBridge.asNullable(graft.util.SmallParquet.sparkSchema(
+      spark.sparkContext.hadoopConfiguration, file)).add("cell", IntegerType)
+
   private[ops] def collectBatch(df: DataFrame): Array[Row] = {
     val rows = df.limit(MaxQueryBatch + 1).collect()
     require(rows.length <= MaxQueryBatch,
       s"query batch of ${df.count()} rows exceeds the $MaxQueryBatch-row " +
         "cap of a probed ANN query batch — split it")
     rows
-  }
-
-  /** Per-query top-`n` by `score` (ties to the lower corpus id) as a
-    * `rank` column; `collapse` first reduces duplicate copies of an id
-    * (re-adds, sidecar twins) to their best score, so a duplicate never
-    * holds a slot a distinct neighbor should. */
-  private[ops] def cut(scored: DataFrame, score: String, desc: Boolean, n: Int,
-                       collapse: Boolean = false): DataFrame = {
-    val s = if (!collapse) scored
-      else scored.groupBy(col("query_id"), col("corpus_id"))
-        .agg((if (desc) max(col(score)) else min(col(score))).as(score))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(if (desc) col(score).desc else col(score).asc, col("corpus_id").asc)
-    s.withColumn("rank", row_number().over(w)).filter(col("rank") <= n)
   }
 
   /** The cosine probe over double centroids (bit-identical to the

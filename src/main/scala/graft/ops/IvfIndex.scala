@@ -131,7 +131,7 @@ object IvfIndex extends CellStore("_ivf_marker.json", "ivf",
       .withColumn("cosine", Similarity.dot(col("qvec"), col("cvec")) /
         (col("qnorm") * col("cnorm")))
       .select(col("query_id"), col("corpus_id"), col("cosine"))
-    CellStore.cut(scored, "cosine", desc = true, k)
+    PerQueryTopK(scored, "cosine", desc = true, k, batch = Some(p.size))
   }
 
   protected def serve(spark: SparkSession, out: String, queries: => DataFrame,

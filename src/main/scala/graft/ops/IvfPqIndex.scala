@@ -166,10 +166,10 @@ object IvfPqIndex extends CellStore("_ivfpq_marker.json", "ivfpq",
     val mk = v.marker
     val (centroids, codebooks) = v.quantizer
     val p = probe(v, Similarity.pqQueries(queries, mk.idCol, mk.vecCol), nprobe)
-    val tables = Similarity.adcTables(p.byCell, centroids, codebooks, mk.dim,
+    val tables = Similarity.adcTables(p.byCell, p.rows, centroids, codebooks, mk.dim,
       mk.int("m"), mk.int("ksub"))
     (Similarity.adcRank(v.cells("cells", p.cells, allowed), tables, k,
-      mk.int("m"), mk.int("ksub")), p)
+      mk.int("m"), mk.int("ksub"), batch = Some(p.size)), p)
   }
 
   /** One execution of the ADC candidate stage: the collected (query,
@@ -181,7 +181,7 @@ object IvfPqIndex extends CellStore("_ivfpq_marker.json", "ivfpq",
     val (adc, p) = candidateStage(v, queries, kCandidates, nprobe, allowed)
     val proj = adc.select(col("query_id"), col("corpus_id"))
     val rows = proj.collect()
-    (v.spark.createDataFrame(java.util.Arrays.asList(rows: _*), proj.schema),
+    (CellStore.localFrame(v.spark, rows.toSeq, proj.schema),
       rows.map(_.get(1)).distinct.toSeq, p)
   }
 
@@ -249,9 +249,9 @@ object IvfPqIndex extends CellStore("_ivfpq_marker.json", "ivfpq",
     val rescored = c.join(broadcast(cand), Seq("corpus_id"))
       .join(broadcast(p.local.select(col("query_id"), col("qvec"), col("qnorm"))),
         Seq("query_id"))
-      .withColumn("cosine", Similarity.dot(col("qvec"), col("cvec")) /
-        (col("qnorm") * col("cnorm")))
-    CellStore.cut(rescored, "cosine", desc = true, k)
+      .select(col("query_id"), col("corpus_id"), (Similarity.dot(col("qvec"), col("cvec")) /
+        (col("qnorm") * col("cnorm"))).as("cosine"))
+    PerQueryTopK(rescored, "cosine", desc = true, k, batch = Some(p.size))
       .select(col("query_id"), col("rank"), col("corpus_id"))
   }
 }

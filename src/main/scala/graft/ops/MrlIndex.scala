@@ -121,12 +121,12 @@ object MrlIndex extends CellStore("_mrl_marker.json", "mrl",
       .withColumn("qnorm", Similarity.norm(col("qvec"))), nprobe)
     // stage 1: prefix cosine over the probed cells (zero-prefix rows
     // sentinel to −2.0, below any real cosine)
-    val cand = CellStore.cut(scan(v, "cells", p, allowed, "qpre", "qpnorm")
+    val cand = PerQueryTopK(scan(v, "cells", p, allowed, "qpre", "qpnorm")
         .withColumn("pcos",
           when(col("qpnorm") === 0d || col("pnorm") === 0d, lit(-2.0))
             .otherwise(Similarity.dot(col("qpre"), col("pvec")) /
               (col("qpnorm") * col("pnorm")))),
-      "pcos", desc = true, rerank, collapse = true)
+      "pcos", desc = true, rerank, collapse = true, batch = Some(p.size))
       .select("query_id", "corpus_id")
     // stage 2: exact full-dim re-rank from the sidecar — the probed
     // cells prune the partition read (candidates only live there),
@@ -136,7 +136,7 @@ object MrlIndex extends CellStore("_mrl_marker.json", "mrl",
       .join(broadcast(p.local.select("query_id", "qvec", "qnorm")), Seq("query_id"))
       .withColumn("cosine", Similarity.dot(col("qvec"), col("cvec")) /
         (col("qnorm") * col("cnorm")))
-    CellStore.cut(rer, "cosine", desc = true, k, collapse = true)
+    PerQueryTopK(rer, "cosine", desc = true, k, collapse = true, batch = Some(p.size))
       .select(col("query_id"), col("rank"), col("corpus_id"))
   }
 

@@ -1,9 +1,10 @@
 package graft.ops
 
 import graft.util.Checkpoints.CutOps
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
 /**
  * Similarity search over an embedding column (array<float>):
@@ -874,10 +875,17 @@ object Similarity {
                               codebooks: IndexedSeq[Double], dim: Int, m: Int,
                               ksub: Int, nprobe: Int,
                               idCol: String, vecCol: String): DataFrame = {
+    val spark = queries.sparkSession
+    import spark.implicits._
     val (dists, _) = cellFns(centroids, dim)
-    adcTables(pqQueries(queries, idCol, vecCol).withColumn("cell",
-        explode(probeCells(dists(col("nq")), centroids.length, nprobe))),
-      centroids, codebooks, dim, m, ksub)
+    val cellsDf = centroids.zipWithIndex
+      .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "ccent")
+    pqQueries(queries, idCol, vecCol)
+      .withColumn("cell", explode(probeCells(dists(col("nq")), centroids.length, nprobe)))
+      .join(broadcast(cellsDf), Seq("cell"))
+      .withColumn("qtable", graft.functions.PqKernels.pq_adc_table(
+        zip_with(col("nq"), col("ccent"), (a, b) => a - b), codebooks, m, ksub, dim))
+      .select(col("cell"), col("query_id"), col("qtable"))
   }
 
   /** The IVF-PQ query frame: (query_id, qvec, qnorm) plus `nq`, the
@@ -890,35 +898,46 @@ object Similarity {
       .withColumn("qnorm", norm(col("qvec")))
       .withColumn("nq", transform(col("qvec"), x => x / col("qnorm")))
 
-  /** Per probed (query, cell) row of a [[pqQueries]] frame with a
-    * `cell` column: the residual ADC lookup table. */
-  private[ops] def adcTables(probed: DataFrame, centroids: Array[Array[Double]],
+  /** Per probed (query, cell) row of a driver-held [[pqQueries]] batch
+    * (`rows`, with `probed`'s schema and a `cell` column): the
+    * residual ADC lookup table, computed on the driver — the
+    * `pq_adc_table` kernel on `nq − centroid` — into a LocalRelation
+    * (cell, query_id, qtable) that broadcasts without a job. */
+  private[ops] def adcTables(probed: DataFrame, rows: Seq[Row],
+                             centroids: Array[Array[Double]],
                              codebooks: IndexedSeq[Double], dim: Int, m: Int,
                              ksub: Int): DataFrame = {
-    val spark = probed.sparkSession
-    import spark.implicits._
-    val cellsDf = centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "ccent")
-    probed.join(broadcast(cellsDf), Seq("cell"))
-      .withColumn("qtable", graft.functions.PqKernels.pq_adc_table(
-        zip_with(col("nq"), col("ccent"), (a, b) => a - b), codebooks, m, ksub, dim))
-      .select(col("cell"), col("query_id"), col("qtable"))
+    val cb = codebooks.toArray
+    val (qi, ni, ci) = (probed.schema.fieldIndex("query_id"),
+      probed.schema.fieldIndex("nq"), probed.schema.fieldIndex("cell"))
+    val tables = rows.map { r =>
+      val nq = if (r.isNullAt(ni)) null else r.getSeq[Any](ni)
+      val cell = r.getInt(ci)
+      // zip_with(nq, centroid, a - b) then the kernel: any null or
+      // length mismatch makes the table null
+      val table = if (nq == null || nq.length != dim || nq.contains(null)) null
+        else graft.functions.PqKernels.adcTable(Array.tabulate(dim)(j =>
+          nq(j).asInstanceOf[Double] - centroids(cell)(j)), cb, m, ksub, dim).toSeq
+      Row(cell, r.get(qi), table)
+    }
+    CellStore.localFrame(probed.sparkSession, tables, StructType(Seq(
+      StructField("cell", IntegerType, nullable = false), probed.schema(qi),
+      StructField("qtable", ArrayType(DoubleType, containsNull = false)))))
   }
 
   /** ADC scoring + top-k: codes rows join broadcast probe rows on the
     * cell key; per pair the score is m table lookups folded from +0.0
-    * in subspace order. */
+    * in subspace order. `batch` is the query count when the driver
+    * knows it ([[PerQueryTopK]]). */
   private[ops] def adcRank(codes: DataFrame, probes: DataFrame, k: Int,
-                           m: Int, ksub: Int): DataFrame = {
+                           m: Int, ksub: Int, batch: Option[Int] = None): DataFrame = {
     val scored = codes.join(broadcast(probes), Seq("cell"))
       .filter(col("query_id") =!= col("corpus_id"))
-      .withColumn("adc", aggregate(
+      .select(col("query_id"), col("corpus_id"), aggregate(
         zip_with(col("codes"), sequence(lit(0), lit(m - 1)),
           (code, s) => element_at(col("qtable"), s * lit(ksub) + code + lit(1))),
-        lit(0.0), (acc, x) => acc + x))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").asc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+        lit(0.0), (acc, x) => acc + x).as("adc"))
+    PerQueryTopK(scored, "adc", desc = false, k, batch = batch)
       .select(col("query_id"), col("rank"), col("corpus_id"))
   }
 

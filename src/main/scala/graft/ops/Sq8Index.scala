@@ -187,9 +187,9 @@ object Sq8Index extends CellStore("_sq8_marker.json", "sq8",
 
   private def candidatesOf(v: View, p: Probe, rerank: Int,
                            allowed: Option[DataFrame]): DataFrame =
-    CellStore.cut(scan(v, "codes", p, allowed, "qqc")
+    PerQueryTopK(scan(v, "codes", p, allowed, "qqc")
         .withColumn("d2", intL2(col("qqc"), col("qc"))),
-      "d2", desc = false, rerank, collapse = true)
+      "d2", desc = false, rerank, collapse = true, batch = Some(p.size))
       .select("query_id", "corpus_id")
 
   protected def serve(spark: SparkSession, out: String, queries: => DataFrame,

@@ -46,13 +46,15 @@ object KnnQuery {
         require(i > 0, s"malformed local param '$p' in: $q")
         p.substring(0, i) -> p.substring(i + 1)
       }.toMap
-      val field = kv.getOrElse("f", sys.error(s"{!knn} needs f= in: $q"))
-      val topK = kv.getOrElse("topK", sys.error(s"{!knn} needs topK= in: $q")).toInt
+      def param(k: String) = kv.getOrElse(k,
+        throw new IllegalArgumentException(s"{!knn} needs $k= in: $q"))
+      val field = param("f")
+      val topK = param("topK").toInt
       require(topK > 0, s"topK must be positive in: $q")
       val v = vec.split(",").map(_.trim).filter(_.nonEmpty).map(_.toDouble).toSeq
       require(v.nonEmpty, s"empty query vector in: $q")
       KnnRequest(field, topK, v)
-    case _ => sys.error(s"not a {!knn} query: $q")
+    case _ => throw new IllegalArgumentException(s"not a {!knn} query: $q")
   }
 
   /**

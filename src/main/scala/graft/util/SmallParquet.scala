@@ -3,8 +3,10 @@ package graft.util
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * Driver-side reader for QUANTIZER-SIZED parquet frames (r18, guide §5
@@ -64,5 +66,17 @@ object SmallParquet {
         .map(new R(_)).toVector
       finally reader.close()
     }
+  }
+
+  /** The row schema Spark wrote into a parquet file's footer (the
+    * `org.apache.spark.sql.parquet.row.metadata` key) — what schema
+    * inference reads, without its job. */
+  def sparkSchema(conf: Configuration, file: String): StructType = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata")
+      finally reader.close()
+    require(json != null, s"$file carries no Spark row schema in its footer")
+    DataType.fromJson(json).asInstanceOf[StructType]
   }
 }

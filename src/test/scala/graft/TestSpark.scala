@@ -6,15 +6,7 @@ import org.apache.spark.sql.SparkSession
   * one forked JVM; a session per suite would dominate test time). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder("local[8]", 8).appName("graft-tests").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

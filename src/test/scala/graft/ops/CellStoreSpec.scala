@@ -1,11 +1,18 @@
 package graft.ops
 
 import graft.{Tables, TestSpark}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The shared cell-store pieces: marker round trip, the registry, and
-  * the bounded query-batch collect of the driver-side probe. */
+/** The shared cell-store pieces: marker round trip, the registry, the
+  * bounded query-batch collect of the driver-side probe, the footer
+  * read schema, and the [[PerQueryTopK]] cut against the window cut it
+  * replaced. */
 class CellStoreSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -39,5 +46,89 @@ class CellStoreSpec extends AnyFunSuite {
     assert(e.getMessage.contains(s"${CellStore.MaxQueryBatch}") &&
       e.getMessage.contains(s"$n rows"), e.getMessage)
     assert(CellStore.collectBatch(Seq(1L, 2L).toDF("query_id")).length === 2)
+  }
+
+  test("a subdir read under its footer schema has the inferred schema") {
+    val emb = Tables.embeddings(spark, TestSpark.sf).filter(col("vec_id") < 100)
+    val out = java.nio.file.Files.createTempDirectory("cellstore_schema_").toString
+    MrlIndex.build(emb, out, dim = 64, prefixDim = 16, nlist = 4)
+    val v = MrlIndex.live(spark, out)
+    Seq("cells", "vectors").foreach { sub =>
+      assert(v.frame(sub, 0 until 4).schema === spark.read.parquet(s"$out/$sub").schema, sub)
+    }
+  }
+
+  /** THE REFERENCE: the groupBy + `row_number` window cut the cell
+    * stores ran before [[PerQueryTopK]] — kept here only. */
+  private def windowCut(scored: DataFrame, score: String, desc: Boolean, n: Int,
+                        collapse: Boolean): DataFrame = {
+    val s = if (!collapse) scored
+      else scored.groupBy(col("query_id"), col("corpus_id"))
+        .agg((if (desc) max(col(score)) else min(col(score))).as(score))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(if (desc) col(score).desc else col(score).asc, col("corpus_id").asc)
+    s.withColumn("rank", row_number().over(w)).filter(col("rank") <= n)
+  }
+
+  /** One generated cut: rows (query, corpus, score) spread over
+    * `slices` scan partitions (more slices than rows leaves some
+    * empty), the cut's parameters, and whether ids are strings. */
+  private case class Cut(rows: Seq[(Int, Int, Option[Double])], slices: Int, n: Int,
+                         desc: Boolean, collapse: Boolean, batchKnown: Boolean,
+                         stringIds: Boolean)
+
+  // few distinct values: ties, duplicate ids, NaN, ±0.0 and nulls are common
+  private val genScore: Gen[Option[Double]] = Gen.frequency(
+    6 -> Gen.oneOf(-1.0, -0.25, 0.5, 1.0, 2.0).map(Some(_)),
+    1 -> Gen.const(Some(Double.NaN)), 1 -> Gen.const(Some(0.0)),
+    1 -> Gen.const(Some(-0.0)), 1 -> Gen.const(None))
+  private val genCut: Gen[Cut] = for {
+    queries <- Gen.frequency(2 -> Gen.const(1), 3 -> Gen.choose(2, 5))
+    size <- Gen.choose(0, 40)
+    rows <- Gen.listOfN(size, for {
+      q <- Gen.choose(0, queries - 1); c <- Gen.choose(0, 9); s <- genScore
+    } yield (q, c, s))
+    slices <- Gen.choose(1, 6)
+    n <- Gen.choose(1, 12)
+    desc <- Gen.oneOf(true, false)
+    collapse <- Gen.oneOf(true, false)
+    batchKnown <- Gen.oneOf(true, false)
+    stringIds <- Gen.oneOf(true, false)
+  } yield Cut(rows, slices, n, desc, collapse, batchKnown, stringIds)
+
+  /** Rows as comparable strings: ±0.0 read as one value (SQL `max`
+    * keeps whichever equal copy it meets first, and tied rows rank in
+    * scan order). */
+  private def canon(df: DataFrame): Seq[String] = df.collect().toSeq.map(_.toSeq.map {
+    case d: Double if d == 0.0 => "0.0"
+    case x => String.valueOf(x)
+  }.mkString("|")).sorted
+
+  test("PerQueryTopK returns the rows of the window cut it replaced " +
+      "(fixed-seed property: order, collapse, ties, NaN, ±0.0, nulls, " +
+      "empty partitions, n past the candidates, long and string ids)") {
+    val t0 = System.nanoTime()
+    val prop = Prop.forAll(genCut) { c =>
+      val idType = if (c.stringIds) StringType else LongType
+      def id(i: Int): Any = if (c.stringIds) s"id$i" else i.toLong
+      val schema = StructType(Seq(StructField("query_id", idType),
+        StructField("corpus_id", idType),
+        // a score column without nulls is declared non-nullable, as the
+        // stores' own score expressions may be
+        StructField("score", DoubleType, nullable = c.rows.exists(_._3.isEmpty)),
+        StructField("tag", StringType)))
+      val rows = c.rows.map { case (q, k, s) =>
+        Row(id(q), id(k), s.orNull, s"$k:${s.map(x => if (x == 0.0) 0.0 else x)}")
+      }
+      val scored = spark.createDataFrame(spark.sparkContext.parallelize(rows, c.slices), schema)
+      val batch = if (c.batchKnown) Some(c.rows.map(_._1).distinct.size) else None
+      val got = PerQueryTopK(scored, "score", c.desc, c.n, c.collapse, batch)
+      val want = windowCut(scored, "score", c.desc, c.n, c.collapse)
+      got.schema == want.schema && canon(got) == canon(want)
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(80)
+      .withInitialSeed(Seed(20261017L)).withWorkers(1), prop)
+    assert(res.passed, res.status.toString)
+    info(f"80 cuts in ${(System.nanoTime() - t0) / 1e9}%.1f s")
   }
 }

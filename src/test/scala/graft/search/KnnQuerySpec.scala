@@ -24,10 +24,11 @@ class KnnQuerySpec extends AnyFunSuite {
     assert(r === KnnQuery.KnnRequest("embedding", 3, Seq(0.5, -1.25, 2.0)))
     assert(KnnQuery.parse("{!knn topK=7 f=v}[1]") ===
       KnnQuery.KnnRequest("v", 7, Seq(1.0)))
-    intercept[RuntimeException](KnnQuery.parse("{!knn f=v}[1]"))       // no topK
-    intercept[RuntimeException](KnnQuery.parse("{!knn topK=3}[1]"))    // no f
-    intercept[RuntimeException](KnnQuery.parse("{!knn f=v topK=3}[]")) // empty vec
-    intercept[RuntimeException](KnnQuery.parse("v:[1 TO 2]"))          // not knn
+    intercept[IllegalArgumentException](KnnQuery.parse("{!knn f=v}[1]"))       // no topK
+    intercept[IllegalArgumentException](KnnQuery.parse("{!knn topK=3}[1]"))    // no f
+    intercept[IllegalArgumentException](KnnQuery.parse("{!knn f=v topK=3}[]")) // empty vec
+    intercept[IllegalArgumentException](KnnQuery.parse("v:[1 TO 2]"))          // not knn
+    intercept[IllegalArgumentException](KnnQuery.parse("{!lucene}[1]"))        // other parser
   }
 
   test("search: exact cosine order with (score desc, id) ties") {
