@@ -77,7 +77,7 @@ object ExplainCheck {
       "q307_ivf_filtered" -> "filtered ANN (IDSelector): the allowed-id semi-join applies AFTER probe pruning, so its left side is probed mass only; Catalyst picks broadcast vs shuffle by the id set's size",
       "q308_ann_drift" -> "drift probe: centroids broadcast as codegen reference objects, one scan-local milli-distance projection per cohort, a 1-row aggregate each — no shuffle wider than the final union",
       "q321_binary_ivf" -> "bucketed binary ANN: the cell-partitioned code store read under a PARTITION filter (probed cells only — the Hamming scan term is probed mass, not corpus), centroid Hamming as literal-code expressions, the exact re-rank candidate-id-pushed into the corpus read",
-      "q322_hnsw_stream_delta" -> "HNSW graph+delta merge: the scatter leg's per-shard walk unions an exact-cosine delta leg (delta bounded by the fold threshold, broadcast query batch), delta ids anti-joined out of the graph leg (upsert shadowing) — one window merges both legs' top-k",
+      "q322_hnsw_stream_delta" -> "HNSW graph+delta merge: the scatter leg's per-shard walk unions an exact-cosine delta leg (delta bounded by the fold threshold, broadcast query batch), delta ids anti-joined out of the graph leg (upsert shadowing) — one PerQueryTopK (partial top-k per partition, one merge) cuts both legs' top-k",
       "q337_mrl_persisted" -> "store-served Matryoshka: BOTH stages read under cell PARTITION filters (probed prefix cells only) — the prefix scan touches prefixDim/dim of the bytes in probed cells, the sidecar re-rank joins broadcast candidates inside the same probed set",
       "q341_colbert_token_store" -> "token-level ColBERT fetch stage: the doc-token read under a BUCKET partition filter (candidates' buckets only) with the candidate frame broadcast — the corpus-scale work happened in the (collected) per-token probe stage, itself cell-partition-pruned (plan-locked in LateInteractionSpec)")
     // prose riders appended after specific plans (regenerated with them)

@@ -4808,11 +4808,9 @@ object SparkEntry {
         .withColumn("cosine_r", round(
           graft.ops.Similarity.dot(col("qvec"), col("cvec"))
             / (col("qnorm") * col("cnorm")), 6))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine_r").desc, col("corpus_id").asc)
-      scored.withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= 3)
-        .select(col("query_id"), col("rnk"), col("corpus_id"), col("cosine_r"))
+      graft.ops.PerQueryTopK(scored, "cosine_r", desc = true, 3)
+        .select(col("query_id"), col("rank").cast("long").as("rnk"), col("corpus_id"),
+          col("cosine_r"))
     }),
 
     // mlt.interestingTerms=details: the source doc's extracted query
@@ -5491,23 +5489,24 @@ object SparkEntry {
       // the file stream source wants a DIRECTORY — stream the sf dir
       // with a glob pinned to the events table
       val schema = s.read.parquet(s"$d/events.parquet").schema
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
-      val ev = raw.schema("ts").dataType match {
-        case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        case _ => raw.withColumn("ts", col("ts").cast("timestamp"))
-      }
       val sink = s"q263_sink_${System.nanoTime()}"
       // stateful stream: bound the state-store partition count (r18 —
-      // AQE is off in streaming, so shuffle.partitions is raw)
-      StreamingIngest.withStatePartitions(s) {
+      // AQE is off in streaming, so shuffle.partitions is raw); the
+      // memory sink's table lives in the bounded session
+      StreamingIngest.withStatePartitions(s) { ss =>
+        val raw = ss.readStream.schema(schema)
+          .option("pathGlobFilter", "events.parquet").parquet(d)
+        val ev = raw.schema("ts").dataType match {
+          case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+          case _ => raw.withColumn("ts", col("ts").cast("timestamp"))
+        }
         val q = StreamingIngest.windowedCounts(ev)
           .select(col("window_start"), col("event_type"), col("n"))
           .writeStream.format("memory").queryName(sink).outputMode("append")
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
+        ss.table(sink)
       }
-      s.table(sink)
     }),
 
     // WET/Common Crawl round trip: serialize the corpus as WET
@@ -5598,11 +5597,11 @@ object SparkEntry {
       stageBatch(docs.filter(col("doc_id") < 250), "b0", 1000000000000L)
       stageBatch(docs.filter(col("doc_id") >= 250).unionByName(planted),
         "b1", 1000000060000L)
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
       // per-micro-batch joins/writes inherit the session's shuffle
       // partitions with no AQE — bound them for the stream (r18)
-      StreamingIngest.withStatePartitions(s) {
+      StreamingIngest.withStatePartitions(s) { ss =>
+        val stream = ss.readStream.schema(docs.schema)
+          .option("maxFilesPerTrigger", 1).parquet(src)
         val q = StreamingIngest.dedupIngestSink(
           s"$root/out", s"$root/state", "doc_id", "text")(stream).start()
         q.awaitTermination()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * TRUE sf1 validation (vs [[ScaleCheck]]'s sf1-synth key-offset
+ * TRUE sf1 validation (vs the retired sf1-synth tool's key-offset
  * copies): regenerates every table at 10× sf0.1 row counts from the
  * SAME distributions the driver's testdata exhibits — independent
  * fresh rows, not perturbed copies — so join fan-outs, group
@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
 object TrueScaleCheck {
 
   /** The measured set: bench's most expensive queries plus the
-    * corpus-heavy ScaleCheck carryovers — every family whose 10×
+    * corpus-heavy sf1-synth carryovers — every family whose 10×
     * behavior the synth table already claims a number for — plus the
     * r10/r11 write-path additions (tiered merge flow, persisted IVF,
     * the .dvm-served facet family). */

@@ -1830,6 +1830,9 @@ object SegmentIndex {
 
   private[index] val SegmentFileExts = Seq("fld", "fdx", "trm", "nrm", "dvd", "dvm")
 
+  /** A writer's default flush threshold: buffered docs per auto-flushed segment. */
+  private[index] val MaxBufferedDocs = 1 << 17
+
   /** Every file a commit point references: segment data files plus
     * the live tombstone generation per segment. */
   private def refsOf(cp: CommitPoint): Set[String] =
@@ -1949,7 +1952,7 @@ object SegmentIndex {
   final class Writer(fs: FileSystem, dir: Path,
                      analyzed: Set[String] = Set.empty,
                      compressStored: Boolean = true,
-                     maxBufferedDocs: Int = 1 << 17,
+                     maxBufferedDocs: Int = MaxBufferedDocs,
                      retainGenerations: Int = 1,
                      staged: Boolean = false) {
     require(maxBufferedDocs > 0)
@@ -1999,6 +2002,17 @@ object SegmentIndex {
       sessionFlushed += name
       commitPoint = commitPoint.copy(counter = commitPoint.counter + 1,
         segments = commitPoint.segments :+ meta)
+    }
+
+    /** Abandon the session's uncommitted work: buffered docs and
+      * deletes are dropped, and the segments auto-flushed since the
+      * last commit — files no commit references — are deleted. */
+    def abort(): Unit = {
+      sessionFlushed.foreach(n =>
+        SegmentFileExts.foreach(e => fs.delete(new Path(dir, s"$n.$e"), false)))
+      sessionFlushed.clear()
+      pending.clear()
+      pendingDels.clear()
     }
 
     /**

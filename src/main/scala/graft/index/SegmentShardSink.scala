@@ -283,7 +283,17 @@ object SegmentShardSink {
    */
   def upsert(spark: SparkSession, store: String, updates: DataFrame,
              mergePolicy: SegmentIndex.MergePolicy = SegmentIndex.MergePolicy(),
-             retainGenerations: Int = 1): Unit = {
+             retainGenerations: Int = 1): Unit =
+    upsertBuffered(spark, store, updates, mergePolicy, retainGenerations,
+      SegmentIndex.MaxBufferedDocs)
+
+  /** [[upsert]] with its writers' flush threshold (`maxBufferedDocs`)
+    * given — a small one makes a batch flush segments mid-write. */
+  private[index] def upsertBuffered(spark: SparkSession, store: String,
+                                    updates: DataFrame,
+                                    mergePolicy: SegmentIndex.MergePolicy,
+                                    retainGenerations: Int,
+                                    maxBufferedDocs: Int): Unit = {
     val conf0 = ShardIndex.hadoopConf(spark)
     val marker = readMarker(conf0, store)
     val idCol = marker.idCol
@@ -361,14 +371,19 @@ object SegmentShardSink {
             val ms = row.getInt(msIdx)
             if (ms != cur) {
               flush()
-              w = SegmentIndex.writer(indexDir(store, ms), conf.value, analyzedBc,
-                retainGenerations = retainGenerations, staged = true)
+              val dir = new Path(indexDir(store, ms))
+              w = new SegmentIndex.Writer(dir.getFileSystem(conf.value), dir, analyzedBc,
+                maxBufferedDocs = maxBufferedDocs, retainGenerations = retainGenerations,
+                staged = true)
               cur = ms
             }
             if (!ids.add(render(row.get(idIdx)))) dup = true // stop: batch is refused
             else w.addDocument(docOf(row, fields))
           }
-          if (!dup) flush() // a refused partition abandons its tail un-staged
+          // a refused partition abandons its tail un-staged, and deletes
+          // the segments its writer flushed past maxBufferedDocs: no
+          // commit, live or staged, references them
+          if (!dup) flush() else w.abort()
           Iterator.single(dup)
         }.collect()
       } catch {

@@ -57,7 +57,6 @@ object BinaryQuant {
   def binaryTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                  rerank: Int, dim: Int, idCol: String = "vec_id",
                  vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = corpus.select(col(idCol).cast("long").as("corpus_id"),
       col(vecCol).cast("array<double>").as("cvec"))
     val codes = c.select(col("corpus_id"),
@@ -69,10 +68,7 @@ object BinaryQuant {
     val scored = codes.crossJoin(broadcast(q.select("query_id", "qcode")))
       .filter(col("query_id") =!= col("corpus_id"))
       .withColumn("hamming", hamming(col("qcode"), col("code")))
-    val w1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming").asc, col("corpus_id").asc)
-    val cand = scored.withColumn("hrank", row_number().over(w1))
-      .filter(col("hrank") <= rerank)
+    val cand = PerQueryTopK(scored, "hamming", desc = false, rerank)
       .select("query_id", "corpus_id")
     // stage 2: raw vectors for the candidate rows alone
     val rer = cand.join(c, Seq("corpus_id"))
@@ -80,10 +76,7 @@ object BinaryQuant {
       .withColumn("cosine",
         Similarity.dot(col("qvec"), col("cvec")) /
           (Similarity.norm(col("qvec")) * Similarity.norm(col("cvec"))))
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    rer.withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
+    PerQueryTopK(rer, "cosine", desc = true, k)
       .select(col("query_id"), col("rank"), col("corpus_id"))
   }
 
@@ -152,7 +145,6 @@ object BinaryQuant {
   def queryStore(spark: SparkSession, out: String,
                  queries: DataFrame, corpus: DataFrame, k: Int,
                  rerank: Int, pushLimit: Int = 4096): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val m = CellMarker.parse(graft.util.FsIo.readSmallFile(
       spark.sparkContext.hadoopConfiguration, markerPath(out)))
     val (dim, idCol, vecCol) = (m.dim, m.idCol, m.vecCol)
@@ -163,10 +155,7 @@ object BinaryQuant {
     val scored = codes.crossJoin(broadcast(q.select("query_id", "qcode")))
       .filter(col("query_id") =!= col("corpus_id"))
       .withColumn("hamming", hamming(col("qcode"), col("code")))
-    val w1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming").asc, col("corpus_id").asc)
-    val cand = scored.withColumn("hrank", row_number().over(w1))
-      .filter(col("hrank") <= rerank)
+    val cand = PerQueryTopK(scored, "hamming", desc = false, rerank)
       .select("query_id", "corpus_id")
     rerankExact(spark, cand, corpus, q, k, idCol, vecCol, pushLimit)
   }

@@ -6,20 +6,21 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
 
-/** A cell-store marker: the flat JSON object of integers and strings
-  * every codec writes at its generation root (`dim`, `eff`, `seed`,
-  * `idCol`, `vecCol` plus codec keys such as `m`/`ksub`/`prefixDim`).
-  * [[json]] renders the fields in declaration order, byte-for-byte
-  * the layout the tiers have always written. */
+/** A store marker: the flat JSON object of integers and strings
+  * every cell-store codec writes at its generation root (`dim`, `eff`,
+  * `seed`, `idCol`, `vecCol` plus codec keys such as
+  * `m`/`ksub`/`prefixDim`), and the HNSW, token and LSH stores at
+  * their roots. [[json]] renders the fields in declaration order,
+  * byte-for-byte the layout the stores have always written. */
 final case class CellMarker(fields: Seq[(String, Any)]) {
-  private def get(k: String): Any = fields.collectFirst { case (`k`, v) => v }
-    .getOrElse(throw new NoSuchElementException(s"cell-store marker has no '$k'"))
-  def int(k: String): Int = get(k).toString.toInt
+  def str(k: String): String = fields.collectFirst { case (`k`, v) => v.toString }
+    .getOrElse(throw new NoSuchElementException(s"store marker has no '$k'"))
+  def int(k: String): Int = str(k).toInt
   def dim: Int = int("dim")
   def eff: Int = int("eff")
-  def seed: Long = get("seed").toString.toLong
-  def idCol: String = get("idCol").toString
-  def vecCol: String = get("vecCol").toString
+  def seed: Long = str("seed").toLong
+  def idCol: String = str("idCol")
+  def vecCol: String = str("vecCol")
   def json: String = fields.map {
     case (k, v: String) => s""""$k":"$v""""
     case (k, v) => s""""$k":$v"""

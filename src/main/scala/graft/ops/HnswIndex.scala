@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
  *    Lucene segment contract.
  *  - `query`: broadcast the (small) query batch, search every shard's
  *    graph independently (one task per shard, graph loaded from its
- *    partition's rows), take each shard's ef-search results and merge
- *    the global top-k with one window — Solr's distributed knn
- *    scatter-gather.
+ *    partition's rows), cut each shard's ef-search results to a
+ *    partial top-k and merge the global top-k once
+ *    ([[PerQueryTopK]]) — Solr's distributed knn scatter-gather.
  *
  * DETERMINISM (the property a hash-oracled engine needs, which
  * stochastic HNSW builds lack): node levels come from md5(id) — the
@@ -110,14 +110,10 @@ object HnswIndex {
       .toSeq.sorted
   }
 
-  private def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-                            p: org.apache.hadoop.fs.Path): String = {
-    val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-    val in = fs.open(p)
-    try in.readFully(0, buf) finally in.close()
-    new String(buf, "UTF-8")
-  } // fs-handle form of graft.util.FsIo.readSmallFile (callers here
-    // already hold the fs; the path-only sites use the shared helper)
+  /** The shards generation `g` carries: its `_gen_N` file's content. */
+  private def shardsOf(spark: SparkSession, out: String, g: Int): Seq[Int] =
+    graft.util.FsIo.readSmallFile(spark.sparkContext.hadoopConfiguration,
+      s"$out/_gen_$g").split(",").toSeq.filter(_.nonEmpty).map(_.trim.toInt)
 
   /** The LIVE graph: per shard, the rows of its newest carrying
     * generation — one parquet read per contributing generation,
@@ -145,10 +141,7 @@ object HnswIndex {
     val carried = scala.collection.mutable.Set.empty[Int]
     val layers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     gens.reverse.foreach { g =>
-      val shards = readSmallFile(fs,
-          new org.apache.hadoop.fs.Path(s"$out/_gen_$g"))
-        .split(",").filter(_.nonEmpty).map(_.trim.toInt)
-        .filterNot(carried)
+      val shards = shardsOf(spark, out, g).filterNot(carried)
       if (shards.nonEmpty) {
         carried ++= shards
         layers += spark.read.schema(graphSchema).parquet(s"$out/g$g/graph")
@@ -463,12 +456,10 @@ object HnswIndex {
     rebuildShards(assignShards(corpus, shards, idCol, vecCol),
         dim, m, efConstruction, shards)
       .write.mode("overwrite").partitionBy("shard").parquet(s"$out/graph")
-    val mk = s"""{"dim":$dim,"m":$m,"efC":$efConstruction,""" +
-      s""""shards":$shards,"idCol":"$idCol","vecCol":"$vecCol"}"""
-    val p = new org.apache.hadoop.fs.Path(markerPath(out))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(mk.getBytes("UTF-8")) finally os.close()
+    graft.util.FsIo.writeSmallFile(spark.sparkContext.hadoopConfiguration,
+      markerPath(out), CellMarker.of("dim" -> dim, "m" -> m,
+        "efC" -> efConstruction, "shards" -> shards, "idCol" -> idCol,
+        "vecCol" -> vecCol).json)
   }
 
   /** The store's shard count — callers accounting candidate budgets
@@ -479,20 +470,17 @@ object HnswIndex {
     readMarker(spark, out).shards
 
   private def readMarker(spark: SparkSession, out: String): Marker = {
-    val txt = graft.util.FsIo.readSmallFile(
-      spark.sparkContext.hadoopConfiguration, markerPath(out))
-    def num(k: String) = s""""$k":(-?\\d+)""".r.findFirstMatchIn(txt).get.group(1)
-    def str(k: String) = (s""""$k":"([^"]*)"""").r.findFirstMatchIn(txt).get.group(1)
-    Marker(num("dim").toInt, num("m").toInt, num("efC").toInt,
-      num("shards").toInt, str("idCol"), str("vecCol"))
+    val mk = CellMarker.parse(graft.util.FsIo.readSmallFile(
+      spark.sparkContext.hadoopConfiguration, markerPath(out)))
+    Marker(mk.dim, mk.int("m"), mk.int("efC"), mk.int("shards"), mk.idCol, mk.vecCol)
   }
 
   /** Scatter-gather query: every shard searches its graph for the
-    * broadcast query batch (ef results each), one window merges the
-    * global top-k — Solr's distributed `{!knn}`. Self-matches are
-    * excluded (the family convention). Tombstoned ids never surface
-    * (Lucene liveDocs: the node still ROUTES, it just isn't
-    * collected). */
+    * broadcast query batch (ef results each), one per-query top-k
+    * ([[PerQueryTopK]]) merges the global top-k — Solr's distributed
+    * `{!knn}`. Self-matches are excluded (the family convention).
+    * Tombstoned ids never surface (Lucene liveDocs: the node still
+    * ROUTES, it just isn't collected). */
   def query(spark: SparkSession, out: String, queries: DataFrame, k: Int,
             efSearch: Int = 64): DataFrame =
     scatterQuery(spark, out, queries, k, efSearch, None)
@@ -549,7 +537,6 @@ object HnswIndex {
       k: Int, efSearch: Int, allowed: Option[DataFrame],
       delta: Option[DataFrame],
       tombstones: Option[DataFrame]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val q = queries.select(col(mk.idCol).cast("long").as("query_id"),
         col(mk.vecCol).cast("array<double>").as("qvec"))
@@ -666,10 +653,7 @@ object HnswIndex {
             Seq("corpus_id"), "left_anti")
           .unionByName(deltaLeg)
     }
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    merged.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    PerQueryTopK(merged, "cosine", desc = true, k, batch = Some(q.length))
       .select(col("query_id"), col("rank"), col("corpus_id"), col("cosine"))
   }
 
@@ -1356,10 +1340,8 @@ object HnswIndex {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val gens = generations(fs, out)
     if (gens.size <= retain) return 0
-    val carriedBy: Map[Int, Set[Int]] = gens.map { g =>
-      g -> readSmallFile(fs, new org.apache.hadoop.fs.Path(s"$out/_gen_$g"))
-        .split(",").filter(_.nonEmpty).map(_.trim.toInt).toSet
-    }.toMap
+    val carriedBy: Map[Int, Set[Int]] =
+      gens.map(g => g -> shardsOf(spark, out, g).toSet).toMap
     // the generations a resolution at ceiling `cap` actually reads:
     // for each shard, the newest carrying generation ≤ cap
     def resolved(cap: Int): Set[Int] = {

@@ -42,7 +42,6 @@ object LateInteraction {
                    queryIdCol: String = "query_id",
                    queryPosCol: String = "qpos",
                    queryVecCol: String = "qvec"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cand = candidates.select(col("query_id").cast("long"),
       col("corpus_id").cast("long"))
     val dt = docTokens.select(col(docIdCol).cast("long").as("corpus_id"),
@@ -64,10 +63,7 @@ object LateInteraction {
       .agg(max(col("cm")).as("m"))
     val scored = perQtoken.groupBy(col("query_id"), col("corpus_id"))
       .agg(sum(col("m")).as("maxsim_milli"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("maxsim_milli").desc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    PerQueryTopK(scored, "maxsim_milli", desc = true, k)
       .select(col("query_id"), col("rank"), col("corpus_id"),
         col("maxsim_milli"))
   }
@@ -106,10 +102,7 @@ object LateInteraction {
     val centroids = Similarity.trainCentroids(keyed, nlist, sampleSize,
       seed, "tokid", "tvec")
     val (_, nearest) = Similarity.cellFns(centroids, dim)
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("i", "c").coalesce(1)
-      .write.mode("overwrite").parquet(s"$out/centroids")
+    CellStore.writeCentroids(spark, out, centroids)
     val assigned = toks
       .withColumn("tnorm", Similarity.norm(col("tvec")))
       .withColumn("cell", nearest(col("tvec")))
@@ -122,8 +115,8 @@ object LateInteraction {
       .parquet(s"$out/doctokens")
     graft.util.FsIo.writeSmallFile(
       spark.sparkContext.hadoopConfiguration, tokMarkerPath(out),
-      s"""{"dim":$dim,"eff":${centroids.length},"seed":$seed,""" +
-        s""""buckets":$buckets}""")
+      CellMarker.of("dim" -> dim, "eff" -> centroids.length, "seed" -> seed,
+        "buckets" -> buckets).json)
   }
 
   /** Late interaction end-to-end FROM THE STORE: candidates are the
@@ -139,11 +132,8 @@ object LateInteraction {
   def queryTokenStore(spark: SparkSession, out: String,
                       queryTokens: DataFrame, k: Int,
                       tokenK: Int = 16, nprobe: Int = 4): DataFrame = {
-    val txt = graft.util.FsIo.readSmallFile(
-      spark.sparkContext.hadoopConfiguration, tokMarkerPath(out))
-    def num(key: String) =
-      s""""$key":(-?\\d+)""".r.findFirstMatchIn(txt).get.group(1).toInt
-    val buckets = num("buckets")
+    val buckets = CellMarker.parse(graft.util.FsIo.readSmallFile(
+      spark.sparkContext.hadoopConfiguration, tokMarkerPath(out))).int("buckets")
     val cand = tokenCandidates(spark, out, queryTokens, tokenK, nprobe)
     // the fetch side: candidates' buckets pruned, ids semi-joined —
     // a candidate's full token set regardless of which cells hold it
@@ -166,16 +156,9 @@ object LateInteraction {
                                    queryTokens: DataFrame, tokenK: Int,
                                    nprobe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val txt = graft.util.FsIo.readSmallFile(
-      spark.sparkContext.hadoopConfiguration, tokMarkerPath(out))
-    def num(key: String) =
-      s""""$key":(-?\\d+)""".r.findFirstMatchIn(txt).get.group(1).toInt
-    val dim = num("dim"); val eff = num("eff")
     // driver-side parquet read (r18): nlist-sized frame, zero Spark
     // jobs — the serving paths are driver-job-count bound (guide §5)
-    val centroids = graft.util.SmallParquet
-      .rows(spark.sparkContext.hadoopConfiguration, s"$out/centroids")
-      .sortBy(_.int("i")).map(_.doubleArray("c")).toArray
+    val centroids = CellStore.centroidsAt(spark.sparkContext.hadoopConfiguration, out)
     val qt0 = queryTokens.select(col("query_id").cast("long"),
         col("qpos").cast("int"),
         col("qvec").cast("array<double>"))

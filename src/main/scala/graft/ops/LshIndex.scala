@@ -69,18 +69,15 @@ object LshIndex {
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$out/bands")
     graft.util.FsIo.writeSmallFile(
       spark.sparkContext.hadoopConfiguration, markerPath(out),
-      s"""{"numHashes":$numHashes,"bands":$bands,"buckets":$buckets,""" +
-        s""""idCol":"$idCol","textCol":"$textCol"}""")
+      CellMarker.of("numHashes" -> numHashes, "bands" -> bands, "buckets" -> buckets,
+        "idCol" -> idCol, "textCol" -> textCol).json)
   }
 
   private def readMarker(spark: SparkSession, out: String)
       : (Int, Int, Int, String, String) = {
-    val txt = graft.util.FsIo.readSmallFile(
-      spark.sparkContext.hadoopConfiguration, markerPath(out))
-    def num(k: String) = s""""$k":(-?\\d+)""".r.findFirstMatchIn(txt).get.group(1)
-    def str(k: String) = (s""""$k":"([^"]*)"""").r.findFirstMatchIn(txt).get.group(1)
-    (num("numHashes").toInt, num("bands").toInt, num("buckets").toInt,
-      str("idCol"), str("textCol"))
+    val m = CellMarker.parse(graft.util.FsIo.readSmallFile(
+      spark.sparkContext.hadoopConfiguration, markerPath(out)))
+    (m.int("numHashes"), m.int("bands"), m.int("buckets"), m.idCol, m.str("textCol"))
   }
 
   /** PROBE: which of `newDocs` near-duplicate the STORE? One row per

@@ -16,14 +16,14 @@ import org.apache.spark.sql.types.IntegerType
 import scala.collection.mutable
 
 /**
- * PER-QUERY TOP-n as one operator — the cut every cell-store query
- * ends in (and the ADC stage of [[Similarity.adcRank]]), in the shape
- * distributed top-k search uses: each scan partition keeps a bounded
- * partial top-n per query, one shuffle keyed by query feeds a single
- * merge. The shuffle runs INSIDE the operator's RDD, so AQE plans no
- * exchange and the cut costs no job of its own; a batch of one query
- * merges in one reducer and reports `SinglePartition`, so a caller's
- * `orderBy("rank")` adds no exchange either.
+ * PER-QUERY TOP-n as one operator — the cut every ANN query ends in
+ * (cell stores, HNSW's scatter merge, the flat batch operators), in
+ * the shape distributed top-k search uses: each scan partition keeps
+ * a bounded partial top-n per query, one shuffle keyed by query feeds
+ * a single merge. The shuffle runs INSIDE the operator's RDD, so AQE
+ * plans no exchange and the cut costs no job of its own; a batch of
+ * one query merges in one reducer and reports `SinglePartition`, so a
+ * caller's `orderBy("rank")` adds no exchange either.
  *
  * Semantics are exactly `row_number() OVER (PARTITION BY query_id
  * ORDER BY score [DESC|ASC], corpus_id) <= n` — ranked by Spark's own

@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.util.Checkpoints.CutOps
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
@@ -50,10 +49,7 @@ object Similarity {
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("corpus_id"))
       .withColumn("cosine", dot(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    PerQueryTopK(scored, "cosine", desc = true, k)
       .select(col("query_id"), col("rank"), col("corpus_id"), col("cosine"))
   }
 
@@ -101,10 +97,7 @@ object Similarity {
         when(col("qpnorm") === 0d || col("cpnorm") === 0d, lit(-2.0))
           .otherwise(dot(col("qpre"), col("cpre")) /
             (col("qpnorm") * col("cpnorm"))))
-    val w1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("pcos").desc, col("corpus_id").asc)
-    val cand = pre.withColumn("prank", row_number().over(w1))
-      .filter(col("prank") <= rerank)
+    val cand = PerQueryTopK(pre, "pcos", desc = true, rerank)
       .select("query_id", "corpus_id")
     // stage 2: full-dim exact cosine over candidates only
     val rer = cand
@@ -113,10 +106,7 @@ object Similarity {
         Seq("query_id"))
       .withColumn("cosine",
         dot(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    rer.withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
+    PerQueryTopK(rer, "cosine", desc = true, k)
       .select(col("query_id"), col("rank"), col("corpus_id"))
   }
 
@@ -168,17 +158,12 @@ object Similarity {
       .filter(col("query_id") =!= col("corpus_id"))
       .withColumn("coarse_r",
         round(dot(col("qhead"), col("chead")) / (col("qnorm") * col("cnorm")), 6))
-    val w1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("coarse_r").desc, col("corpus_id").asc)
-    val shortlisted = coarse.withColumn("srank", row_number().over(w1))
-      .filter(col("srank") <= shortlist)
+    val shortlisted = PerQueryTopK(coarse, "coarse_r", desc = true, shortlist)
+      .drop("rank")
     val reranked = shortlisted
       .withColumn("cosine_r",
         round(dot(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")), 6))
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine_r").desc, col("corpus_id").asc)
-    reranked.withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
+    PerQueryTopK(reranked, "cosine_r", desc = true, k)
       .select(col("query_id"), col("rank"), col("corpus_id"), col("cosine_r"))
   }
 
@@ -539,9 +524,7 @@ object Similarity {
       .filter(col("query_id") =!= col("corpus_id"))
       .withColumn("cosine", dot(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
       .select(col("query_id"), col("corpus_id"), col("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    PerQueryTopK(scored, "cosine", desc = true, k)
   }
 
   /**
@@ -693,9 +676,7 @@ object Similarity {
         zip_with(col("codes"), sequence(lit(0), lit(m - 1)),
           (code, s) => element_at(col("qtable"), s * lit(ksub) + code + lit(1))),
         lit(0.0), (acc, x) => acc + x))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").asc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    PerQueryTopK(scored, "adc", desc = false, k)
       .select(col("query_id"), col("rank"), col("corpus_id"))
   }
 
@@ -768,9 +749,7 @@ object Similarity {
       .join(broadcast(q), Seq("query_id"))
       .withColumn("cosine", dot(col("qvec"), col("cvec")) /
         (col("qnorm") * col("cnorm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    rescored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    PerQueryTopK(rescored, "cosine", desc = true, k)
       .select(col("query_id"), col("rank"), col("corpus_id"))
   }
 
@@ -979,9 +958,6 @@ object Similarity {
       .join(broadcast(q), Seq("query_id"))
       .withColumn("cosine", dot(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
       .select(col("query_id"), col("corpus_id"), col("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    PerQueryTopK(scored, "cosine", desc = true, k)
   }
 }

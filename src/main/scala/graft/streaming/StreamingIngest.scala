@@ -23,12 +23,16 @@ object StreamingIngest {
   }
 
   /** Run a streaming query body with `spark.sql.shuffle.partitions`
-    * bounded, restoring the session value afterwards (r18, guide §2 /
-    * VERDICT_r17 item 8). AQE does not apply to streaming plans, so
-    * the session's shuffle-partition count is the RAW number of state
-    * store instances (plus their per-micro-batch commit/snapshot I/O)
-    * and reduce tasks every trigger — a count sized for batch scans
-    * multiplies fixed state-store overhead on every micro-batch.
+    * bounded. The bound lives on a session of its own — `spark`'s
+    * modifiable SQL settings copied into `spark.newSession()` — which
+    * the body receives and must build its streams from; the caller's
+    * session is never touched, so a concurrent leg planning on it
+    * keeps its own partition count. AQE does not apply to streaming
+    * plans, so the session's shuffle-partition count is the RAW number
+    * of state store instances (plus their per-micro-batch
+    * commit/snapshot I/O) and reduce tasks every trigger — a count
+    * sized for batch scans multiplies fixed state-store overhead on
+    * every micro-batch.
     * Spark pins a stateful query's partition count into its checkpoint
     * at first start, which is exactly why it must be chosen
     * deliberately rather than inherited from the batch default.
@@ -36,14 +40,17 @@ object StreamingIngest {
     * the stream's peak-throughput task count; the default bounds the
     * batch setting at 8 (never raises it), which keeps tiny local
     * benches honest and is a sane floor for a single-box stream. */
-  def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
+  def withStatePartitions[T](spark: SparkSession)(body: SparkSession => T): T = {
     val key = "spark.sql.shuffle.partitions"
-    val prior = spark.conf.get(key)
     val n = spark.conf.getOption("spark.graft.stream.statePartitions")
       .map(_.toInt)
-      .getOrElse(math.min(prior.toInt, 8))
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prior)
+      .getOrElse(math.min(spark.conf.get(key).toInt, 8))
+    val scoped = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (scoped.conf.isModifiable(k)) scoped.conf.set(k, v)
+    }
+    scoped.conf.set(key, n.toString)
+    body(scoped)
   }
 
   /**

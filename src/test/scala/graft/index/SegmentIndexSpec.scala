@@ -429,6 +429,15 @@ class SegmentIndexSpec extends AnyFunSuite {
     }
     assert(snapshot() === before,
       "a refused upsert batch must leave the store byte-identical")
+    // the same refusal with a one-doc flush threshold: every writer
+    // flushes a segment per doc, so the refused part has segments on
+    // disk when it hits the duplicate — they must not outlive the batch
+    assertThrows[IllegalArgumentException] {
+      SegmentShardSink.upsertBuffered(spark, out, bad, SegmentIndex.MergePolicy(),
+        retainGenerations = 1, maxBufferedDocs = 1)
+    }
+    assert(snapshot() === before,
+      "a refused upsert batch that flushed mid-write left files behind")
     // and the store still serves — a clean retry of a corrected batch
     SegmentShardSink.upsert(spark, out,
       Seq(("5", "name5 v2")).toDF("id", "name"))

@@ -6,11 +6,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** JOB BUDGETS of one `{!knn}` request per cell-store tier — every
-  * stage of a cell-store query is one Spark job (the probe and its
-  * broadcasts run on the driver, data subdirs read under their footer
-  * schema, the per-query top-n shuffles inside its own operator).
-  * Budgets may only go down. */
+/** JOB BUDGETS of one `{!knn}` request per cell-store tier and on
+  * HNSW — every stage of a cell-store query is one Spark job (the
+  * probe and its broadcasts run on the driver, data subdirs read
+  * under their footer schema, the per-query top-n shuffles inside its
+  * own operator). Budgets may only go down. */
 class CellStoreJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private lazy val emb = Tables.embeddings(spark, TestSpark.sf).filter(col("vec_id") < 400)
@@ -48,6 +48,13 @@ class CellStoreJobsSpec extends AnyFunSuite {
     // IVF: scan + top-n; IVF-PQ: ADC candidates, sidecar re-rank; MRL:
     // prefix candidates, sidecar re-rank
     assert((knnJobs(ivf), knnJobs(pq), knnJobs(mrl)) === ((1, 2, 2)))
+  }
+
+  test("one {!knn} request on HNSW: 2 jobs") {
+    val hnsw = s"$root/hnsw"
+    Graft.buildHnswIndex(emb, hnsw, 64)
+    // the graph's shard exchange, then the walk with its per-query top-k
+    assert(knnJobs(hnsw) === 2)
   }
 
   test("a parquet scan joined to a broadcast local Seq collects in one job") {

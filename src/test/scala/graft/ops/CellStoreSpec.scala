@@ -72,10 +72,12 @@ class CellStoreSpec extends AnyFunSuite {
 
   /** One generated cut: rows (query, corpus, score) spread over
     * `slices` scan partitions (more slices than rows leaves some
-    * empty), the cut's parameters, and whether ids are strings. */
+    * empty), the cut's parameters, whether ids are strings, and the
+    * score column's type — double, or the integer and long scores of
+    * `hamming` and `maxsim_milli`. */
   private case class Cut(rows: Seq[(Int, Int, Option[Double])], slices: Int, n: Int,
                          desc: Boolean, collapse: Boolean, batchKnown: Boolean,
-                         stringIds: Boolean)
+                         stringIds: Boolean, scoreType: DataType)
 
   // few distinct values: ties, duplicate ids, NaN, ±0.0 and nulls are common
   private val genScore: Gen[Option[Double]] = Gen.frequency(
@@ -94,7 +96,9 @@ class CellStoreSpec extends AnyFunSuite {
     collapse <- Gen.oneOf(true, false)
     batchKnown <- Gen.oneOf(true, false)
     stringIds <- Gen.oneOf(true, false)
-  } yield Cut(rows, slices, n, desc, collapse, batchKnown, stringIds)
+    scoreType <- Gen.frequency(2 -> Gen.const(DoubleType), 1 -> Gen.const(IntegerType),
+      1 -> Gen.const(LongType))
+  } yield Cut(rows, slices, n, desc, collapse, batchKnown, stringIds, scoreType)
 
   /** Rows as comparable strings: ±0.0 read as one value (SQL `max`
     * keeps whichever equal copy it meets first, and tied rows rank in
@@ -111,14 +115,22 @@ class CellStoreSpec extends AnyFunSuite {
     val prop = Prop.forAll(genCut) { c =>
       val idType = if (c.stringIds) StringType else LongType
       def id(i: Int): Any = if (c.stringIds) s"id$i" else i.toLong
+      // integral scores keep the ties: x·4 rounded, NaN a value of its own
+      def value(x: Double): Any = c.scoreType match {
+        case DoubleType => x
+        case t =>
+          val i = if (x.isNaN) 3L else math.round(x * 4)
+          if (t == IntegerType) i.toInt else i
+      }
       val schema = StructType(Seq(StructField("query_id", idType),
         StructField("corpus_id", idType),
         // a score column without nulls is declared non-nullable, as the
         // stores' own score expressions may be
-        StructField("score", DoubleType, nullable = c.rows.exists(_._3.isEmpty)),
+        StructField("score", c.scoreType, nullable = c.rows.exists(_._3.isEmpty)),
         StructField("tag", StringType)))
       val rows = c.rows.map { case (q, k, s) =>
-        Row(id(q), id(k), s.orNull, s"$k:${s.map(x => if (x == 0.0) 0.0 else x)}")
+        val v = s.map(value)
+        Row(id(q), id(k), v.orNull, s"$k:${v.map { case d: Double if d == 0.0 => 0.0; case x => x }}")
       }
       val scored = spark.createDataFrame(spark.sparkContext.parallelize(rows, c.slices), schema)
       val batch = if (c.batchKnown) Some(c.rows.map(_._1).distinct.size) else None

@@ -29,6 +29,10 @@ class HnswIndexSpec extends AnyFunSuite {
     // different input partitioning must not change the graph either
     HnswIndex.build(emb.repartition(7), again, dim = 64)
     assert(graphRows(idx) === graphRows(again))
+    // the params marker's bytes are the store format: fixed key order
+    assert(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$again/_hnsw_marker.json")), "UTF-8") ===
+      """{"dim":64,"m":8,"efC":64,"shards":4,"idCol":"vec_id","vecCol":"embedding"}""")
   }
 
   test("scatter-gather query: k rows per query, rank order by (cosine " +

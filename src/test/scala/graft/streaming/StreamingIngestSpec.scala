@@ -32,6 +32,21 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(got.nonEmpty)
   }
 
+  test("withStatePartitions bounds a session of the body's own: the " +
+      "caller's session keeps its partition count while the body runs") {
+    val key = "spark.sql.shuffle.partitions"
+    val caller = spark.newSession()
+    caller.conf.set(key, "24")
+    caller.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    val seen = StreamingIngest.withStatePartitions(caller) { ss =>
+      (ss ne caller, caller.conf.get(key), ss.conf.get(key),
+        ss.conf.get("spark.sql.session.timeZone"))
+    }
+    // the body's session carries the caller's settings, bar the bound
+    assert(seen === ((true, "24", "8", "Asia/Tokyo")))
+    assert(caller.conf.get(key) === "24")
+  }
+
   test("dedup ingest: cross-batch state drops repeats; restart re-admits the same set") {
     import spark.implicits._
     val srcDir = java.nio.file.Files.createTempDirectory("graft_dedup_src_").toString
