@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
  * merge, MapReduceIndexerTool.java:113-150), for users switching from
  * the reference. Each stage is the library operator documented in its
  * own module; this just sequences them over one Catalyst plan + one
- * shuffle.
+ * shuffle. It holds the pipeline and request entry points only; every
+ * other operator is called on its own module.
  */
 object Graft {
 
@@ -307,20 +308,6 @@ object Graft {
                   term: String, fields: Seq[String]): DataFrame =
     graft.index.SegmentSearch.termQuery(spark, store, field, term, fields)
 
-  /** Distributed delete-by-term over a segment store (tombstones only;
-    * run [[graft.index.SegmentShardSink.optimize]] to reclaim).
-    * Returns newly deleted doc count. */
-  def deleteFromIndex(spark: SparkSession, store: String, field: String,
-                      term: String): Long =
-    graft.index.SegmentShardSink.deleteByTerm(spark, store, field, term)
-
-  /** Solr `deleteByQuery` over a segment store: the full query-string
-    * surface (boolean/range/prefix/analyzed-token), ids resolved via
-    * the index table's pushdown and tombstoned shard-locally (see
-    * [[graft.index.SegmentShardSink.deleteByQuery]]). */
-  def deleteByQuery(spark: SparkSession, store: String, q: String): Long =
-    graft.index.SegmentShardSink.deleteByQuery(spark, store, q)
-
   /** Solr facet.range over the segment store: gap-width buckets on a
     * numeric field with live counts under a query-string fq, empty
     * buckets kept (see [[graft.index.SegmentSearch.rangeFacet]]). */
@@ -409,13 +396,6 @@ object Graft {
     (idx, default, marker.analyzed)
   }
 
-  /** Solr TermVectorComponent: (doc_id, term, tf, df) for requested
-    * ids, served from postings (see
-    * [[graft.index.SegmentSearch.termVectors]]). */
-  def termVectors(spark: SparkSession, store: String, field: String,
-                  ids: Seq[String]): DataFrame =
-    graft.index.SegmentSearch.termVectors(spark, store, field, ids)
-
   /** Compile a Solr function query (`recip(age,1,1000,1000)`,
     * `div(x,y)`, ...) to a Column over `df`'s schema — the
     * defType=func / sort-by-function / edismax boost-function surface
@@ -436,151 +416,6 @@ object Graft {
                     cfg: graft.ops.CorpusPipeline.Config =
                       graft.ops.CorpusPipeline.Config()): DataFrame =
     graft.ops.CorpusPipeline.prepare(docs, idCol, textCol, cfg)
-
-  /** [[prepareCorpus]]'s provenance audit: one (id, stage) row per
-    * dropped document (see [[graft.ops.CorpusPipeline.auditDrops]]). */
-  def auditCorpus(docs: DataFrame, idCol: String, textCol: String,
-                  cfg: graft.ops.CorpusPipeline.Config =
-                    graft.ops.CorpusPipeline.Config()): DataFrame =
-    graft.ops.CorpusPipeline.auditDrops(docs, idCol, textCol, cfg)
-
-  /** Exact cross-document substring-span dedup (see
-    * [[graft.ops.SubstringDedup.dropDuplicatedSpans]]). */
-  def dropDuplicatedSpans(docs: DataFrame, idCol: String, textCol: String,
-                          k: Int = 5, minOccurrences: Int = 2): DataFrame =
-    graft.ops.SubstringDedup.dropDuplicatedSpans(docs, idCol, textCol, k, minOccurrences)
-
-  /** SemDeDup semantic dedup — sign-bucket cells (oracle-checkable)
-    * or trained IVF cells via [[graft.ops.Similarity.semanticDedupIvf]]
-    * (see [[graft.ops.Similarity.semanticDedup]]). */
-  def semanticDedup(df: DataFrame, threshold: Double, bits: Int = 8): DataFrame =
-    graft.ops.Similarity.semanticDedup(df, threshold, bits)
-
-  /** Learn BPE merges from a corpus (see [[graft.text.Bpe.learn]]);
-    * encode with [[graft.text.Bpe.encode]]'s fused kernel. */
-  def learnBpe(docs: DataFrame, textCol: String, numMerges: Int): Seq[graft.text.Bpe.Merge] =
-    graft.text.Bpe.learn(docs, textCol, numMerges)
-
-  /** Byte-level BPE training (GPT-2 / HF ByteLevel — the production
-    * tokenizer form; see [[graft.text.Bpe.learnByteLevel]]). */
-  def learnByteLevelBpe(docs: DataFrame, textCol: String,
-                        numMerges: Int): Seq[graft.text.Bpe.Merge] =
-    graft.text.Bpe.learnByteLevel(docs, textCol, numMerges)
-
-  /** Byte-level production encoding of a text column — GPT-2
-    * pretokenize, alphabet map, fused BPE kernel; decode with
-    * [[decodeByteLevel]] inverts exactly. */
-  def encodeByteLevel(text: Column,
-                      merges: Seq[graft.text.Bpe.Merge]): Column =
-    graft.text.Bpe.encodeByteLevel(text, merges)
-
-  /** Exact ids→text decode for byte-level tokens. */
-  def decodeByteLevel(tokens: Column): Column =
-    graft.text.Bpe.decodeByteLevel(tokens)
-
-  /** Temperature-scaled mixture sampling (see
-    * [[graft.ops.Sampling.temperatureSample]]). */
-  def temperatureSample(df: DataFrame, grp: Column, key: Column,
-                        alpha: Double, targetFraction: Double): DataFrame =
-    graft.ops.Sampling.temperatureSample(df, grp, key, alpha, targetFraction)
-
-  /** One-row corpus duplication health metric (see
-    * [[graft.dedup.Dedup.duplicationProfile]]). */
-  def duplicationProfile(df: DataFrame, content: Column): DataFrame =
-    graft.dedup.Dedup.duplicationProfile(df, content)
-
-  /** Equi-width histogram profile (see
-    * [[graft.ops.Profiling.histogram]]). */
-  def histogram(df: DataFrame, c: Column, lo: Double, hi: Double,
-                buckets: Int): DataFrame =
-    graft.ops.Profiling.histogram(df, c, lo, hi, buckets)
-
-  /** Query elevation — pinned/excluded ids for one query text (see
-    * [[graft.search.Elevation]]). */
-  def elevate(scored: DataFrame, idCol: Column, organic: Column,
-              elevated: Seq[String], excluded: Seq[String] = Nil): DataFrame =
-    graft.search.Elevation(scored, idCol, organic,
-      graft.search.Elevation.Config(elevated, excluded))
-
-  /** Reciprocal Rank Fusion of ranked candidate lists (see
-    * [[graft.ops.HybridSearch.rrf]]). */
-  def rrf(lists: Seq[DataFrame], idCol: String, rankCol: String,
-          k0: Int = 60): DataFrame =
-    graft.ops.HybridSearch.rrf(lists, idCol, rankCol, k0)
-
-  /** Per-group token-budget corpus selection (see
-    * [[graft.ops.Sampling.tokenBudgetSelect]]). */
-  def tokenBudgetSelect(df: DataFrame, grp: Column, order: Seq[Column],
-                        tokens: Column, budget: Long): DataFrame =
-    graft.ops.Sampling.tokenBudgetSelect(df, grp, order, tokens, budget)
-
-  /** Deterministic fill-in-the-middle transform (see
-    * [[graft.ops.FimTransform.fimSplit]]). */
-  def fimSplit(df: DataFrame, id: Column, text: Column,
-               rate: Double = 0.5, salt: String = "fim"): DataFrame =
-    graft.ops.FimTransform.fimSplit(df, id, text, rate, salt)
-
-  /** DSIR importance-resampling selection of target-like raw docs
-    * (see [[graft.ops.Dsir.select]]). */
-  def dsirSelect(raw: DataFrame, target: DataFrame, idCol: String,
-                 textCol: String, k: Int, buckets: Int = 512): DataFrame =
-    graft.ops.Dsir.select(raw, target, idCol, textCol, k, buckets)
-
-  /** Graded benchmark-contamination fractions (see
-    * [[graft.ops.Decontamination.overlapFraction]]). */
-  def contaminationFraction(corpus: DataFrame, corpusId: Column,
-                            corpusTokens: Column, bench: DataFrame,
-                            benchTokens: Column, n: Int = 8,
-                            tau: Double = 0.05): DataFrame =
-    graft.ops.Decontamination.overlapFraction(corpus, corpusId, corpusTokens,
-      bench, benchTokens, n, tau)
-
-  /** C4-style line+document cleaning (see
-    * [[graft.text.C4Filters.c4Clean]]). */
-  def c4Clean(docs: DataFrame, textCol: Column, minWords: Int = 3,
-              minLines: Int = 3, badWords: Seq[String] = Nil): DataFrame =
-    graft.text.C4Filters.c4Clean(docs, textCol, minWords, minLines, badWords)
-
-  /** Power-of-two sequence-length bucketing with padding waste (see
-    * [[graft.ops.Profiling.lengthBuckets]]). */
-  def lengthBuckets(df: DataFrame, tokens: Column): DataFrame =
-    graft.ops.Profiling.lengthBuckets(df, tokens)
-
-  /** Gopher top-n-gram char coverage per doc (see
-    * [[graft.text.TextAnalysis.topNgramCharFraction]]). */
-  def topNgramCharFraction(docs: DataFrame, idCol: String, textCol: String,
-                           n: Int = 2): DataFrame =
-    graft.text.TextAnalysis.topNgramCharFraction(docs, idCol, textCol, n)
-
-  /** Dedup remap table (loser → kept representative, see
-    * [[graft.dedup.Dedup.dedupMap]]). */
-  def dedupMap(df: DataFrame, id: Column, content: Column,
-               keepBy: Seq[Column]): DataFrame =
-    graft.dedup.Dedup.dedupMap(df, id, content, keepBy)
-
-  /** Curriculum staging with deterministic within-stage order (see
-    * [[graft.ops.Sampling.curriculum]]). */
-  def curriculum(df: DataFrame, id: Column, difficulty: Column,
-                 thresholds: Seq[Double], salt: String = "cur"): DataFrame =
-    graft.ops.Sampling.curriculum(df, id, difficulty, thresholds, salt)
-
-  /** Corpus-global first-occurrence line dedup (see
-    * [[graft.text.C4Filters.dedupLinesAcross]]). */
-  def dedupLinesAcross(docs: DataFrame, id: Column, textCol: Column): DataFrame =
-    graft.text.C4Filters.dedupLinesAcross(docs, id, textCol)
-
-  /** Deterministic T5-style span corruption (see
-    * [[graft.ops.FimTransform.spanCorrupt]]). */
-  def spanCorrupt(df: DataFrame, id: Column, text: Column,
-                  spanFrac: Double = 0.15, salt: String = "t5"): DataFrame =
-    graft.ops.FimTransform.spanCorrupt(df, id, text, spanFrac, salt)
-
-  /** Solr 9 {!knn} dense-vector query: exact cosine topK with the
-    * optional fq PRE-filter (see [[graft.search.KnnQuery]]). */
-  def knn(df: DataFrame, q: String, idCol: String,
-          fq: Option[String] = None,
-          textFields: Set[String] = Set.empty): DataFrame =
-    graft.search.KnnQuery.knn(df, q, idCol, fq, textFields)
 
   /** Solr 9 {!knn} served from the PERSISTED sharded HNSW store —
     * the real Lucene execution shape (per-shard graph walk +
@@ -716,29 +551,6 @@ object Graft {
       "rnk", k0)
   }
 
-  /** Gopher duplicate-line signals over a per-doc lines array (see
-    * [[graft.text.TextAnalysis.duplicateLineColumns]]). */
-  def duplicateLineColumns(lines: Column): Seq[(String, Column)] =
-    graft.text.TextAnalysis.duplicateLineColumns(lines)
-
-  /** Gopher duplicated-n-gram token coverage, one fused per-row pass
-    * (see [[graft.text.TextAnalysis.dupNgramCoverage]]). */
-  def dupNgramCoverage(tokens: Column, n: Int): Column =
-    graft.text.TextAnalysis.dupNgramCoverage(tokens, n)
-
-  /** SFT conversation assembly with loss-mask spans (see
-    * [[graft.ops.SftAssembly.assembleConversations]]). */
-  def assembleConversations(df: DataFrame, grp: Column, order: Seq[Column],
-                            role: Column, text: Column,
-                            maskRoles: Seq[String]): DataFrame =
-    graft.ops.SftAssembly.assembleConversations(df, grp, order, role, text, maskRoles)
-
-  /** Epoch/repeat-factor mixing allocation (see
-    * [[graft.ops.Sampling.epochAllocation]]). */
-  def epochAllocation(df: DataFrame, grp: Column, cost: Column,
-                      budget: Long, alpha: Double, maxEpochs: Double): DataFrame =
-    graft.ops.Sampling.epochAllocation(df, grp, cost, budget, alpha, maxEpochs)
-
   /** Seed quality classifier: train count-based weights on a labeled
     * seed (see [[graft.ops.QualityClassifier]]). */
   def trainSeedClassifier(docs: DataFrame, idCol: String, textCol: String,
@@ -750,12 +562,6 @@ object Graft {
                           weights: DataFrame): DataFrame =
     graft.ops.QualityClassifier.score(docs, idCol, textCol, weights)
 
-  /** CCNet per-language perplexity buckets (see
-    * [[graft.text.TextAnalysis.perplexityBuckets]]). */
-  def perplexityBuckets(docs: DataFrame, idCol: String, textCol: String,
-                        langCol: String): DataFrame =
-    graft.text.TextAnalysis.perplexityBuckets(docs, idCol, textCol, langCol)
-
   /** Exact-quota stratified train/val/test split (see
     * [[graft.ops.Sampling.stratifiedSplit]]). */
   def stratifiedSplit(df: DataFrame, stratum: Column, key: Column): DataFrame =
@@ -766,46 +572,11 @@ object Graft {
                       score: Column): DataFrame =
     graft.ops.Preference.pairs(df, prompt, id, score)
 
-  /** Stupid Backoff trigram LM scoring against a model corpus (see
-    * [[graft.text.TextAnalysis.stupidBackoffScore]]). */
-  def stupidBackoffScore(docs: DataFrame, modelDocs: DataFrame,
-                         idCol: String, textCol: String): DataFrame =
-    graft.text.TextAnalysis.stupidBackoffScore(docs, modelDocs, idCol, textCol)
-
-  /** Solr /replication backup: snapshot a store (see
-    * [[graft.index.Backup.backup]]). */
-  def backupIndex(spark: SparkSession, store: String, destDir: String,
-                  name: String): String =
-    graft.index.Backup.backup(spark, store, destDir, name)
-
-  /** Solr /replication restore (see [[graft.index.Backup.restore]]). */
-  def restoreIndex(spark: SparkSession, snapshot: String, dest: String): Unit =
-    graft.index.Backup.restore(spark, snapshot, dest)
-
-  /** Optimistic-concurrency upsert under the Solr _version_ contract
-    * (see [[graft.index.SegmentShardSink.conditionalUpsert]]). */
-  def upsertIndexOptimistic(spark: SparkSession, store: String,
-                            updates: DataFrame, versionCol: String,
-                            newVersion: Long): (DataFrame, DataFrame) =
-    graft.index.SegmentShardSink.conditionalUpsert(
-      spark, store, updates, versionCol, newVersion)
-
   /** Cross-source duplication audit (see
     * [[graft.ops.Profiling.sourceOverlap]]). */
   def sourceOverlap(df: DataFrame, src: Column, text: Column,
                     n: Int = 3): DataFrame =
     graft.ops.Profiling.sourceOverlap(df, src, text, n)
-
-  /** Per-domain boilerplate header/footer strip (see
-    * [[graft.text.C4Filters.stripDomainChrome]]). */
-  def stripDomainChrome(docs: DataFrame, srcCol: Column, textCol: Column,
-                        tauMilli: Int = 500): DataFrame =
-    graft.text.C4Filters.stripDomainChrome(docs, srcCol, textCol, tauMilli)
-
-  /** Avro object-container write sink (see
-    * [[graft.sources.AvroSource.write]]). */
-  def writeAvro(df: DataFrame, path: String): Unit =
-    graft.sources.AvroSource.write(df, path)
 
   /** Corpus snapshot diff (see [[graft.ops.Profiling.corpusDiff]]). */
   def corpusDiff(oldDf: DataFrame, newDf: DataFrame, id: Column,
@@ -821,140 +592,21 @@ object Graft {
               pf2: Seq[(String, Long)] = Nil): DataFrame =
     graft.search.Edismax.query(df, q, qf, mm, rows, tieBreak, pf, bf, pf2)
 
-  /** Ranked-retrieval eval: MRR + nDCG@k (see
-    * [[graft.ops.RankingEval.evalRanked]]). */
-  def evalRanked(ranked: DataFrame, query: Column, rank: Column,
-                 rel: Column, k: Int): DataFrame =
-    graft.ops.RankingEval.evalRanked(ranked, query, rank, rel, k)
-
   /** Skip-gram (center, context, cnt) pair extraction (see
     * [[graft.text.SkipGrams.pairs]]). */
   def skipGramPairs(docs: DataFrame, textCol: String, window: Int = 2): DataFrame =
     graft.text.SkipGrams.pairs(docs, textCol, window)
 
-  /** Fuzzy term query served from a segment store (`field:term~N`,
-    * see [[graft.index.SegmentSearch.fuzzyQuery]]). */
-  def fuzzySearchIndex(spark: SparkSession, store: String, field: String,
-                       term: String, maxEdits: Int,
-                       fields: Seq[String]): DataFrame =
-    graft.index.SegmentSearch.fuzzyQuery(spark, store, field, term, maxEdits, fields)
-
-  /** Write a binary payload column as TFRecord shards (see
-    * [[graft.sources.TfRecord.write]]). */
-  def writeTfRecord(df: DataFrame, payload: org.apache.spark.sql.Column,
-                    path: String): Unit =
-    graft.sources.TfRecord.write(df, payload, path)
-
-  /** Read TFRecord shards as (path, record_index, payload, corrupt)
-    * (see [[graft.sources.TfRecord.read]]). */
-  def readTfRecord(spark: SparkSession, path: String): DataFrame =
-    graft.sources.TfRecord.read(spark, path)
-
-  /** Deploy built shards into a live Solr-protocol cluster over HTTP —
-    * merge fan-out, fail-fast, commit-after-all (see
-    * [[graft.index.HttpGoLive]]). */
-  def goLiveHttp(shards: Seq[(Int, String)], targets: Seq[String],
-                 threads: Int = 4): Unit =
-    new graft.index.HttpGoLive(threads).goLive(shards, targets)
-
-  /** Incoming rows not yet in the corpus, decided by a broadcast
-    * Bloom prefilter + exact anti-join on the hits only (see
-    * [[graft.ops.BloomDedup]]). */
-  def bloomNewRows(incoming: DataFrame, keyCol: String,
-                   corpusKeys: org.apache.spark.sql.Dataset[String],
-                   expectedItems: Long, fpp: Double = 0.01): DataFrame =
-    graft.ops.BloomDedup.newRows(incoming, keyCol, corpusKeys, expectedItems, fpp)
-
-  /** Stream a frame into live Solr-protocol shard leaders: routed
-    * repartition, concurrent batched JSON updates, commit after the
-    * job (see [[graft.index.LiveSolrSink]]). */
-  def liveSolrWrite(df: DataFrame, idCol: String, targets: Seq[String],
-                    batchSize: Int = 100, commit: Boolean = true): Unit =
-    graft.index.LiveSolrSink.write(df, idCol, targets,
-      batchSize = batchSize, commit = commit)
-
-  /** All shortest paths between two nodes over an edge frame (see
-    * [[graft.ops.GraphOps.shortestPaths]]). */
-  def shortestPaths(edges: DataFrame, fromCol: org.apache.spark.sql.Column,
-                    toCol: org.apache.spark.sql.Column, source: String,
-                    target: String, maxDepth: Int): DataFrame =
-    graft.ops.GraphOps.shortestPaths(edges, fromCol, toCol, source, target, maxDepth)
-
-  /** Morton-interleave column for Z-order clustering (see
-    * [[graft.ops.ZOrder]]). */
-  def zorder(bitsPer: Int, dims: org.apache.spark.sql.Column*): org.apache.spark.sql.Column =
-    graft.ops.ZOrder.zorderCol(bitsPer, dims: _*)
-
-  /** Cluster a frame along the Z-curve and write parquet files with
-    * tight per-file min/max on every clustered column. */
-  def zorderWrite(df: DataFrame, path: String, numFiles: Int, bitsPer: Int,
-                  dims: org.apache.spark.sql.Column*): Unit =
-    graft.ops.ZOrder.clusterWrite(df, path, numFiles, bitsPer, dims: _*)
-
-  /** EXACT heavy hitters at support `phi`, count-min-sketch pruned
-    * (see [[graft.ops.CountMin]]). */
-  def heavyHitters(df: DataFrame, itemCol: String, phi: Double,
-                   epsilon: Double = 0.0005): DataFrame =
-    graft.ops.CountMin.heavyHitters(df, itemCol, phi, epsilon)
-
-  /** Per-source corpus snapshot diff rollup (see
-    * [[graft.ops.Profiling.corpusDiffBySource]]). */
-  def corpusDiffBySource(oldSnap: DataFrame, newSnap: DataFrame, key: String,
-                         source: String, fp: org.apache.spark.sql.Column): DataFrame =
-    graft.ops.Profiling.corpusDiffBySource(oldSnap, newSnap, key, source, fp)
-
-  /** Export a frame as Solr update-XML part files (see
-    * [[graft.index.SolrExport]]). */
-  def solrXmlExport(df: DataFrame, path: String, numFiles: Int = 1): Unit =
-    graft.index.SolrExport.writeUpdateXml(df, path, numFiles)
-
-  /** Unbounded-manifest binary source — paths never materialize on the
-    * driver (see [[graft.sources.BinaryFiles.readManifestDistributed]]). */
-  def readManifestDistributed(spark: SparkSession, manifest: String,
-                              partitions: Int = 0,
-                              maxBytes: Int = 64 << 20): DataFrame =
-    graft.sources.BinaryFiles.readManifestDistributed(spark, manifest, partitions, maxBytes)
-
-  /** WET text records — Common Crawl's extracted-text profile (see
-    * [[graft.sources.Warc.readWet]]); `.wet.gz` via the archive form. */
-  def readWet(spark: SparkSession, path: String): DataFrame =
-    graft.sources.Warc.readWet(spark, path)
-
-  def readWetArchive(spark: SparkSession, path: String): DataFrame =
-    graft.sources.Warc.readWetArchive(spark, path)
-
-  /** FULL raw-crawl WARC: response records split into HTTP status /
-    * declared Content-Type / binary entity payload, WARC-Date carried
-    * for best-capture selection (see [[graft.sources.Warc.readWarc]]). */
-  def readWarc(spark: SparkSession, path: String): DataFrame =
-    graft.sources.Warc.readWarc(spark, path)
-
-  def readWarcArchive(spark: SparkSession, path: String): DataFrame =
-    graft.sources.Warc.readWarcArchive(spark, path)
-
-  /** Container-aware frame sampling over binary payloads: MP4/FLV emit
-    * REAL keyframe offsets from their own sample tables, everything
-    * else falls back to byte-stride windows (see
-    * [[graft.ops.Multimodal.sampleContainerFrames]]). */
-  def sampleContainerFrames(spark: SparkSession, df: DataFrame, every: Int,
-                            frameLen: Int, maxFrames: Int = 64): DataFrame =
-    graft.ops.Multimodal.sampleContainerFrames(spark, df, every, frameLen, maxFrames).toDF()
-
-  /** One-blob document parse by sniffed-or-declared MIME (the
-    * solrCell/Tika analog; see [[graft.sources.DocumentParser.parse]]):
-    * returns (text, metadata) for the ~20 dependency-free formats. */
-  def parseDocument(mime: String, bytes: Array[Byte]): (String, Map[String, String]) = {
-    val d = graft.sources.DocumentParser.parse(mime, bytes)
-    (d.text, d.metadata)
-  }
-
   // ── persisted ANN index stores (the FAISS-analog serving tier) ──
   // Build once, query many; incremental add against frozen quantizers;
   // remove_ids tombstones + purge. Every method resolves the store's
-  // codec through the cell-store registry (graft.ops.CellStore), so
-  // one facade serves both tiers: IVF (raw vectors, exact cosines over
-  // probed cells) and IVF-PQ (m codes per vector, ~32× smaller, ADC
-  // scoring — the billion-vector recipe).
+  // codec through the cell-store registry (graft.ops.CellStore). The
+  // lifecycle methods serve every cell-store codec; the query and drift
+  // methods serve the IVF (raw vectors, exact cosines over probed
+  // cells) and IVF-PQ (m codes per vector, ~32× smaller, ADC scoring —
+  // the billion-vector recipe) tiers and refuse any other codec by
+  // name. Every other tier is served by its own module
+  // (graft.ops.Sq8Index, MrlIndex, BinaryIvfIndex, HnswIndex, ...).
 
   /** Build a persisted ANN index over `(idCol, vecCol)`:
     * `compressed = false` → [[graft.ops.IvfIndex]] (raw vectors);
@@ -980,7 +632,8 @@ object Graft {
     graft.ops.CellStore(spark, store) match {
       case graft.ops.IvfPqIndex =>
         graft.ops.IvfPqIndex.query(spark, store, queries, k, nprobe)
-      case _ => graft.ops.IvfIndex.query(spark, store, queries, k, nprobe)
+      case graft.ops.IvfIndex => graft.ops.IvfIndex.query(spark, store, queries, k, nprobe)
+      case other => unserved(store, other, "queryAnnIndex")
     }
 
   /** Incremental add against the store's FROZEN quantizers (FAISS
@@ -1001,7 +654,8 @@ object Graft {
     graft.ops.CellStore(spark, store) match {
       case graft.ops.IvfPqIndex => graft.ops.IvfPqIndex.queryRefined(spark, store,
         corpusRaw, queries, k, kCandidates, nprobe)
-      case _ => graft.ops.IvfIndex.query(spark, store, queries, k, nprobe)
+      case graft.ops.IvfIndex => graft.ops.IvfIndex.query(spark, store, queries, k, nprobe)
+      case other => unserved(store, other, "queryAnnIndexRefined")
     }
 
   /** Delete by id (FAISS `remove_ids`): O(batch) tombstones, deleted
@@ -1015,12 +669,6 @@ object Graft {
   def purgeAnnDeletes(spark: SparkSession, store: String): Int =
     graft.ops.CellStore(spark, store).purgeDeletes(spark, store)
 
-  /** Fold over-budget cell partitions (tombstoned rows drop during the
-    * rewrite); steady-state I/O ∝ recently-grown cells. */
-  def compactAnnIndex(spark: SparkSession, store: String,
-                      maxFilesPerCell: Int = 8): Int =
-    graft.ops.CellStore(spark, store).compact(spark, store, maxFilesPerCell)
-
   /** FILTERED search (FAISS `IDSelector` / Solr `{!knn}` + fq): the
     * caller's metadata predicate, evaluated to an id frame, restricts
     * ranking via a semi-join over the probed mass only. Both tiers. */
@@ -1030,7 +678,9 @@ object Graft {
     graft.ops.CellStore(spark, store) match {
       case graft.ops.IvfPqIndex =>
         graft.ops.IvfPqIndex.queryFiltered(spark, store, queries, k, allowed, nprobe)
-      case _ => graft.ops.IvfIndex.queryFiltered(spark, store, queries, k, allowed, nprobe)
+      case graft.ops.IvfIndex =>
+        graft.ops.IvfIndex.queryFiltered(spark, store, queries, k, allowed, nprobe)
+      case other => unserved(store, other, "queryAnnIndexFiltered")
     }
 
   /** Two-stage serving from the store alone — requires
@@ -1055,26 +705,18 @@ object Graft {
     * for the stored corpus vs `recent`. */
   def annAssignmentDrift(spark: SparkSession, store: String,
                          recent: DataFrame): DataFrame =
-    graft.ops.IvfIndex.assignmentDrift(spark, store, recent)
-
-  /** Act on the drift signal: re-train (and for a PQ store re-encode)
-    * over the live corpus into a NEW generation, committed atomically
-    * by one `_gen_N` file — old-generation reads keep serving until
-    * the swap; tombstones fold in. PQ stores require the raw-vector
-    * refine sidecar (codes are lossy). Returns the new generation. */
-  def retrainAnnIndex(spark: SparkSession, store: String): Int =
     graft.ops.CellStore(spark, store) match {
-      case graft.ops.IvfPqIndex => graft.ops.IvfPqIndex.retrain(spark, store)
-      case _ => graft.ops.IvfIndex.retrain(spark, store)
+      case graft.ops.IvfIndex => graft.ops.IvfIndex.assignmentDrift(spark, store, recent)
+      case other => unserved(store, other, "annAssignmentDrift")
     }
 
-  /** Drop superseded retrain generations (complete stores below the
-    * newest), keeping `retain` for in-flight readers — disk stays
-    * bounded under a long drift-retrain history. Both tiers share the
-    * layout, so one call serves either store. */
-  def reclaimAnnGenerations(spark: SparkSession, store: String,
-                            retain: Int = 1): Int =
-    graft.ops.CellStore(spark, store).reclaimGenerations(spark, store, retain)
+  /** The refusal of a tier-choosing method for a codec it does not
+    * serve: names the store, its tier and the module that serves it. */
+  private def unserved(store: String, codec: graft.ops.CellStore, op: String): Nothing = {
+    val tier = codec.getClass.getSimpleName.stripSuffix("$")
+    throw new IllegalArgumentException(s"Graft.$op does not serve $store: it is " +
+      s"a $tier store — call graft.ops.$tier directly")
+  }
 
   /** Sharded deterministic-build HNSW (Solr 9's `{!knn}` architecture:
     * one graph per shard, scatter-gather merge) — the recall-at-low-
@@ -1086,159 +728,6 @@ object Graft {
     graft.ops.HnswIndex.build(corpus, out, dim, shards, m,
       idCol = idCol, vecCol = vecCol)
 
-  /** Top-k over the sharded HNSW store ((cosine desc, id) order,
-    * self-matches excluded). */
-  def queryHnswIndex(spark: SparkSession, store: String, queries: DataFrame,
-                     k: Int, efSearch: Int = 64): DataFrame =
-    graft.ops.HnswIndex.query(spark, store, queries, k, efSearch)
-
-  /** FILTERED HNSW top-k (Lucene `{!knn}`+fq / FAISS IDSelector):
-    * `allowed`'s first column is the permitted id set; the walk
-    * collects accepted nodes only and falls back to exact over the
-    * accepted set when the filter is scarce (Lucene's visitedLimit
-    * contract — a very selective filter gets the exact answer). */
-  def queryHnswIndexFiltered(spark: SparkSession, store: String,
-                             queries: DataFrame, k: Int, allowed: DataFrame,
-                             efSearch: Int = 64): DataFrame =
-    graft.ops.HnswIndex.queryFiltered(spark, store, queries, k, allowed,
-      efSearch)
-
-  /** Add vectors to an HNSW store: touched shards rebuild over
-    * old ∪ new (bit-identical to a fresh build over the union) into a
-    * new atomically-committed generation. Batch adds — cost is ∝
-    * touched-shard bytes; for continuous ingest use the IVF tier. */
-  def addToHnswIndex(spark: SparkSession, store: String,
-                     vectors: DataFrame): Unit =
-    graft.ops.HnswIndex.add(spark, store, vectors)
-
-  /** Tombstone ids in an HNSW store (O(batch); dead nodes still route
-    * the walk but never surface). First column = id. */
-  def removeFromHnswIndex(spark: SparkSession, store: String,
-                          ids: DataFrame): Unit =
-    graft.ops.HnswIndex.removeIds(spark, store, ids)
-
-  /** Physically reclaim HNSW tombstones: rebuild only the touched
-    * shards into a new generation (≡ fresh build over the live rows),
-    * then clear the tombstone set. Returns shards rebuilt. */
-  def purgeHnswDeletes(spark: SparkSession, store: String): Int =
-    graft.ops.HnswIndex.purgeDeletes(spark, store)
-
-  /** Drop HNSW generations fully shadowed by newer ones (every shard
-    * re-carried), keeping the newest `retain` regardless — disk stays
-    * bounded under a long add/purge history. Returns gens removed. */
-  def reclaimHnswGenerations(spark: SparkSession, store: String,
-                             retain: Int = 2): Int =
-    graft.ops.HnswIndex.reclaimGenerations(spark, store, retain)
-
-  /** Exactly-once streamed micro-batch into the HNSW DELTA tier
-    * (Lucene NRT — queries merge graph + delta; see
-    * [[graft.ops.HnswIndex.addBatchDelta]]). */
-  def addHnswDeltaBatch(spark: SparkSession, store: String,
-                        vectors: DataFrame, batchId: Long,
-                        streamId: String = "",
-                        foldThreshold: Long = 100000L): Boolean =
-    graft.ops.HnswIndex.addBatchDelta(spark, store, vectors, batchId,
-      streamId, foldThreshold)
-
-  /** Fold the HNSW delta store into the graph (order-free touched-
-    * shard rebuild — ≡ batch adds of the same rows). Returns rows
-    * folded. */
-  def foldHnswDelta(spark: SparkSession, store: String): Long =
-    graft.ops.HnswIndex.foldDelta(spark, store)
-
-  /** Open a RESIDENT HNSW serving handle: the graph shard-exchanges
-    * once into the cache and every later batch walks it with zero
-    * read and zero exchange — the Solr live-searcher shape. Snapshot
-    * semantics: mutations committed after open need a reopen. */
-  def openHnswServing(spark: SparkSession,
-                      store: String): graft.ops.HnswIndex.Serving =
-    graft.ops.HnswIndex.open(spark, store)
-
-  /** Train a unigram-LM (SentencePiece) tokenizer vocabulary over a
-    * corpus — one tokenize+count shuffle, then in-memory EM/prune
-    * (`graft.text.Unigram`); [[graft.text.Bpe.learn]]'s sibling. */
-  def trainUnigram(docs: DataFrame, textCol: String, vocabSize: Int,
-                   maxPieceLen: Int = 4): Seq[graft.text.Unigram.Entry] =
-    graft.text.Unigram.learn(docs, textCol, vocabSize,
-      maxPieceLen = maxPieceLen)
-
-  /** Cap-free unigram train: the word table stays distributed end to
-    * end (each EM round is one broadcast-scores Spark job, only
-    * vocab-bounded frames collect) — use when the table exceeds
-    * [[trainUnigram]]'s in-memory cap, the 100 TB web-corpus case.
-    * Bit-identical to the capped path when the cap has slack. */
-  def trainUnigramDistributed(docs: DataFrame, textCol: String,
-                              vocabSize: Int, maxPieceLen: Int = 4)
-      : Seq[graft.text.Unigram.Entry] =
-    graft.text.Unigram.learnDistributed(docs, textCol, vocabSize,
-      maxPieceLen = maxPieceLen)
-
-  /** Serialize a trained BPE merge table as the HF `tokenizer.json`
-    * model object at `path` — the handoff format the training stack
-    * downstream of this pipeline loads directly. */
-  def exportBpeTokenizer(spark: SparkSession, path: String,
-                         merges: Seq[graft.text.Bpe.Merge]): Unit =
-    graft.text.TokenizerExport.write(spark, path,
-      graft.text.TokenizerExport.bpeModelJson(merges))
-
-  /** Serialize a trained unigram vocabulary as the HF
-    * `tokenizer.json` model object at `path`. */
-  def exportUnigramTokenizer(spark: SparkSession, path: String,
-                             vocab: Seq[graft.text.Unigram.Entry]): Unit =
-    graft.text.TokenizerExport.write(spark, path,
-      graft.text.TokenizerExport.unigramModelJson(vocab))
-
-  /** Load a HF `tokenizer.json` BPE model (exported here or trained
-    * externally) into the merge table the encode kernels
-    * ([[graft.text.Bpe.encode]]) run with — the import half of
-    * tokenizer interop. */
-  def importBpeTokenizer(spark: SparkSession,
-                         path: String): Seq[graft.text.Bpe.Merge] =
-    graft.text.TokenizerImport.bpeMerges(
-      graft.text.TokenizerImport.read(spark, path))
-
-  /** Load a HF `tokenizer.json` Unigram model into the scored
-    * vocabulary [[graft.text.Unigram.encode]] runs with. */
-  def importUnigramTokenizer(spark: SparkSession,
-                             path: String): Seq[graft.text.Unigram.Entry] =
-    graft.text.TokenizerImport.unigramVocab(
-      graft.text.TokenizerImport.read(spark, path))
-
-  /** Matryoshka (MRL) two-stage retrieval: prefix-dim cosine
-    * candidates, full-dim exact re-rank — cut dimensions instead of
-    * bits (see [[graft.ops.Similarity.matryoshkaTopK]]). */
-  def matryoshkaAnn(corpus: DataFrame, queries: DataFrame, k: Int,
-                    rerank: Int, prefixDim: Int): DataFrame =
-    graft.ops.Similarity.matryoshkaTopK(corpus, queries, k, rerank,
-      prefixDim)
-
-  /** Two-stage 1-bit binary ANN (FAISS IndexBinaryFlat; 32× memory
-    * cut vs the engine's float64 arrays, 16× vs float32): Hamming
-    * over sign codes, exact-cosine re-rank over the top-`rerank`
-    * candidates only. */
-  def binaryAnn(corpus: DataFrame, queries: DataFrame, k: Int,
-                rerank: Int, dim: Int): DataFrame =
-    graft.ops.BinaryQuant.binaryTopK(corpus, queries, k, rerank, dim)
-
-  /** Persist the packed sign codes — pack once, serve many. */
-  def buildBinaryAnnIndex(corpus: DataFrame, out: String, dim: Int): Unit =
-    graft.ops.BinaryQuant.buildStore(corpus, out, dim)
-
-  /** Serve from a persisted binary-code store; the re-rank fetch is
-    * candidate-id-pushed into the external `corpus` read. */
-  def queryBinaryAnnIndex(spark: SparkSession, store: String,
-                          queries: DataFrame, corpus: DataFrame, k: Int,
-                          rerank: Int): DataFrame =
-    graft.ops.BinaryQuant.queryStore(spark, store, queries, corpus, k, rerank)
-
-  /** BUCKETED binary ANN store (FAISS IndexBinaryIVF): codes cluster
-    * into coarse cells under a md5-seeded k-majority binary quantizer;
-    * queries probe nprobe cells only — the 100 TB serving form of the
-    * binary tier (see [[graft.ops.BinaryIvfIndex]]). */
-  def buildBinaryIvfIndex(corpus: DataFrame, out: String, dim: Int,
-                          nlist: Int = 8): Unit =
-    graft.ops.BinaryIvfIndex.build(corpus, out, dim, nlist)
-
   /** Serve from the bucketed binary store: partition-pruned probe
     * scan + candidate-bounded exact re-rank. */
   def queryBinaryIvfIndex(spark: SparkSession, store: String,
@@ -1246,41 +735,6 @@ object Graft {
                           rerank: Int, nprobe: Int = 4): DataFrame =
     graft.ops.BinaryIvfIndex.query(spark, store, queries, corpus, k, rerank,
       nprobe)
-
-  /** Filtered search on the bucketed binary store (IDSelector):
-    * `allowed`'s first column restricts candidates after probe
-    * pruning. */
-  def queryBinaryIvfIndexFiltered(spark: SparkSession, store: String,
-                                  queries: DataFrame, corpus: DataFrame,
-                                  k: Int, rerank: Int, allowed: DataFrame,
-                                  nprobe: Int = 4): DataFrame =
-    graft.ops.BinaryIvfIndex.queryFiltered(spark, store, queries, corpus, k,
-      rerank, allowed, nprobe)
-
-  /** Frozen-quantizer add on the bucketed binary store (FAISS
-    * IndexBinaryIVF.add — appends to touched cells only). */
-  def addToBinaryIvfIndex(spark: SparkSession, store: String,
-                          vectors: DataFrame): Unit =
-    graft.ops.BinaryIvfIndex.add(spark, store, vectors)
-
-  /** Tombstone deletes on the bucketed binary store (remove_ids). */
-  def removeFromBinaryIvfIndex(spark: SparkSession, store: String,
-                               ids: DataFrame): Unit =
-    graft.ops.BinaryIvfIndex.removeIds(spark, store, ids)
-
-  /** Physically reclaim tombstoned binary codes; returns cells
-    * purged. */
-  def purgeBinaryIvfDeletes(spark: SparkSession, store: String): Int =
-    graft.ops.BinaryIvfIndex.purgeDeletes(spark, store)
-
-  /** Build the persisted INT8 (SQ8) ANN store — FAISS
-    * IndexIVFScalarQuantizer: coarse k-means cells + frozen per-dim
-    * (offset, scale), 8× memory cut vs float64 (4× vs float32); the
-    * quantization-ladder rung between the binary and PQ tiers (see
-    * [[graft.ops.Sq8Index.build]]). */
-  def buildSq8Index(corpus: DataFrame, out: String, dim: Int,
-                    nlist: Int = 16): Unit =
-    graft.ops.Sq8Index.build(corpus, out, dim, nlist)
 
   /** Serve from the SQ8 store: probed-cell partition pruning, integer
     * dot-product candidate cut, exact-cosine re-rank (candidate-
@@ -1290,206 +744,13 @@ object Graft {
                     nprobe: Int = 4): DataFrame =
     graft.ops.Sq8Index.query(spark, store, queries, corpus, k, rerank, nprobe)
 
-  /** Filtered search on the SQ8 store (IDSelector): `allowed`'s first
-    * column restricts candidates after probe pruning. */
-  def querySq8IndexFiltered(spark: SparkSession, store: String,
-                            queries: DataFrame, corpus: DataFrame, k: Int,
-                            rerank: Int, allowed: DataFrame,
-                            nprobe: Int = 4): DataFrame =
-    graft.ops.Sq8Index.query(spark, store, queries, corpus, k, rerank,
-      nprobe, allowed = Some(allowed))
-
-  /** Frozen-quantizer add on the SQ8 store (appends to touched cells
-    * only). */
-  def addToSq8Index(spark: SparkSession, store: String,
-                    vectors: DataFrame): Unit =
-    graft.ops.Sq8Index.add(spark, store, vectors)
-
-  /** Tombstone deletes on the SQ8 store (remove_ids). */
-  def removeFromSq8Index(spark: SparkSession, store: String,
-                         ids: DataFrame): Unit =
-    graft.ops.Sq8Index.removeIds(spark, store, ids)
-
-  /** Physically reclaim tombstoned SQ8 codes; returns cells purged. */
-  def purgeSq8Deletes(spark: SparkSession, store: String): Int =
-    graft.ops.Sq8Index.purgeDeletes(spark, store)
-
-  /** Late-interaction (ColBERT MaxSim) re-rank over a first-stage
-    * tier's candidates — Σ per query token of the max integer-milli
-    * cosine against the candidate's token vectors (see
-    * [[graft.ops.LateInteraction.maxSimRerank]]). */
-  def maxSimRerank(candidates: DataFrame, docTokens: DataFrame,
-                   queryTokens: DataFrame, k: Int): DataFrame =
-    graft.ops.LateInteraction.maxSimRerank(candidates, docTokens,
-      queryTokens, k)
-
-  /** PIN the HNSW store's current serving state; the token replays
-    * pin-time answers bit-for-bit under any later mutation (see
-    * [[graft.ops.HnswIndex.pinSnapshot]] — the [[indexSnapshot]]
-    * pin=true contract on the vector tiers). */
-  def pinHnswSnapshot(spark: SparkSession, store: String): Int =
-    graft.ops.HnswIndex.pinSnapshot(spark, store)
-
-  /** Query a pinned HNSW snapshot (generation-ceiling graph + the
-    * pin's materialized tombstones and delta). */
-  def queryHnswPinned(spark: SparkSession, store: String, token: Int,
-                      queries: DataFrame, k: Int, efSearch: Int = 64,
-                      allowed: Option[DataFrame] = None): DataFrame =
-    graft.ops.HnswIndex.queryPinned(spark, store, token, queries, k,
-      efSearch, allowed)
-
-  /** Release an HNSW pin (its generations re-enter reclaim). */
-  def releaseHnswSnapshot(spark: SparkSession, store: String,
-                          token: Int): Unit =
-    graft.ops.HnswIndex.releaseSnapshot(spark, store, token)
-
-  /** PIN an IVF / IVF-PQ store's current generation (file-set
-    * snapshot + tombstones; purge/compact defer while pinned — see
-    * [[graft.ops.CellStore.pinGeneration]]). */
-  def pinIvfGeneration(spark: SparkSession, store: String): Int =
-    graft.ops.CellStore(spark, store).pinGeneration(spark, store)
-
-  /** Query a pinned IVF snapshot (raw-vector cells). */
-  def queryIvfPinned(spark: SparkSession, store: String, token: Int,
-                     queries: DataFrame, k: Int,
-                     nprobe: Int = 4): DataFrame =
-    graft.ops.IvfIndex.queryPinned(spark, store, token, queries, k, nprobe)
-
-  /** Query a pinned IVF-PQ snapshot (ADC over the pinned code set). */
-  def queryIvfPqPinned(spark: SparkSession, store: String, token: Int,
-                       queries: DataFrame, k: Int,
-                       nprobe: Int = 4): DataFrame =
-    graft.ops.IvfPqIndex.queryPinned(spark, store, token, queries, k, nprobe)
-
-  /** Release an IVF / IVF-PQ pin. */
-  def releaseIvfGeneration(spark: SparkSession, store: String,
-                           token: Int): Unit =
-    graft.ops.CellStore(spark, store).releaseGeneration(spark, store, token)
-
-  // ----- round 17 ---------------------------------------------------
-
   /** Build the STORE-SERVED Matryoshka tier — prefix-space coarse
     * quantizer, prefix cells, full-dim refine sidecar (see
     * [[graft.ops.MrlIndex.build]]; the persisted form of
-    * [[matryoshkaAnn]]). */
+    * [[graft.ops.Similarity.matryoshkaTopK]]). */
   def buildMrlIndex(corpus: DataFrame, out: String, dim: Int,
                     prefixDim: Int, nlist: Int = 16): Unit =
     graft.ops.MrlIndex.build(corpus, out, dim, prefixDim, nlist)
-
-  /** Serve from the MRL store: probe-pruned prefix ranking + exact
-    * full-dim re-rank from the sidecar. */
-  def queryMrlIndex(spark: SparkSession, store: String,
-                    queries: DataFrame, k: Int, rerank: Int,
-                    nprobe: Int = 4): DataFrame =
-    graft.ops.MrlIndex.query(spark, store, queries, k, rerank, nprobe)
-
-  /** Filtered search on the MRL store (IDSelector position). */
-  def queryMrlIndexFiltered(spark: SparkSession, store: String,
-                            queries: DataFrame, k: Int, rerank: Int,
-                            allowed: DataFrame,
-                            nprobe: Int = 4): DataFrame =
-    graft.ops.MrlIndex.query(spark, store, queries, k, rerank, nprobe,
-      allowed = Some(allowed))
-
-  /** Frozen-quantizer add on the MRL store (prefix-space assignment,
-    * sidecar-first append). */
-  def addToMrlIndex(spark: SparkSession, store: String,
-                    vectors: DataFrame): Unit =
-    graft.ops.MrlIndex.add(spark, store, vectors)
-
-  /** PIN the MRL store's current state (file-set snapshots of BOTH
-    * stages + tombstones; purge defers while pinned). Release with
-    * [[releaseIvfGeneration]]. */
-  def pinMrlGeneration(spark: SparkSession, store: String): Int =
-    graft.ops.MrlIndex.pinGeneration(spark, store)
-
-  /** Query a pinned MRL snapshot. */
-  def queryMrlPinned(spark: SparkSession, store: String, token: Int,
-                     queries: DataFrame, k: Int, rerank: Int,
-                     nprobe: Int = 4): DataFrame =
-    graft.ops.MrlIndex.queryPinned(spark, store, token, queries, k,
-      rerank, nprobe)
-
-  /** Prefix-space drift probe on the MRL store — the frozen prefix
-    * quantizer's retrain trigger. */
-  def mrlAssignmentDrift(spark: SparkSession, store: String,
-                         recent: DataFrame): DataFrame =
-    graft.ops.MrlIndex.assignmentDrift(spark, store, recent)
-
-  /** PIN the SQ8 store's current state (file-set snapshot +
-    * tombstones; purge defers while pinned). Release with
-    * [[releaseIvfGeneration]]. */
-  def pinSq8Generation(spark: SparkSession, store: String): Int =
-    graft.ops.Sq8Index.pinGeneration(spark, store)
-
-  /** Query a pinned SQ8 snapshot. */
-  def querySq8Pinned(spark: SparkSession, store: String, token: Int,
-                     queries: DataFrame, corpus: DataFrame, k: Int,
-                     rerank: Int, nprobe: Int = 4): DataFrame =
-    graft.ops.Sq8Index.queryPinned(spark, store, token, queries, corpus,
-      k, rerank, nprobe)
-
-  /** PIN the bucketed binary store's current state. Release with
-    * [[releaseIvfGeneration]]. */
-  def pinBinaryIvfGeneration(spark: SparkSession, store: String): Int =
-    graft.ops.BinaryIvfIndex.pinGeneration(spark, store)
-
-  /** Query a pinned binary-IVF snapshot (the exact re-rank reads the
-    * caller's pin-time corpus frame — the code store holds no raw
-    * vectors). */
-  def queryBinaryIvfPinned(spark: SparkSession, store: String,
-                           token: Int, queries: DataFrame,
-                           corpus: DataFrame, k: Int, rerank: Int,
-                           nprobe: Int = 4): DataFrame =
-    graft.ops.BinaryIvfIndex.queryPinned(spark, store, token, queries,
-      corpus, k, rerank, nprobe)
-
-  /** SQ8 quantization-drift probe — the retrain trigger on the int8
-    * tier (see [[graft.ops.Sq8Index.assignmentDrift]]). */
-  def sq8AssignmentDrift(spark: SparkSession, store: String,
-                         recent: DataFrame): DataFrame =
-    graft.ops.Sq8Index.assignmentDrift(spark, store, recent)
-
-  /** Build the token-level multi-vector (ColBERT) store: an IVF over
-    * token space for candidate generation + a doc-id-bucketed fetch
-    * copy (see [[graft.ops.LateInteraction.buildTokenStore]]). */
-  def buildColbertTokenStore(docTokens: DataFrame, out: String, dim: Int,
-                             nlist: Int = 16, posStride: Int = 4,
-                             buckets: Int = 16): Unit =
-    graft.ops.LateInteraction.buildTokenStore(docTokens, out, dim, nlist,
-      posStride = posStride, buckets = buckets)
-
-  /** Late interaction end-to-end FROM the token store: per-query-token
-    * probes nominate candidates, MaxSim re-ranks their full token
-    * sets (see [[graft.ops.LateInteraction.queryTokenStore]]). */
-  def queryColbertTokenStore(spark: SparkSession, store: String,
-                             queryTokens: DataFrame, k: Int,
-                             tokenK: Int = 16,
-                             nprobe: Int = 4): DataFrame =
-    graft.ops.LateInteraction.queryTokenStore(spark, store, queryTokens,
-      k, tokenK, nprobe)
-
-  /** Unigram vocabulary with the SentencePiece byte-fallback tail
-    * (256 `<0xNN>` pieces — no unk, ever; see
-    * [[graft.text.Unigram.withByteFallback]]). */
-  def unigramWithByteFallback(
-      vocab: Seq[graft.text.Unigram.Entry]): Seq[graft.text.Unigram.Entry] =
-    graft.text.Unigram.withByteFallback(vocab)
-
-  /** Byte-fallback unigram encode/decode (the LLaMA-family form). */
-  def unigramEncodeByteFallback(word: String,
-      vocab: Seq[graft.text.Unigram.Entry],
-      maxPieceLen: Int = 4): Vector[String] =
-    graft.text.Unigram.encodeByteFallback(word, vocab, maxPieceLen)
-
-  def unigramDecodeByteFallback(pieces: Seq[String]): String =
-    graft.text.Unigram.decodeByteFallback(pieces)
-
-  /** Encode with PROTECTED added tokens (BOS/EOS/control tokens that
-    * never split — see [[graft.text.AddedTokens.encode]]). */
-  def encodeWithAddedTokens(text: String, added: Seq[String],
-      encodeSegment: String => Seq[String]): Vector[String] =
-    graft.text.AddedTokens.encode(text, added, encodeSegment)
 
   /** CONSISTENT ONLINE BACKUP of a mutating ANN store — pin →
     * copy exactly the pin manifest → release; the destination is a
@@ -1499,36 +760,4 @@ object Graft {
   def backupAnnStore(spark: SparkSession, store: String,
                      dest: String): Int =
     graft.ops.AnnBackup.backup(spark, store, dest)
-
-  /** Build the persisted incremental near-dup (MinHash-LSH) index —
-    * banded signatures bucket-partitioned on disk (see
-    * [[graft.ops.LshIndex.build]]). */
-  def buildLshIndex(docs: DataFrame, out: String,
-                    idCol: String = "doc_id",
-                    textCol: String = "text"): Unit =
-    graft.ops.LshIndex.build(docs, out, idCol, textCol)
-
-  /** Which of `newDocs` near-duplicate the LSH store? (id, dup_of,
-    * est_milli) — bucket-pruned probe. */
-  def probeLshIndex(spark: SparkSession, store: String,
-                    newDocs: DataFrame,
-                    thresholdMilli: Long = 500L): DataFrame =
-    graft.ops.LshIndex.probe(spark, store, newDocs, thresholdMilli)
-
-  /** The near-dup INGEST GATE: probe the batch, index the survivors
-    * (the store grows with the corpus), return the dropped report
-    * (see [[graft.ops.LshIndex.ingestDedup]]). */
-  def lshIngestDedup(spark: SparkSession, store: String,
-                     newDocs: DataFrame,
-                     thresholdMilli: Long = 500L): DataFrame =
-    graft.ops.LshIndex.ingestDedup(spark, store, newDocs, thresholdMilli)
-
-  /** MMR diversified re-rank over any first-stage tier's candidates
-    * (Carbonell & Goldstein 1998 — see
-    * [[graft.ops.Diversify.mmrTopK]]). */
-  def mmrDiversify(candidates: DataFrame, corpus: DataFrame,
-                   queries: DataFrame, k: Int,
-                   lambdaMilli: Long = 500L): DataFrame =
-    graft.ops.Diversify.mmrTopK(candidates, corpus, queries, k,
-      lambdaMilli)
 }

@@ -908,7 +908,7 @@ object SparkEntry {
     // the literal Solr 9 request string `{!knn f= topK=}[...]` is
     // parsed and DISPATCHED onto the persisted sharded HNSW store —
     // Solr 9's actual execution (the qparser compiles onto one Lucene
-    // HNSW graph per shard, scatter-gather merge), where Graft.knn
+    // HNSW graph per shard, scatter-gather merge), where KnnQuery.knn
     // alone is the exact-scan scoring surface. The fq pre-filter
     // compiles against the metadata frame into the walk's acceptDocs
     // set; the filter is selective, so every shard's walk overruns its

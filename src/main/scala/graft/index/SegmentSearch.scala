@@ -153,15 +153,6 @@ object SegmentSearch {
       r => r.fuzzyDocs(field, term, maxEdits).iterator)
   }
 
-  /** Realtime-get analog: live docs whose `field` matches ANY of
-    * `terms` (each doc once), fanned out shard-parallel. */
-  def getByTerms(spark: SparkSession, store: String, field: String,
-                 terms: Seq[String], fields: Seq[String]): DataFrame = {
-    val marker = SegmentShardSink.readMarker(ShardIndex.hadoopConf(spark), store)
-    val ts = terms.map(encodeTerm(marker, field, _))
-    gatherWith(spark, store, fields, marker)(r => r.termDocsIn(field, ts).iterator)
-  }
-
   /**
    * INDEX-SERVED BM25 (the Lucene scoring path, distributed the way
    * Solr distributes it): two scatter phases over the shards —

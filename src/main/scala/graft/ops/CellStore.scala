@@ -381,14 +381,6 @@ abstract class CellStore(val markerFile: String, tier: String,
 
   // ----- tombstones -------------------------------------------------------
 
-  private def deletesPath(out: String) = s"$out/deletes"
-
-  /** The live tombstone set, if any delete batch has landed. */
-  private def deletes(spark: SparkSession, out: String): Option[DataFrame] = {
-    val p = new Path(deletesPath(out))
-    if (fsOf(spark, out).exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
-
   /** Anti-join the live tombstones out of a stored frame (broadcast:
     * between purges the set is bounded by the delete batches since the
     * last reclaim). The [[AnnTombstones]] nudge reads the marker-cached
@@ -405,15 +397,9 @@ abstract class CellStore(val markerFile: String, tier: String,
     * batch to `deletes/` — O(batch) I/O, no cell touched. Deleted ids
     * never surface from this moment; a tombstoned id stays dead,
     * including rows added after the delete, until [[purgeDeletes]].
-    * `ids`' FIRST column is the id. The live row count folds into the
-    * [[AnnTombstones]] cache (one O(batch) job here, none on queries). */
-  def removeIds(spark: SparkSession, out: String, ids: DataFrame): Unit = {
-    ids.select(corpusId(col(ids.columns.head)).as("corpus_id"))
-      .filter(col("corpus_id").isNotNull).distinct()
-      .coalesce(1).write.mode("append").parquet(deletesPath(out))
-    AnnTombstones.recordRemoval(spark, out,
-      spark.read.parquet(deletesPath(out)).count())
-  }
+    * `ids`' FIRST column is the id ([[CellStore.appendTombstones]]). */
+  def removeIds(spark: SparkSession, out: String, ids: DataFrame): Unit =
+    appendTombstones(spark, out, ids, corpusId)
 
   /** Physically reclaim tombstoned rows from every subdir (sidecars
     * first, the primary subdir last), then clear the tombstones and
@@ -563,12 +549,7 @@ abstract class CellStore(val markerFile: String, tier: String,
 
   // ----- pinned snapshots (the SegmentIndex pinGeneration precedent) -----
 
-  private def pinMarker(out: String, g: Int) = new Path(s"$out/_pin_$g")
-  private def pinDir(out: String, g: Int) = s"$out/.pin_$g"
   private def listName(sub: String) = if (sub == "cells") "files" else s"files_$sub"
-
-  private def pins(fs: FileSystem, out: String): Set[Int] =
-    numbered(fs, out, "_pin_").toSet
 
   private[ops] def pinnedRootOf(out: String, token: Int): String =
     if (token == 0) out else s"$out/g$token"
@@ -628,11 +609,8 @@ abstract class CellStore(val markerFile: String, tier: String,
 
   /** Release a pin: its generation re-enters reclaim eligibility and
     * deferred rewrites may proceed. */
-  def releaseGeneration(spark: SparkSession, out: String, token: Int): Unit = {
-    val fs = fsOf(spark, out)
-    fs.delete(pinMarker(out, token), false)
-    fs.delete(new Path(pinDir(out, token)), true)
-  }
+  def releaseGeneration(spark: SparkSession, out: String, token: Int): Unit =
+    releasePin(spark, out, token)
 }
 
 /** The single marker → codec REGISTRY, plus the lifecycle's shared
@@ -718,10 +696,51 @@ object CellStore {
       .digest(streamId.getBytes("UTF-8")).take(4)
       .map(b => f"$b%02x").mkString + "_"
 
+  // ----- the tombstone and pin files, shared with HnswIndex ---------------
+
+  private[ops] def deletesPath(out: String) = s"$out/deletes"
+
+  /** The live tombstone set, if any delete batch has landed. */
+  private[ops] def deletes(spark: SparkSession, out: String): Option[DataFrame] = {
+    val p = new Path(deletesPath(out))
+    if (fsOf(spark, out).exists(p)) Some(spark.read.parquet(p.toString)) else None
+  }
+
+  /** Append a tombstone batch to `deletes/` — O(batch) I/O: `ids`'
+    * FIRST column under the store's id type (`corpusId`), distinct.
+    * The live row count folds into the [[AnnTombstones]] cache (one
+    * O(batch) job here, none on queries). */
+  private[ops] def appendTombstones(spark: SparkSession, out: String, ids: DataFrame,
+                                    corpusId: Column => Column): Unit = {
+    ids.select(corpusId(col(ids.columns.head)).as("corpus_id"))
+      // a null id must not reach the store: the collected tombstone
+      // set reads rows with the primitive accessor, where null
+      // silently decodes as 0L — tombstoning id 0 by accident
+      .filter(col("corpus_id").isNotNull).distinct()
+      .coalesce(1).write.mode("append").parquet(deletesPath(out))
+    AnnTombstones.recordRemoval(spark, out,
+      spark.read.parquet(deletesPath(out)).count())
+  }
+
+  /** A pin is a `_pin_N` marker at the store root plus its `.pin_N/`
+    * directory of materialized state. */
+  private[ops] def pinMarker(out: String, g: Int) = new Path(s"$out/_pin_$g")
+  private[ops] def pinDir(out: String, g: Int) = s"$out/.pin_$g"
+
+  private[ops] def pins(fs: FileSystem, out: String): Set[Int] =
+    numbered(fs, out, "_pin_").toSet
+
+  /** Release a pin: marker first, then its materialized state. */
+  private[ops] def releasePin(spark: SparkSession, out: String, token: Int): Unit = {
+    val fs = fsOf(spark, out)
+    fs.delete(pinMarker(out, token), false)
+    fs.delete(new Path(pinDir(out, token)), true)
+  }
+
   private def fsOf(spark: SparkSession, out: String): FileSystem =
     new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def numbered(fs: FileSystem, out: String, prefix: String): Seq[Int] = {
+  private[ops] def numbered(fs: FileSystem, out: String, prefix: String): Seq[Int] = {
     val p = new Path(out)
     if (!fs.exists(p)) Nil
     else fs.listStatus(p).toSeq.map(_.getPath.getName).filter(_.startsWith(prefix))

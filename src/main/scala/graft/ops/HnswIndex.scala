@@ -75,7 +75,6 @@ import org.apache.spark.sql.functions._
 object HnswIndex {
 
   private def markerPath(out: String) = s"$out/_hnsw_marker.json"
-  private def deletesPath(out: String) = s"$out/deletes"
   private def deltaPath(out: String) = s"$out/delta"
   private def dropIntentPath(out: String) = s"$out/_drop_intent"
   private def dropIntentIdsPath(out: String) = s"$out/.drop_intent_ids"
@@ -101,14 +100,8 @@ object HnswIndex {
     * store root: params never change, and a delete landed before a
     * swap is folded into the new generation by construction. */
   private[ops] def generations(fs: org.apache.hadoop.fs.FileSystem,
-                                out: String): Seq[Int] = {
-    val p = new org.apache.hadoop.fs.Path(out)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("_gen_"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("_gen_").toInt).toOption)
-      .toSeq.sorted
-  }
+                                out: String): Seq[Int] =
+    CellStore.numbered(fs, out, "_gen_").sorted
 
   /** The shards generation `g` carries: its `_gen_N` file's content. */
   private def shardsOf(spark: SparkSession, out: String, g: Int): Seq[Int] =
@@ -658,12 +651,8 @@ object HnswIndex {
   }
 
   /** The live tombstone set, if any delete batch has landed. */
-  private[ops] def deletes(spark: SparkSession,
-                           out: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(deletesPath(out))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
+  private[ops] def deletes(spark: SparkSession, out: String): Option[DataFrame] =
+    CellStore.deletes(spark, out)
 
   // ----- the DELTA tier (Lucene NRT: stream into a flat side store,
   // ----- merge at query, fold into the graph past a threshold) ------
@@ -1065,16 +1054,8 @@ object HnswIndex {
     * immediately (they still ROUTE until [[purgeDeletes]] rebuilds
     * their shards — exactly a deleted doc's life in a Lucene segment
     * before a merge). `ids`' FIRST column is the id. */
-  def removeIds(spark: SparkSession, out: String, ids: DataFrame): Unit = {
-    ids.select(col(ids.columns.head).cast("long").as("corpus_id"))
-      // a null id must not reach the store: the collected tombstone
-      // set reads rows with the primitive accessor, where null
-      // silently decodes as 0L — tombstoning id 0 by accident
-      .filter(col("corpus_id").isNotNull).distinct()
-      .coalesce(1).write.mode("append").parquet(deletesPath(out))
-    AnnTombstones.recordRemoval(spark, out,
-      spark.read.parquet(deletesPath(out)).count())
-  }
+  def removeIds(spark: SparkSession, out: String, ids: DataFrame): Unit =
+    CellStore.appendTombstones(spark, out, ids, _.cast("long"))
 
   /** Physically reclaim tombstoned nodes: rebuild ONLY the shards
     * holding tombstoned ids (survivor membership can't move — shard =
@@ -1099,7 +1080,7 @@ object HnswIndex {
       .join(broadcast(del.select("corpus_id")), Seq("corpus_id"), "left_semi")
       .select("shard").distinct().collect().map(_.getInt(0)).toSeq
     if (touched.isEmpty) {
-      fs.delete(new org.apache.hadoop.fs.Path(deletesPath(out)), true)
+      fs.delete(new org.apache.hadoop.fs.Path(CellStore.deletesPath(out)), true)
       AnnTombstones.clearCount(spark, out)
       return 0
     }
@@ -1108,7 +1089,7 @@ object HnswIndex {
       .select("shard", "corpus_id", "cvec")
     val rebuilt = rebuildShards(live, mk.dim, mk.m, mk.efC, mk.shards)
     commitGeneration(spark, out, rebuilt, touched)
-    fs.delete(new org.apache.hadoop.fs.Path(deletesPath(out)), true)
+    fs.delete(new org.apache.hadoop.fs.Path(CellStore.deletesPath(out)), true)
     AnnTombstones.clearCount(spark, out)
     touched.size
   }
@@ -1251,20 +1232,6 @@ object HnswIndex {
   // ----- precedent on the ANN store: a reproducible eval over a
   // ----- mutating index) ---------------------------------------------
 
-  private def pinMarkerPath(out: String, g: Int) = s"$out/_pin_$g"
-  private def pinDir(out: String, g: Int) = s"$out/.pin_$g"
-
-  /** The set of pinned generation ceilings. */
-  private def pins(fs: org.apache.hadoop.fs.FileSystem,
-                   out: String): Set[Int] = {
-    val p = new org.apache.hadoop.fs.Path(out)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).iterator.map(_.getPath.getName)
-      .filter(_.startsWith("_pin_"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("_pin_").toInt).toOption)
-      .toSet
-  }
-
   /** PIN the store's CURRENT state and return the snapshot token (the
     * generation ceiling): graph resolution freezes at generations ≤
     * the token (generation dirs are immutable once committed and
@@ -1283,24 +1250,19 @@ object HnswIndex {
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val g = generations(fs, out).lastOption.getOrElse(0)
-    fs.delete(new org.apache.hadoop.fs.Path(pinDir(out, g)), true)
+    fs.delete(new org.apache.hadoop.fs.Path(CellStore.pinDir(out, g)), true)
     deletes(spark, out).foreach(
-      _.write.mode("overwrite").parquet(s"${pinDir(out, g)}/deletes"))
+      _.write.mode("overwrite").parquet(s"${CellStore.pinDir(out, g)}/deletes"))
     readDelta(spark, out).foreach(
-      _.write.mode("overwrite").parquet(s"${pinDir(out, g)}/delta"))
-    fs.create(new org.apache.hadoop.fs.Path(pinMarkerPath(out, g)), true)
-      .close()
+      _.write.mode("overwrite").parquet(s"${CellStore.pinDir(out, g)}/delta"))
+    fs.create(CellStore.pinMarker(out, g), true).close()
     g
   }
 
   /** Release a pin: its generations re-enter reclaim eligibility, its
     * materialized side state drops. */
-  def releaseSnapshot(spark: SparkSession, out: String, token: Int): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(pinMarkerPath(out, token)), false)
-    fs.delete(new org.apache.hadoop.fs.Path(pinDir(out, token)), true)
-  }
+  def releaseSnapshot(spark: SparkSession, out: String, token: Int): Unit =
+    CellStore.releasePin(spark, out, token)
 
   /** Query a PINNED snapshot: the graph resolved at generations ≤
     * `token`, the pin's materialized tombstones and delta — the exact
@@ -1310,10 +1272,10 @@ object HnswIndex {
                   allowed: Option[DataFrame] = None): DataFrame = {
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(pinMarkerPath(out, token))),
+    require(fs.exists(CellStore.pinMarker(out, token)),
       s"no pin $token on $out")
     def part(name: String): Option[DataFrame] = {
-      val p = new org.apache.hadoop.fs.Path(s"${pinDir(out, token)}/$name")
+      val p = new org.apache.hadoop.fs.Path(s"${CellStore.pinDir(out, token)}/$name")
       if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
     }
     scatterOver(spark, out, readMarker(spark, out),
@@ -1353,7 +1315,7 @@ object HnswIndex {
       }
       used.toSet
     }
-    val pinnedNeeds: Set[Int] = pins(fs, out).flatMap(resolved)
+    val pinnedNeeds: Set[Int] = CellStore.pins(fs, out).flatMap(resolved)
     val candidates = gens.dropRight(retain)
     val removed = candidates.filterNot(pinnedNeeds).filter { g =>
       val newer = gens.filter(_ > g)

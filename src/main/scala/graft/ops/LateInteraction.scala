@@ -163,21 +163,18 @@ object LateInteraction {
         col("qpos").cast("int"),
         col("qvec").cast("array<double>"))
       .withColumn("qnorm", Similarity.norm(col("qvec")))
-    // driver-side probes over the collected (broadcast-small) query
-    // token batch (r18; see CellStore.probe) — one collect,
+    // driver-side probes over the collected (broadcast-small, row-
+    // capped) query token batch (see CellStore.probe) — one collect,
     // zero probe jobs, broadcast builds from a LocalRelation
-    val qRows = qt0.collect()
+    val qRows = CellStore.collectBatch(qt0)
     val qvecIdx = qt0.schema.fieldIndex("qvec")
-    val cnorms = Similarity.centroidNormsLocal(centroids)
-    val probesPer = qRows.map { r =>
-      Similarity.probeCellsLocal(
-        if (r.isNullAt(qvecIdx)) null else r.getSeq[Any](qvecIdx),
-        centroids, cnorms, nprobe)
-    }
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(qRows.zip(probesPer).flatMap { case (r, cs) =>
+    val cellsOf = CellStore.cosineProbe(centroids, nprobe)
+    val probesPer = qRows.map(r =>
+      cellsOf(if (r.isNullAt(qvecIdx)) null else r.getSeq[Any](qvecIdx)))
+    val probes = CellStore.localFrame(spark,
+      qRows.zip(probesPer).flatMap { case (r, cs) =>
         cs.map(c => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ c))
-      }: _*),
+      }.toSeq,
       qt0.schema.add("cell",
         org.apache.spark.sql.types.IntegerType, nullable = false))
     val probed = probesPer.flatten.distinct.map(Int.box).toIndexedSeq

@@ -123,8 +123,6 @@ final case class HashRangeRouter(numShards: Int, routingBits: Int = 16,
       (SolrHash.hashString(id) & Int.MaxValue) % perShard
   }
 
-  def shardName(i: Int): String = f"part-$i%05d"
-
   /** Column: root shard index of a string id column. */
   def shardCol(id: Column): Column =
     GraftColumns.of(SolrShardRoute(GraftColumns.expr(id), this, 1))

@@ -59,9 +59,6 @@ object BinaryFiles {
       .filter(col("path") =!= "" && !col("path").startsWith("#"))
   }
 
-  /** S4 FilenameInputFormat analog: just the paths as a DataFrame. */
-  def pathsOf(df: DataFrame): DataFrame = df.select("path")
-
   /**
    * S2 at unbounded scale: the manifest NEVER materializes on the
    * driver — paths stay a DataFrame, repartition spreads them across

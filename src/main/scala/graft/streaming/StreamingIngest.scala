@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 
 /**
@@ -82,12 +82,6 @@ object StreamingIngest {
         ()
       }
       .trigger(Trigger.AvailableNow())
-
-  /** Run a streaming query to completion over the available input —
-    * local-mode smoke path (memory sink). */
-  def runToCompletion(q: StreamingQuery): Unit = {
-    q.awaitTermination()
-  }
 
   /**
    * Continuous ANN-index maintenance: each micro-batch of vectors

@@ -50,11 +50,4 @@ object AddedTokens {
       case Right(tok) => Vector(tok)
       case Left(run) => encodeSegment(run).toVector
     }
-
-  /** Decode's added-token half is the identity — a protected token is
-    * its own surface form, so any piece-concatenating decode
-    * ([[Unigram.decode]], [[Unigram.decodeByteFallback]] outside byte
-    * runs) already restores it. */
-  def isAdded(piece: String, added: Seq[String]): Boolean =
-    added.contains(piece)
 }

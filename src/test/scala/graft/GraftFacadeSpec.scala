@@ -243,5 +243,16 @@ class GraftFacadeSpec extends AnyFunSuite {
     val stored = Graft.queryAnnIndexRefinedStored(spark, refOut, queries, k = 3,
       kCandidates = 10, nprobe = 8)
     assert(stored.count() === 9)
+    // a codec the tier-choosing methods do not serve is refused by name
+    val sq8Out = java.nio.file.Files.createTempDirectory("ann_facade_sq8_").toString
+    graft.ops.Sq8Index.build(emb.filter(col("vec_id") < 100), sq8Out, dim = 64, nlist = 4)
+    Seq[() => Any](
+      () => Graft.queryAnnIndex(spark, sq8Out, queries, k = 3),
+      () => Graft.queryAnnIndexRefined(spark, sq8Out, emb, queries, k = 3),
+      () => Graft.queryAnnIndexFiltered(spark, sq8Out, queries, k = 3, allowed = queries),
+      () => Graft.annAssignmentDrift(spark, sq8Out, queries)).foreach { call =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(sq8Out) && e.getMessage.contains("Sq8Index"), e.getMessage)
+    }
   }
 }

@@ -46,6 +46,16 @@ class CellStoreSpec extends AnyFunSuite {
     assert(e.getMessage.contains(s"${CellStore.MaxQueryBatch}") &&
       e.getMessage.contains(s"$n rows"), e.getMessage)
     assert(CellStore.collectBatch(Seq(1L, 2L).toDF("query_id")).length === 2)
+    // the token store's per-query-token probe collects through the same cap
+    val toks = java.nio.file.Files.createTempDirectory("cellstore_tokcap_").toString
+    LateInteraction.buildTokenStore(Seq((1L, 0, Seq(1.0, 0.0)), (2L, 0, Seq(0.0, 1.0)))
+      .toDF("doc_id", "tpos", "tvec"), toks, dim = 2, nlist = 2, buckets = 2)
+    val tokBatch = spark.range(n).select(col("id").as("query_id"), lit(0).as("qpos"),
+      array(lit(1.0), lit(0.0)).as("qvec"))
+    val te = intercept[IllegalArgumentException](
+      LateInteraction.tokenCandidates(spark, toks, tokBatch, tokenK = 1, nprobe = 1))
+    assert(te.getMessage.contains(s"${CellStore.MaxQueryBatch}") &&
+      te.getMessage.contains(s"$n rows"), te.getMessage)
   }
 
   test("a subdir read under its footer schema has the inferred schema") {
