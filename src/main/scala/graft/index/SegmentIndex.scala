@@ -275,6 +275,24 @@ object SegmentIndex {
         System.arraycopy(bytes, 0, buf, n, bytes.length); n += bytes.length
       }
     }
+    /** [[putStr]] of `new String(cs, from, until - from)`, without
+      * building the String for an ASCII run (the merge's front coder). */
+    def putChars(cs: Array[Char], from: Int, until: Int): Unit = {
+      var i = from
+      while (i < until && cs(i) < 0x80) i += 1
+      if (i == until) {
+        putVInt(until - from); ensure(until - from)
+        i = from
+        while (i < until) { buf(n) = cs(i).toByte; n += 1; i += 1 }
+      } else {
+        val bytes = new String(cs, from, until - from).getBytes(StandardCharsets.UTF_8)
+        putVInt(bytes.length); putBytes(bytes, 0, bytes.length)
+      }
+    }
+    def putBytes(b: Array[Byte], off: Int, len: Int): Unit = {
+      ensure(len)
+      System.arraycopy(b, off, buf, n, len); n += len
+    }
     def putIntBE(v: Int): Unit = {
       ensure(4)
       buf(n) = (v >>> 24).toByte; buf(n + 1) = (v >>> 16).toByte
@@ -920,34 +938,6 @@ object SegmentIndex {
     * the field), with a v3-style per-field seek footer so reading one
     * field's column never parses the rest. The on-disk analog of
     * Lucene's SortedDocValues (ord column + terms dict). */
-  private def writeDocValues(fs: FileSystem, dir: Path, name: String,
-                             fields: Seq[(String, Array[String])], nDocs: Int): Unit = {
-    // string-column form (the merge path): derive dict + ord column,
-    // presized JDK collections — boxed scala distinct/toMap was a top
-    // slice of segment-write wall time
-    val cols = fields.map { case (f, vals) =>
-      val set = new java.util.HashSet[String](nDocs * 2)
-      var o = 0
-      while (o < nDocs) { if (vals(o) != null) set.add(vals(o)); o += 1 }
-      val terms = set.toArray(new Array[String](set.size))
-      java.util.Arrays.sort(terms, CpOrdering)
-      val idx = new java.util.HashMap[String, Integer](terms.length * 2)
-      var ti = 0
-      while (ti < terms.length) { idx.put(terms(ti), ti); ti += 1 }
-      val ordCol = new Array[Int](nDocs) // 0 = missing
-      o = 0
-      while (o < nDocs) {
-        val v = vals(o)
-        if (v != null) ordCol(o) = idx.get(v) + 1
-        o += 1
-      }
-      (f, terms, ordCol)
-    }
-    writeDocValuesCols(fs, dir, name, cols, nDocs)
-  }
-
-  /** Core .dvd writer: per field, the CP-sorted dict and the per-doc
-    * dict-index+1 column (0 = doc lacks the field). */
   private def writeDocValuesCols(fs: FileSystem, dir: Path, name: String,
                                  fields: Seq[(String, Array[String], Array[Int])],
                                  nDocs: Int): Unit = {
@@ -1146,21 +1136,517 @@ object SegmentIndex {
       try in.readInt() finally in.close()
     }
 
+  /** A source dictionary that is not strictly increasing in code-point
+    * order (e.g. a segment an older build merged in UTF-16 order): the
+    * k-way merge cannot consume it. */
+  private final class UnsortedDictException(what: String)
+      extends RuntimeException(s"dictionary not in code-point order: $what", null, false, false)
+
+  /** [[cpCompare]] over char buffers — the merge cursors' terms, so no
+    * String is built per term. */
+  private def cpCompare(a: Array[Char], aLen: Int, b: Array[Char], bLen: Int): Int = {
+    val n = math.min(aLen, bLen)
+    var i = 0
+    while (i < n) {
+      val ca = a(i)
+      val cb = b(i)
+      if (ca != cb) {
+        if (ca >= 0xD800 && cb >= 0xD800) {
+          val fa = if (ca >= 0xE000) ca - 0x800 else ca + 0x2000
+          val fb = if (cb >= 0xE000) cb - 0x800 else cb + 0x2000
+          return fa - fb
+        }
+        return ca - cb
+      }
+      i += 1
+    }
+    Integer.compare(aLen, bLen)
+  }
+
+  /** One source's footer-indexed file (.trm v3/v4, .dvd, .dvm): its
+    * magic and each field block's byte range. Blocks are loaded one
+    * field at a time by positional read, so a merge holds one field
+    * block per source, never the whole file. */
+  private final class BlockFile(fs: FileSystem, path: Path) extends java.io.Closeable {
+    private val in = fs.open(path)
+    val magic: Int = in.readInt()
+    /** field → (offset, length) */
+    val blocks: Map[String, (Long, Int)] = {
+      in.seek(fs.getFileStatus(path).getLen - 12)
+      val footerOff = in.readLong()
+      require(in.readInt() == magic, s"bad trailer in $path")
+      in.seek(footerOff)
+      val foot = new DataInputStream(new BufferedInputStream(in))
+      val offs = Array.fill(readVInt(foot))((readStr(foot), foot.readLong()))
+      // a block ends where the next one (or the footer) starts
+      val starts = (offs.map(_._2) :+ footerOff).sorted
+      offs.map { case (f, o) => f -> (o, (starts.find(_ > o).get - o).toInt) }.toMap
+    }
+    def block(f: String): Array[Byte] = {
+      val (off, len) = blocks(f)
+      val b = new Array[Byte](len)
+      in.readFully(off, b)
+      b
+    }
+    def close(): Unit = in.close()
+  }
+
+  /** Cursor over one source field block: varints at `pos`, and the
+    * block's sorted dictionary decoded term by term into a reused char
+    * buffer (`term`/`len`; front-coded or verbatim). Each [[next]]
+    * checks that the new term is strictly greater than the previous
+    * one in code-point order — the order the k-way merge relies on. */
+  private final class DictCursor(val buf: Array[Byte], frontCoded: Boolean, what: => String) {
+    var pos = 0
+    var term = new Array[Char](32)
+    var len = 0
+    /** dictionary index of the current term */
+    var idx = -1
+    private var prev = new Array[Char](32)
+    private var left = 0
+
+    def vint(): Int = {
+      var b = buf(pos)
+      pos += 1
+      var v = b & 0x7F
+      var shift = 7
+      while ((b & 0x80) != 0) {
+        b = buf(pos)
+        pos += 1
+        v |= (b & 0x7F) << shift
+        shift += 7
+      }
+      v
+    }
+    def skipVInts(k: Int): Unit = {
+      var i = 0
+      while (i < k) {
+        while (buf(pos) < 0) pos += 1 // continuation bit set
+        pos += 1
+        i += 1
+      }
+    }
+    def skipStr(): Unit = { val n = vint(); pos += n }
+    /** Reads the dictionary size at `pos`; the terms follow. */
+    def startDict(): Int = { left = vint(); left }
+
+    def next(): Boolean = left > 0 && {
+      left -= 1
+      val t = prev; prev = term; term = t
+      val prevLen = len
+      val pl = if (frontCoded) vint() else 0
+      val n = vint()
+      if (pl > prevLen) throw new java.io.IOException(s"corrupt front-coded dictionary: $what")
+      if (term.length < pl + n) term = new Array[Char](math.max(pl + n, term.length * 2))
+      System.arraycopy(prev, 0, term, 0, pl)
+      var i = 0
+      while (i < n && buf(pos + i) >= 0) { term(pl + i) = buf(pos + i).toChar; i += 1 }
+      len =
+        if (i == n) pl + n
+        else {
+          val s = new String(buf, pos, n, StandardCharsets.UTF_8)
+          s.getChars(0, s.length, term, pl)
+          pl + s.length
+        }
+      pos += n
+      idx += 1
+      if (idx > 0 && cpCompare(prev, prevLen, term, len) >= 0) throw new UnsortedDictException(what)
+      true
+    }
+  }
+
+  /** Output side of front coding ([[putDict]] / the writer's .trm
+    * terms) over char buffers. */
+  private final class FrontCoder {
+    private var prev = new Array[Char](32)
+    private var prevLen = 0
+    def put(out: ByteWriter, t: Array[Char], tLen: Int): Unit = {
+      // sharedPrefixLen over buffers
+      val m = math.min(prevLen, tLen)
+      var pl = 0
+      while (pl < m && prev(pl) == t(pl)) pl += 1
+      if (pl < tLen && pl > 0 && Character.isLowSurrogate(t(pl))) pl -= 1
+      out.putVInt(pl)
+      out.putChars(t, pl, tLen)
+      if (prev.length < tLen) prev = new Array[Char](math.max(tLen, prev.length * 2))
+      System.arraycopy(t, 0, prev, 0, tLen)
+      prevLen = tLen
+    }
+  }
+
+  /** k-way union of the cursors' sorted dictionaries (Lucene's
+    * MultiTermsEnum): a binary heap orders cursors by (current term,
+    * cursor index), so `onTerm(tops, m)` runs once per distinct term,
+    * in code-point order, with the m cursors holding it in index
+    * order — `tops(0)`'s buffer holds the term. `onTerm` may consume
+    * bytes after each cursor's term (the .trm postings) before the
+    * cursors advance. Returns the number of distinct terms. */
+  private def unionDicts(cs: Array[DictCursor])(onTerm: (Array[Int], Int) => Unit): Int = {
+    val heap = new Array[Int](cs.length)
+    var size = 0
+    def less(a: Int, b: Int): Boolean = {
+      val c = cpCompare(cs(a).term, cs(a).len, cs(b).term, cs(b).len)
+      c < 0 || (c == 0 && a < b)
+    }
+    def push(x: Int): Unit = {
+      var k = size
+      size += 1
+      while (k > 0 && less(x, heap((k - 1) >> 1))) { heap(k) = heap((k - 1) >> 1); k = (k - 1) >> 1 }
+      heap(k) = x
+    }
+    def pop(): Int = {
+      val top = heap(0)
+      size -= 1
+      if (size > 0) {
+        val x = heap(size)
+        var k = 0
+        var done = false
+        while (!done) {
+          var c = 2 * k + 1
+          if (c >= size) done = true
+          else {
+            if (c + 1 < size && less(heap(c + 1), heap(c))) c += 1
+            if (less(heap(c), x)) { heap(k) = heap(c); k = c } else done = true
+          }
+        }
+        heap(k) = x
+      }
+      top
+    }
+    var i = 0
+    while (i < cs.length) { if (cs(i).next()) push(i); i += 1 }
+    val tops = new Array[Int](cs.length)
+    var distinct = 0
+    while (size > 0) {
+      val c0 = cs(heap(0))
+      var m = 0
+      while (size > 0 && cpCompare(cs(heap(0)).term, cs(heap(0)).len, c0.term, c0.len) == 0) {
+        tops(m) = pop()
+        m += 1
+      }
+      onTerm(tops, m)
+      distinct += 1
+      var j = 0
+      while (j < m) { if (cs(tops(j)).next()) push(tops(j)); j += 1 }
+    }
+    distinct
+  }
+
+  /** Appends one source's posting list of the current term (`n` docs)
+    * to `out` with ordinals shifted by `base`; `last` is the previous
+    * ordinal written for this term, and the last one written is
+    * returned. When the source lays postings out as the output does
+    * (a positions run per posting or none), only the first gap is
+    * re-encoded and the rest copies as bytes, positions included. */
+  private def copyPostings(c: DictCursor, n: Int, base: Int, last: Int,
+                           srcPos: Boolean, outPos: Boolean, out: ByteWriter): Int = {
+    if (n == 0) return last
+    var ord = c.vint()
+    out.putVInt(ord + base - last)
+    if (srcPos == outPos) {
+      val from = c.pos
+      if (srcPos) c.skipVInts(c.vint())
+      var i = 1
+      while (i < n) {
+        ord += c.vint()
+        if (srcPos) c.skipVInts(c.vint())
+        i += 1
+      }
+      out.putBytes(c.buf, from, c.pos - from)
+    } else {
+      // a v3 source's empty runs are dropped, a source flagged without
+      // positions gets empty runs added
+      var i = 0
+      while (i < n) {
+        if (i > 0) { val g = c.vint(); ord += g; out.putVInt(g) }
+        if (srcPos) c.skipVInts(c.vint()) else out.putVInt(0)
+        i += 1
+      }
+    }
+    ord + base
+  }
+
+  /** Whether any posting of a v3 block (cursor at its dictionary size)
+    * carries positions — v3 has no per-field flag. */
+  private def v3HasPositions(block: DictCursor): Boolean = {
+    val c = new DictCursor(block.buf, frontCoded = false, "")
+    c.pos = block.pos
+    c.startDict()
+    while (c.next()) {
+      var n = c.vint()
+      while (n > 0) {
+        c.vint()
+        val np = c.vint()
+        if (np > 0) return true
+        n -= 1
+      }
+    }
+    false
+  }
+
   /**
-   * Postings-level segment merge — Lucene's actual merge design:
-   * stored fields CONCATENATE as raw bytes (records are
-   * self-delimiting; the .fdx offsets shift by each source's byte
-   * base), the term dictionaries k-way merge with doc ordinals offset
-   * by each source's doc base, norms arrays concatenate, zone-map
-   * stats combine. No document is ever re-parsed, re-rendered or
-   * re-analyzed — merge cost is I/O plus a vocabulary-sized merge,
-   * not an index rebuild. (The doc-rewrite path in [[Writer.forceMerge]]
-   * remains for segments carrying tombstones, where live docs must be
-   * materialized to reclaim ordinals.)
+   * Postings-level segment merge — Lucene's `SegmentMerger` design,
+   * streaming:
+   *  - `.trm`: per field, one cursor per source over that field's
+   *    block; the sorted dictionaries k-way merge in code-point order
+   *    (the writer's order). Per term the summed doc count is written,
+   *    then each source's postings with ordinals shifted by its doc
+   *    base — only each source's first gap is re-encoded, the rest
+   *    (positions included) copies as bytes. One output field block
+   *    is built in a byte buffer, since its term count precedes it.
+   *  - `.nrm`: each source's norms are read once and written at their
+   *    doc base (zeros where a source lacks the field).
+   *  - `.dvd` / `.dvm`: the merged dictionary is the k-way union of
+   *    the sources' dictionaries plus one dict-index remap array per
+   *    source; the per-doc ords stream through the remap.
+   *  - `.fld` / `.fdx`: stored bytes concatenate, offsets shift.
+   * Heap is O(docs) in primitive arrays plus one field block of bytes
+   * per source and for the output; no object is built per posting or
+   * per doc. No document is re-parsed or re-analyzed.
+   *
+   * Returns None — with the files written under `name` deleted — when
+   * a source dictionary is not strictly increasing in code-point
+   * order; the caller then rewrites the live docs, as it does for
+   * sources carrying tombstones ([[canRawMerge]] false).
    */
   private[index] def mergeSegmentsRaw(fs: FileSystem, dir: Path, name: String,
-                                      segs: Seq[SegmentMeta]): SegmentMeta = {
+                                      segs: Seq[SegmentMeta]): Option[SegmentMeta] = {
     val totalDocs = segs.map(_.docs).sum
+    // empty sources contribute nothing to any file
+    val live = segs.filter(_.docs > 0).toIndexedSeq
+    val bases = live.scanLeft(0)(_ + _.docs)
+    try {
+      val srcFields = mergeTrm(fs, dir, name, live, bases)
+      mergeNorms(fs, dir, name, live, totalDocs)
+      mergeDocValues(fs, dir, name, live, srcFields, totalDocs, sortedSet = false)
+      mergeDocValues(fs, dir, name, live, srcFields, totalDocs, sortedSet = true)
+      mergeStored(fs, dir, name, segs, totalDocs)
+    } catch {
+      case e: Throwable =>
+        Seq("fld", "fdx", "trm", "nrm", "dvd", "dvm").foreach { ext =>
+          try fs.delete(new Path(dir, s"$name.$ext"), false)
+          catch { case d: java.io.IOException => e.addSuppressed(d) }
+        }
+        e match {
+          case _: UnsortedDictException => return None
+          case _ => throw e
+        }
+    }
+    // zone-map stats: per-field min/max combined across sources
+    val stats = segs.flatMap(_.stats.toSeq)
+      .groupBy(_._1)
+      .map { case (f, vs) =>
+        f -> (vs.map(_._2._1).min(CpOrdering), vs.map(_._2._2).max(CpOrdering))
+      }
+    Some(SegmentMeta(name, totalDocs, stats = stats))
+  }
+
+  /** The `.trm` half of [[mergeSegmentsRaw]]; returns each source's
+    * indexed fields (the docValues eligibility input). */
+  private def mergeTrm(fs: FileSystem, dir: Path, name: String,
+                       live: IndexedSeq[SegmentMeta], bases: Seq[Int]): IndexedSeq[Set[String]] = {
+    val trms = live.map(s => new BlockFile(fs, new Path(dir, s"${s.name}.trm")))
+    try {
+      val out = new CountingOutputStream(new BufferedOutputStream(
+        fs.create(new Path(dir, s"$name.trm"), true)))
+      try {
+        val head = new ByteWriter(256)
+        val body = new ByteWriter(1 << 16)
+        head.putIntBE(TRM_MAGIC4)
+        head.drainTo(out)
+        val fields = trms.flatMap(_.blocks.keys).distinct.sorted
+        val fieldOffsets = new Array[Long](fields.length)
+        fields.iterator.zipWithIndex.foreach { case (f, fi) =>
+          val srcs = live.indices.filter(i => trms(i).blocks.contains(f)).toArray
+          val cs = srcs.map { i =>
+            new DictCursor(trms(i).block(f), frontCoded = trms(i).magic == TRM_MAGIC4,
+              s"$dir/${live(i).name}.trm field $f")
+          }
+          // per source: does each posting carry a positions run? (v4:
+          // the field flag; v3: always, maybe empty)
+          val srcPos = cs.indices.map { k =>
+            cs(k).skipStr()
+            trms(srcs(k)).magic != TRM_MAGIC4 || cs(k).vint() == 1
+          }.toArray
+          val hasPos = cs.indices.exists { k =>
+            if (trms(srcs(k)).magic == TRM_MAGIC4) srcPos(k) else v3HasPositions(cs(k))
+          }
+          cs.foreach(_.startDict())
+          val counts = new Array[Int](cs.length)
+          val coder = new FrontCoder
+          val nTerms = unionDicts(cs) { (tops, m) =>
+            var sum = 0
+            var j = 0
+            while (j < m) { counts(j) = cs(tops(j)).vint(); sum += counts(j); j += 1 }
+            val c0 = cs(tops(0))
+            coder.put(body, c0.term, c0.len)
+            body.putVInt(sum)
+            var last = 0
+            j = 0
+            while (j < m) {
+              val k = tops(j)
+              last = copyPostings(cs(k), counts(j), bases(srcs(k)), last, srcPos(k), hasPos, body)
+              j += 1
+            }
+          }
+          fieldOffsets(fi) = out.count
+          head.putStr(f)
+          head.putVInt(if (hasPos) 1 else 0)
+          head.putVInt(nTerms)
+          head.drainTo(out)
+          body.drainTo(out)
+        }
+        val footerOff = out.count
+        head.putVInt(fields.length)
+        fields.iterator.zipWithIndex.foreach { case (f, fi) =>
+          head.putStr(f)
+          head.putLongBE(fieldOffsets(fi))
+        }
+        head.putLongBE(footerOff)
+        head.putIntBE(TRM_MAGIC4)
+        head.drainTo(out)
+      } finally out.close()
+      trms.map(_.blocks.keySet)
+    } finally trms.foreach(_.close())
+  }
+
+  /** The `.nrm` half of [[mergeSegmentsRaw]]: each source's per-ord
+    * token counts at its doc base (a source without the field
+    * contributes zeros — it has no tokens there). */
+  private def mergeNorms(fs: FileSystem, dir: Path, name: String,
+                         live: IndexedSeq[SegmentMeta], totalDocs: Int): Unit = {
+    val norms = live.map(s => readNorms(fs, dir, s.name))
+    val fields = norms.flatMap(_.keys).distinct.sorted
+    if (fields.nonEmpty) {
+      val os = new BufferedOutputStream(fs.create(new Path(dir, s"$name.nrm"), true))
+      try {
+        val out = new ByteWriter(1 << 16)
+        out.putIntBE(NRM_MAGIC)
+        out.putVInt(fields.length)
+        fields.foreach { f =>
+          out.putStr(f)
+          out.putVInt(totalDocs)
+          live.indices.foreach { i =>
+            val a = norms(i).getOrElse(f, Array.emptyIntArray)
+            require(a.length <= live(i).docs, s"bad .nrm length in $dir/${live(i).name}")
+            var o = 0
+            while (o < live(i).docs) { out.putVInt(if (o < a.length) a(o) else 0); o += 1 }
+            out.drainTo(os)
+          }
+        }
+        out.drainTo(os)
+      } finally os.close()
+    }
+  }
+
+  /** The `.dvd` (single-valued) or `.dvm` (SORTED_SET) half of
+    * [[mergeSegmentsRaw]]. A field merges only when every source that
+    * HOLDS it (postings-wise) carries its column — otherwise the merged
+    * segment omits it and readers fall back to per-query inversion
+    * (never a wrong answer, only the legacy cost). The dictionary union
+    * is in the shared code-point order, so each source's remap is
+    * monotonic and SORTED_SET lists stay ascending. */
+  private def mergeDocValues(fs: FileSystem, dir: Path, name: String,
+                             live: IndexedSeq[SegmentMeta], srcFields: IndexedSeq[Set[String]],
+                             totalDocs: Int, sortedSet: Boolean): Unit = {
+    val ext = if (sortedSet) "dvm" else "dvd"
+    val outMagic = if (sortedSet) DVM_MAGIC2 else DVD_MAGIC2
+    val files = live.map { s =>
+      val p = new Path(dir, s"${s.name}.$ext")
+      if (fs.exists(p)) Some(new BlockFile(fs, p)) else None
+    }
+    try {
+      val fields = files.flatten.flatMap(_.blocks.keys).distinct.filter { f =>
+        live.indices.forall(i => files(i).exists(_.blocks.contains(f)) || !srcFields(i).contains(f))
+      }.sorted
+      if (fields.nonEmpty) {
+        val out = new CountingOutputStream(new BufferedOutputStream(
+          fs.create(new Path(dir, s"$name.$ext"), true)))
+        try {
+          val col = new ByteWriter(1 << 16)
+          val dict = new ByteWriter(1 << 16)
+          col.putIntBE(outMagic)
+          col.drainTo(out)
+          val offsets = new Array[Long](fields.length)
+          fields.iterator.zipWithIndex.foreach { case (f, fi) =>
+            val srcs = live.indices.filter(i => files(i).exists(_.blocks.contains(f))).toArray
+            val cs = srcs.map { i =>
+              val bf = files(i).get
+              require(bf.magic == outMagic || bf.magic == (if (sortedSet) DVM_MAGIC else DVD_MAGIC),
+                s"bad .$ext magic in $dir/${live(i).name}")
+              new DictCursor(bf.block(f), frontCoded = bf.magic == outMagic,
+                s"$dir/${live(i).name}.$ext field $f")
+            }
+            val remaps = cs.map { c => c.skipStr(); new Array[Int](c.startDict()) }
+            val coder = new FrontCoder
+            var next = 0
+            val nTerms = unionDicts(cs) { (tops, m) =>
+              val c0 = cs(tops(0))
+              coder.put(dict, c0.term, c0.len)
+              var j = 0
+              while (j < m) { val k = tops(j); remaps(k)(cs(k).idx) = next; j += 1 }
+              next += 1
+            }
+            offsets(fi) = out.count
+            col.putStr(f)
+            col.putVInt(nTerms)
+            col.drainTo(out)
+            dict.drainTo(out)
+            col.putVInt(totalDocs)
+            var k = 0
+            live.indices.foreach { i =>
+              val docs = live(i).docs
+              if (k < srcs.length && srcs(k) == i) {
+                val c = cs(k)
+                val remap = remaps(k)
+                require(c.vint() == docs, s"bad .$ext doc count in $dir/${live(i).name}")
+                var o = 0
+                while (o < docs) {
+                  if (sortedSet) {
+                    val n = c.vint()
+                    col.putVInt(n)
+                    var src = 0
+                    var prev = 0
+                    var j = 0
+                    while (j < n) {
+                      src += c.vint()
+                      val r = remap(src)
+                      col.putVInt(r - prev)
+                      prev = r
+                      j += 1
+                    }
+                  } else {
+                    val v = c.vint()
+                    col.putVInt(if (v == 0) 0 else remap(v - 1) + 1)
+                  }
+                  o += 1
+                }
+                k += 1
+              } else {
+                // source lacks the field: missing / empty lists
+                var o = 0
+                while (o < docs) { col.putVInt(0); o += 1 }
+              }
+              col.drainTo(out)
+            }
+          }
+          val footerOff = out.count
+          col.putVInt(fields.length)
+          fields.iterator.zipWithIndex.foreach { case (f, fi) =>
+            col.putStr(f)
+            col.putLongBE(offsets(fi))
+          }
+          col.putLongBE(footerOff)
+          col.putIntBE(outMagic)
+          col.drainTo(out)
+        } finally out.close()
+      }
+    } finally files.flatten.foreach(_.close())
+  }
+
+  /** The `.fld` / `.fdx` half of [[mergeSegmentsRaw]]. */
+  private def mergeStored(fs: FileSystem, dir: Path, name: String,
+                          segs: Seq[SegmentMeta], totalDocs: Int): Unit = {
     // one codec across sources (canRawMerge enforced); compressed
     // blocks (v2 deflate / v4 LZ4) and v1 records are all
     // self-delimiting, so any single codec concatenates — blocks
@@ -1234,191 +1720,6 @@ object SegmentIndex {
         i += 1
       }
     } finally fdx.close()
-    // .trm: merge dictionaries, ordinals shifted by doc base — source
-    // order is ascending doc base, so concatenated posting lists stay
-    // ascending and the gap encoding applies unchanged
-    val merged = mutable.SortedMap.empty[String, mutable.SortedMap[String, mutable.ArrayBuffer[(Int, Array[Int])]]]
-    val srcFields = mutable.ArrayBuffer.empty[Set[String]] // per source, for dvd eligibility
-    var docBase = 0
-    segs.foreach { s =>
-      if (s.docs > 0) {
-        val posts = readPostingsPositions(fs, dir, s.name)
-        srcFields += posts.keySet
-        posts.foreach { case (f, terms) =>
-          val byField = merged.getOrElseUpdate(f, mutable.SortedMap.empty)
-          terms.foreach { case (t, fieldPosts) =>
-            val acc = byField.getOrElseUpdate(t, mutable.ArrayBuffer.empty)
-            fieldPosts.foreach { case (o, ps) => acc += ((o + docBase, ps)) }
-          }
-        }
-      } else srcFields += Set.empty[String]
-      docBase += s.docs
-    }
-    val trmCount = new CountingOutputStream(new BufferedOutputStream(
-      fs.create(new Path(dir, s"$name.trm"), true)))
-    val trm = new DataOutputStream(trmCount)
-    try {
-      trm.writeInt(TRM_MAGIC4)
-      val fields = merged.keys.toSeq
-      val fieldOffsets = new Array[Long](fields.length)
-      fields.iterator.zipWithIndex.foreach { case (f, fi) =>
-        fieldOffsets(fi) = trmCount.count
-        writeStr(trm, f)
-        val terms = merged(f)
-        // v4 per-field positions flag: present iff any source posting
-        // carried positions (consistent per field — positions exist
-        // exactly for analyzed fields)
-        val hasPos = terms.valuesIterator.exists(_.exists(_._2.nonEmpty))
-        writeVInt(trm, if (hasPos) 1 else 0)
-        writeVInt(trm, terms.size)
-        var prevTerm = ""
-        terms.foreach { case (t, posts) =>
-          val pl = sharedPrefixLen(prevTerm, t)
-          writeVInt(trm, pl)
-          writeStr(trm, if (pl == 0) t else t.substring(pl))
-          prevTerm = t
-          writeVInt(trm, posts.length)
-          var prev = 0
-          posts.foreach { case (o, ps) =>
-            writeVInt(trm, o - prev); prev = o
-            if (hasPos) {
-              writeVInt(trm, ps.length)
-              var pprev = 0
-              ps.foreach { p => writeVInt(trm, p - pprev); pprev = p }
-            }
-          }
-        }
-      }
-      val footerOff = trmCount.count
-      writeVInt(trm, fields.length)
-      fields.iterator.zipWithIndex.foreach { case (f, fi) =>
-        writeStr(trm, f)
-        trm.writeLong(fieldOffsets(fi))
-      }
-      trm.writeLong(footerOff)
-      trm.writeInt(TRM_MAGIC4)
-    } finally trm.close()
-    // .nrm: concatenate per-field token-count arrays at each doc base
-    // (a source without the field contributes zeros — correct, it has
-    // no tokens there)
-    val normFields = mutable.SortedSet.empty[String]
-    segs.foreach(s => if (s.docs > 0)
-      normFields ++= readNorms(fs, dir, s.name).keys)
-    if (normFields.nonEmpty) {
-      val arrs = normFields.iterator.map(_ -> new Array[Int](totalDocs)).toMap
-      var base = 0
-      segs.foreach { s =>
-        if (s.docs > 0) {
-          readNorms(fs, dir, s.name).foreach { case (f, a) =>
-            System.arraycopy(a, 0, arrs(f), base, a.length)
-          }
-        }
-        base += s.docs
-      }
-      val nrm = new DataOutputStream(new BufferedOutputStream(
-        fs.create(new Path(dir, s"$name.nrm"), true)))
-      try {
-        nrm.writeInt(NRM_MAGIC)
-        writeVInt(nrm, normFields.size)
-        normFields.foreach { f =>
-          writeStr(nrm, f)
-          val arr = arrs(f)
-          writeVInt(nrm, arr.length)
-          arr.foreach(writeVInt(nrm, _))
-        }
-      } finally nrm.close()
-    }
-    // persisted docValues: forward columns concatenate at each doc
-    // base with a term-dict union remap. A field merges only when
-    // every source that HOLDS it (postings-wise) carries its dvd
-    // column — otherwise the merged segment omits it and readers fall
-    // back to per-query inversion (never a wrong answer, only the
-    // legacy cost).
-    val dvPerSrc: Seq[Map[String, (Array[String], Array[Int])]] =
-      segs.map(s => if (s.docs == 0) Map.empty[String, (Array[String], Array[Int])]
-                    else readDocValues(fs, dir, s.name, None))
-    val dvFields = dvPerSrc.iterator.flatMap(_.keys).toSet.filter { f =>
-      segs.indices.forall { i =>
-        segs(i).docs == 0 || dvPerSrc(i).contains(f) || !srcFields(i).contains(f)
-      }
-    }.toSeq.sorted
-    if (dvFields.nonEmpty) {
-      val cols = dvFields.map { f =>
-        val vals = new Array[String](totalDocs)
-        var base = 0
-        segs.iterator.zipWithIndex.foreach { case (s, i) =>
-          dvPerSrc(i).get(f).foreach { case (terms, idx) =>
-            var o = 0
-            while (o < idx.length) {
-              if (idx(o) >= 0) vals(base + o) = terms(idx(o))
-              o += 1
-            }
-          }
-          base += s.docs
-        }
-        f -> vals
-      }
-      writeDocValues(fs, dir, name, cols, totalDocs)
-    }
-    // SORTED_SET docValues: per-doc ord lists concatenate at each doc
-    // base with a dict-union remap (CP order is total and shared, so
-    // the remap is monotonic and per-doc lists stay ascending). Same
-    // eligibility rule as .dvd: every source HOLDING the field must
-    // carry the column, else the merged segment omits it (readers
-    // fall back to postings — never wrong, only the legacy cost).
-    val dvmPerSrc: Seq[Map[String, (Array[String], Array[Int], Array[Int])]] =
-      segs.map(s => if (s.docs == 0) Map.empty[String, (Array[String], Array[Int], Array[Int])]
-                    else readSortedSet(fs, dir, s.name, None))
-    val dvmFields = dvmPerSrc.iterator.flatMap(_.keys).toSet.filter { f =>
-      segs.indices.forall { i =>
-        segs(i).docs == 0 || dvmPerSrc(i).contains(f) || !srcFields(i).contains(f)
-      }
-    }.toSeq.sorted
-    if (dvmFields.nonEmpty) {
-      val cols = dvmFields.map { f =>
-        val dictSet = new java.util.TreeSet[String](CpOrdering)
-        dvmPerSrc.foreach(_.get(f).foreach { case (terms, _, _) =>
-          terms.foreach(dictSet.add)
-        })
-        val terms = dictSet.toArray(new Array[String](dictSet.size))
-        val tIdx = new java.util.HashMap[String, Integer](terms.length * 2)
-        var ti = 0
-        while (ti < terms.length) { tIdx.put(terms(ti), ti); ti += 1 }
-        val offs = new Array[Int](totalDocs + 1)
-        var nOrds = 0
-        dvmPerSrc.foreach(_.get(f).foreach { case (_, csr, _) => nOrds += csr(csr.length - 1) })
-        val lists = new Array[Int](nOrds)
-        var base = 0
-        var w = 0
-        segs.iterator.zipWithIndex.foreach { case (s, i) =>
-          dvmPerSrc(i).get(f) match {
-            case Some((srcTerms, csr, srcLists)) =>
-              val remap = srcTerms.map(t => tIdx.get(t).intValue())
-              var o = 0
-              while (o < s.docs) {
-                var j = csr(o)
-                while (j < csr(o + 1)) { lists(w) = remap(srcLists(j)); w += 1; j += 1 }
-                offs(base + o + 1) = w
-                o += 1
-              }
-            case None =>
-              // source lacks the field entirely: empty lists
-              var o = 0
-              while (o < s.docs) { offs(base + o + 1) = w; o += 1 }
-          }
-          base += s.docs
-        }
-        (f, terms, offs, lists)
-      }
-      writeSortedSetCols(fs, dir, name, cols, totalDocs)
-    }
-    // zone-map stats: per-field min/max combined across sources
-    val stats = segs.flatMap(_.stats.toSeq)
-      .groupBy(_._1)
-      .map { case (f, vs) =>
-        f -> (vs.map(_._2._1).min(CpOrdering), vs.map(_._2._2).max(CpOrdering))
-      }
-    SegmentMeta(name, totalDocs, stats = stats)
   }
 
   /** Levenshtein distance ≤ maxEdits, banded DP with length prefilter
@@ -2139,11 +2440,34 @@ object SegmentIndex {
       }
     }
 
+    /** Merges `segs` into one new segment `name`. Tombstone-free
+      * sources take the POSTINGS-LEVEL merge ([[mergeSegmentsRaw]]:
+      * byte-concatenated stored fields, streaming k-way dictionary
+      * merge — no doc is re-parsed or re-analyzed). Otherwise, or when
+      * a source dictionary is out of code-point order, the live docs
+      * are rewritten: surviving ordinals shift when tombstones go, so
+      * the rewrite also reclaims deletes. */
+    private def mergeInto(name: String, segs: Seq[SegmentMeta], storedMagic: Int): SegmentMeta =
+      (if (canRawMerge(fs, dir, segs, analyzed)) mergeSegmentsRaw(fs, dir, name, segs) else None)
+        .getOrElse {
+          val live = segs.flatMap { s =>
+            val dels = readDels(fs, dir, s)
+            readStoredDocs(fs, dir, s.name).zipWithIndex.collect {
+              case (doc, o) if !dels.contains(o) => doc
+            }
+          }.toIndexedSeq
+          writeSegment(fs, dir, name, live, analyzed,
+            compress = compressStored, storedMagic = storedMagic)
+        }
+
     /**
      * forceMerge (BatchWriter.java:203-218 / --max-segments analog):
      * rewrite to at most `maxSegments` segments (1 = the reference's
-     * default query-latency trade) and publish. Old segment files are
-     * deleted after the new commit lands.
+     * default query-latency trade) and publish. Clean sources stream
+     * through [[mergeSegmentsRaw]] (k-way dictionary merge, stored
+     * bytes concatenated; heap O(docs) in primitive arrays plus one
+     * field block); sources with tombstones are rewritten doc by doc.
+     * Old segment files are deleted after the new commit lands.
      */
     def forceMerge(maxSegments: Int = 1): CommitPoint = {
       require(maxSegments >= 1)
@@ -2153,24 +2477,9 @@ object SegmentIndex {
       else {
         val old = commitPoint.segments
         val name = s"_${commitPoint.counter}"
-        val meta =
-          if (canRawMerge(fs, dir, old, analyzed))
-            // tombstone-free sources take the POSTINGS-LEVEL merge:
-            // byte-concatenated stored fields, ord-shifted dictionary
-            // merge — no doc is re-parsed or re-analyzed
-            mergeSegmentsRaw(fs, dir, name, old)
-          else {
-            // live docs only — forceMerge is also the tombstone-reclaim
-            // path (Lucene's expungeDeletes folds into forceMerge); doc
-            // rewrite is required here because surviving ordinals shift
-            val all = old.flatMap { s =>
-              val dels = readDels(fs, dir, s)
-              readStoredDocs(fs, dir, s.name).zipWithIndex.collect {
-                case (doc, ord) if !dels.contains(ord) => doc
-              }
-            }.toIndexedSeq
-            writeSegment(fs, dir, name, all, analyzed, compress = compressStored)
-          }
+        // live docs only — forceMerge is also the tombstone-reclaim
+        // path (Lucene's expungeDeletes folds into forceMerge)
+        val meta = mergeInto(name, old, DefaultStoredMagic)
         commitPoint = CommitPoint(commitPoint.gen + 1, commitPoint.counter + 1, Seq(meta))
         writeCommit(fs, dir, commitPoint, staged)
         // pre-merge segment files live until they leave the retention
@@ -2186,8 +2495,9 @@ object SegmentIndex {
      * size tier holds more than `segmentsPerTier` segments, fold the
      * smallest `maxMergeAtOnce` of that tier into one segment —
      * through [[mergeSegmentsRaw]] (byte-concatenated stored fields,
-     * ord-shifted dictionary merge; no doc re-parsed) when every
-     * victim qualifies, else the doc-rewrite path (which doubles as
+     * streaming k-way dictionary merge with ord-shifted postings; no
+     * doc re-parsed, no per-posting object) when every victim
+     * qualifies, else the doc-rewrite path (which doubles as
      * incremental tombstone reclaim: victims' deleted ordinals vanish
      * in the rewrite). Each fold publishes its own commit generation,
      * so readers always see a consistent snapshot and a crash
@@ -2210,19 +2520,7 @@ object SegmentIndex {
           .foreach { case (_, tierSegs) =>
             val victims = tierSegs.sortBy(_.liveDocs).take(policy.maxMergeAtOnce)
             val name = s"_${commitPoint.counter}"
-            val meta =
-              if (canRawMerge(fs, dir, victims, analyzed))
-                mergeSegmentsRaw(fs, dir, name, victims)
-              else {
-                val live = victims.flatMap { s =>
-                  val dels = readDels(fs, dir, s)
-                  readStoredDocs(fs, dir, s.name).zipWithIndex.collect {
-                    case (doc, o) if !dels.contains(o) => doc
-                  }
-                }.toIndexedSeq
-                writeSegment(fs, dir, name, live, analyzed,
-                  compress = compressStored, storedMagic = storedCodecMagic)
-              }
+            val meta = mergeInto(name, victims, storedCodecMagic)
             val victimNames = victims.map(_.name).toSet
             commitPoint = CommitPoint(commitPoint.gen + 1, commitPoint.counter + 1,
               commitPoint.segments.filterNot(s => victimNames(s.name)) :+ meta)

@@ -120,4 +120,86 @@ class RawMergeSpec extends AnyFunSuite {
     assert(r.numDocs === 5)
     assert(r.numSegments === 1)
   }
+
+  private def trmBytes(dir: Path, seg: String): Array[Byte] =
+    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir.toString, s"$seg.trm"))
+
+  // U+1D11E (a surrogate pair) sorts before U+FF21 in UTF-16 order and
+  // after it in code-point order, the writer's order
+  private val clef = "\uD834\uDD1Ex"
+  private val wideA = "\uFF21x"
+
+  test("raw-merged .trm is in code-point order, byte-identical to one session") {
+    val a: Seq[SegmentIndex.Doc] = Seq(
+      Seq("id" -> clef, "text" -> s"$clef clef"),
+      Seq("id" -> "b", "text" -> "plain words"))
+    val b: Seq[SegmentIndex.Doc] = Seq(
+      Seq("id" -> wideA, "text" -> s"$wideA wide"),
+      Seq("id" -> "c", "text" -> "more plain words"))
+    val merged = tmp(); val fresh = tmp()
+    val fs = merged.getFileSystem(conf)
+    val w1 = new SegmentIndex.Writer(fs, merged, analyzed)
+    a.foreach(w1.addDocument); w1.commit()
+    val w2 = new SegmentIndex.Writer(fs, merged, analyzed)
+    b.foreach(w2.addDocument); w2.commit()
+    val seg = w2.forceMerge(1).segments.head.name
+    val w3 = new SegmentIndex.Writer(fs, fresh, analyzed)
+    (a ++ b).foreach(w3.addDocument)
+    val freshSeg = w3.commit().segments.head.name
+    assert(trmBytes(merged, seg).sameElements(trmBytes(fresh, freshSeg)),
+      "merged .trm differs from the single-session .trm")
+  }
+
+  test("a source dictionary out of code-point order takes the doc rewrite") {
+    val dir = tmp(); val fresh = tmp()
+    val fs = dir.getFileSystem(conf)
+    val docsA: Seq[SegmentIndex.Doc] = Seq(Seq("id" -> clef), Seq("id" -> wideA))
+    val docsB: Seq[SegmentIndex.Doc] = Seq(Seq("id" -> "z"))
+    val w1 = new SegmentIndex.Writer(fs, dir, Set.empty)
+    docsA.foreach(w1.addDocument)
+    val seg0 = w1.commit().segments.head.name
+    val w2 = new SegmentIndex.Writer(fs, dir, Set.empty)
+    docsB.foreach(w2.addDocument); w2.commit()
+    // replace the first segment's .trm with a v4 block in UTF-16 order
+    // (clef, ord 0, before wideA, ord 1), as an older merge wrote it
+    val TRM4 = SegmentIndex.TRM_MAGIC4
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bos)
+    def vint(v0: Int): Unit = {
+      var v = v0
+      while ((v & ~0x7F) != 0) { out.writeByte((v & 0x7F) | 0x80); v >>>= 7 }
+      out.writeByte(v)
+    }
+    def str(s: String): Unit = {
+      val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      vint(b.length); out.write(b)
+    }
+    out.writeInt(TRM4)
+    val blockOff = bos.size().toLong
+    str("id"); vint(0); vint(2)
+    vint(0); str(clef); vint(1); vint(0)  // ord 0
+    vint(0); str(wideA); vint(1); vint(1) // ord 1
+    val footerOff = bos.size().toLong
+    vint(1); str("id"); out.writeLong(blockOff)
+    out.writeLong(footerOff); out.writeInt(TRM4)
+    val os = fs.create(new Path(dir, s"$seg0.trm"), true)
+    try os.write(bos.toByteArray) finally os.close()
+    val segs = SegmentIndex.latestCommit(fs, dir).get.segments
+    assert(SegmentIndex.canRawMerge(fs, dir, segs, Set.empty))
+    val ids = Seq(clef, wideA, "z")
+    def answers() = {
+      val r = new SegmentIndex.Reader(fs, dir)
+      ids.map(t => t -> r.termDocs("id", t).map(_.toMap))
+    }
+    val before = answers()
+    assert(before.forall(_._2.size == 1))
+    val seg = w2.forceMerge(1).segments.head.name
+    assert(answers() === before)
+    // the doc rewrite wrote the merged segment: its dictionary equals
+    // one fresh session's over the same docs, in code-point order
+    val w3 = new SegmentIndex.Writer(fs, fresh, Set.empty)
+    (docsA ++ docsB).foreach(w3.addDocument)
+    val freshSeg = w3.commit().segments.head.name
+    assert(trmBytes(dir, seg).sameElements(trmBytes(fresh, freshSeg)))
+  }
 }
